@@ -191,17 +191,11 @@ object SimilarityOps {
     cents
   }
 
-  /** IVF cell assignment against the Lloyd-refined centroids
-    * ([[ivfCentroidsNorm]]). Ties break to the smaller centroid. */
-  def ivfAssign(embeddings: DataFrame, nCells: Int): DataFrame =
-    ivfAssignNorm(normalizedCorpus(embeddings), nCells)
-
-  def ivfAssignNorm(corpus: DataFrame, nCells: Int): DataFrame =
-    assignTo(corpus, ivfCentroidsNorm(corpus, nCells))
-
-  /** Same, against an externally staged centroid table — the production
-    * shape: the coarse quantizer is trained once and shared by every
-    * assignment/search job (queries.Staged.ivfCentroids). */
+  /** IVF cell assignment against an externally staged centroid table
+    * (Lloyd-refined, [[ivfCentroidsNorm]]) — the production shape: the
+    * coarse quantizer is trained once and shared by every
+    * assignment/search job (queries.Staged.ivfCentroids). Ties break to
+    * the smaller centroid. */
   def ivfAssignNormWith(corpus: DataFrame, centroids: DataFrame): DataFrame =
     assignTo(corpus, centroids)
 
@@ -217,17 +211,6 @@ object SimilarityOps {
     corpus.select(col("vec_id"), col("n_emb"),
       explode(nearestCellsCol(centroids, nprobe, col("n_emb"))).as("cell"))
   }
-
-  /** IVF top-k: probe the `nprobe` nearest cells per query, rank only
-    * within probed cells. Approximate by construction; the oracle
-    * implements the identical algorithm, so results still hash-match. */
-  def ivfTopK(embeddings: DataFrame, queryIds: Seq[Long], k: Int,
-              nCells: Int, nprobe: Int): DataFrame =
-    ivfTopKNorm(normalizedCorpus(embeddings), queryIds, k, nCells, nprobe)
-
-  def ivfTopKNorm(corpus: DataFrame, queryIds: Seq[Long], k: Int,
-                  nCells: Int, nprobe: Int): DataFrame =
-    ivfTopKNormWith(corpus, ivfCentroidsNorm(corpus, nCells), queryIds, k, nprobe)
 
   /** The IVF probe's CANDIDATE set before the top-k cut:
     * (query_id, neighbor_id, cosine_sim) for every corpus vector in a
@@ -268,6 +251,9 @@ object SimilarityOps {
         dotCosine(col("q_emb"), col("n_emb")).as("cosine_sim"))
   }
 
+  /** IVF top-k: probe the `nprobe` nearest cells per query, rank only
+    * within probed cells. Approximate by construction; the oracle
+    * implements the identical algorithm, so results still hash-match. */
   def ivfTopKNormWith(corpus: DataFrame, centroids: DataFrame,
                       queryIds: Seq[Long], k: Int, nprobe: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
@@ -710,11 +696,8 @@ object SimilarityOps {
   /** Multi-probe IVF cell assignment: each vector lands in its `nprobe`
     * nearest cells, so a pair sitting on a cell boundary still collides
     * in at least one shared cell (the standard recall repair for
-    * cell-blocked pairing; nprobe=1 degenerates to [[ivfAssignNorm]]).
+    * cell-blocked pairing; nprobe=1 degenerates to single assignment).
     * Output (vec_id, cell) has nprobe rows per vector. */
-  def ivfMultiAssignNorm(corpus: DataFrame, nCells: Int, nprobe: Int): DataFrame =
-    ivfMultiAssignNormWith(corpus, ivfCentroidsNorm(corpus, nCells), nprobe)
-
   def ivfMultiAssignNormWith(corpus: DataFrame, centroids: DataFrame,
                              nprobe: Int): DataFrame = {
     graft.functions.GraftFunctions.register(corpus.sparkSession)
@@ -952,17 +935,6 @@ object SimilarityOps {
           (acc, j) => acc + element_at(col("dm"), j.cast("int"))), 6)
           .as("recon_err"))
 
-  /** ADC top-k over the PQ codes: per-query lookup table
-    * LUT[j·ksub + code] = round(dot(q_j, cw), 6) built against the
-    * codebook (m·ksub rows per query — broadcast), then ONE pass over
-    * the code table scoring each vector as the ascending-j fold of m
-    * map lookups. The raw corpus is never touched after encoding —
-    * the scan moves codes (bytes/vector), not vectors. */
-  def pqAdcTopK(corpus: DataFrame, codebook: DataFrame, dim: Int, m: Int,
-                ksub: Int, queryIds: Seq[Long], k: Int): DataFrame =
-    pqAdcTopKCodes(pqCodes(corpus, codebook, dim, m), corpus, codebook,
-      dim, m, ksub, queryIds, k)
-
   /** Per-query ADC lookup table (query_id, lut: map<int,double>) with
     * LUT[j·ksub + code] = round(dot(q_j, cw), 6) — m·ksub entries per
     * query, broadcast scale. */
@@ -991,7 +963,13 @@ object SimilarityOps {
         (j * ksub + element_at(col("codes"), j.cast("int") + 1))
           .cast("int"))), 6)
 
-  /** Same, over an already-encoded (staged) code table. */
+  /** ADC top-k over an already-encoded (staged) PQ code table:
+    * per-query lookup table LUT[j·ksub + code] = round(dot(q_j, cw), 6)
+    * built against the codebook (m·ksub rows per query — broadcast),
+    * then ONE pass over the code table scoring each vector as the
+    * ascending-j fold of m map lookups. The raw corpus is never touched
+    * after encoding — the scan moves codes (bytes/vector), not
+    * vectors. */
   def pqAdcTopKCodes(codes: DataFrame, corpus: DataFrame, codebook: DataFrame,
                      dim: Int, m: Int, ksub: Int,
                      queryIds: Seq[Long], k: Int): DataFrame = {

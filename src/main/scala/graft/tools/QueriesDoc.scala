@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 
 /** QUERIES.md generator — the registry index that keeps reviews (and
   * users) oriented now that the registry spans a dozen files: one row
-  * per registered query with its family, defining file:line, oracle
+  * per registered query with its family, defining file, oracle
   * kind, and the latest bench median from BENCH_FULL.json.
   *
   * Everything derives from the registry + the source tree + the
@@ -17,18 +17,15 @@ import scala.jdk.CollectionConverters._
   */
 object QueriesDoc {
 
-  /** (file, line) of each `Q("name"` definition under the queries dir. */
+  /** The file of each `Q("name"` definition under the queries dir —
+    * no line number, so the doc does not go stale when lines shift. */
   def definitionSites(root: String = "src/main/scala/graft/queries")
       : Map[String, String] = {
     val defs = scala.collection.mutable.Map.empty[String, String]
     Files.list(Paths.get(root)).iterator().asScala
       .filter(_.toString.endsWith(".scala")).foreach { p =>
-        Files.readAllLines(p).asScala.zipWithIndex.foreach {
-          case (line, i) =>
-            val m = """Q\("([a-z0-9_]+)"""".r.findFirstMatchIn(line)
-            m.foreach(mm =>
-              defs(mm.group(1)) = s"${p.getFileName}:${i + 1}")
-        }
+        """Q\("([a-z0-9_]+)"""".r.findAllMatchIn(Files.readString(p))
+          .foreach(m => defs(m.group(1)) = p.getFileName.toString)
       }
     defs.toMap
   }

@@ -3,9 +3,11 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** QUERIES.md ↔ registry sync: the checked-in index must list exactly
-  * the registered queries (per family, in order) with resolvable
-  * definition sites. Bench medians are timestamped measurement data and
-  * deliberately NOT pinned — only the structural rows are.
+  * the registered queries (per family, in order) with the file that
+  * defines each. Sites carry no line number, so a line shift alone
+  * never turns this spec red. Bench medians are timestamped
+  * measurement data and deliberately NOT pinned — only the structural
+  * rows are.
   */
 class QueriesDocSpec extends AnyFunSuite {
 
@@ -13,7 +15,7 @@ class QueriesDocSpec extends AnyFunSuite {
     java.nio.file.Files.readString(java.nio.file.Paths.get("QUERIES.md"))
 
   private lazy val docRows: Seq[(String, String, String)] =
-    """\| ([a-z0-9_]+) \| (SQL hash|rows-only) \| ([A-Za-z]+\.scala:\d+)"""
+    """\| ([a-z0-9_]+) \| (SQL hash|rows-only) \| ([A-Za-z]+\.scala) \|"""
       .r.findAllMatchIn(doc)
       .map(m => (m.group(1), m.group(2), m.group(3))).toSeq
 
@@ -48,14 +50,14 @@ class QueriesDocSpec extends AnyFunSuite {
     }
   }
 
-  test("definition sites resolve to a line that defines the query") {
-    docRows.foreach { case (n, _, site) =>
-      val Array(file, lineS) = site.split(":")
+  test("definition sites name the one file that defines the query") {
+    docRows.foreach { case (n, _, file) =>
       val p = java.nio.file.Paths.get(s"src/main/scala/graft/queries/$file")
       assert(java.nio.file.Files.exists(p), s"$n: $file missing")
-      val line = java.nio.file.Files.readAllLines(p).get(lineS.toInt - 1)
-      assert(line.contains(s"""Q("$n""""),
-        s"$n: $site no longer defines it — regenerate")
+      val defs = scala.util.matching.Regex.quote(s"""Q("$n"""").r
+        .findAllMatchIn(java.nio.file.Files.readString(p)).size
+      assert(defs == 1,
+        s"$n: $file defines it $defs times, want exactly 1 — regenerate")
     }
   }
 }

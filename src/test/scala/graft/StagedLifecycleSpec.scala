@@ -1,6 +1,7 @@
 package graft
 
 import graft.queries.Staged
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Staged-block lifecycle: a session's staged DataFrames must be
@@ -58,7 +59,7 @@ class StagedLifecycleSpec extends AnyFunSuite with SparkTestBase {
     // every retrieval-family query must create NO new retrieval keys.
     Staged.clearSession(spark)
     Staged.prewarm(spark, sf)
-    val warmed = Staged.retrievalKeys(spark, sf)
+    val warmed = Staged.keys(spark, sf, "retrieval")
     assert(warmed.nonEmpty, "prewarm should stage retrieval artifacts")
     // every family that stages retrieval-keyed artifacts (round 14
     // added the multimodal phash and join-size-CMS families)
@@ -67,10 +68,21 @@ class StagedLifecycleSpec extends AnyFunSuite with SparkTestBase {
       graft.queries.AnalyticsQueries.all ++
       graft.queries.SimilarityQueries.all).foreach { q =>
       q.fn(spark, sf).write.format("noop").mode("overwrite").save()
-      val now = Staged.retrievalKeys(spark, sf)
+      val now = Staged.keys(spark, sf, "retrieval")
       assert((now -- warmed).isEmpty,
         s"query ${q.name} staged keys prewarm missed: ${now -- warmed}")
     }
+    // clearSession releases everything prewarm staged: every frame any
+    // entry holds (alone or inside a tuple) is uncached, and no key of
+    // the session survives
+    val staged = Staged.frames(spark, sf)
+    assert(staged.nonEmpty, "prewarm should stage DataFrames")
+    staged.foreach(df => assert(df.storageLevel != StorageLevel.NONE,
+      s"staged frame not cached: ${df.queryExecution.analyzed.nodeName}"))
     Staged.clearSession(spark)
+    staged.foreach(df => assert(df.storageLevel == StorageLevel.NONE,
+      "clearSession left a staged frame cached"))
+    assert(Staged.keys(spark, sf).isEmpty,
+      s"keys left after clearSession: ${Staged.keys(spark, sf)}")
   }
 }
