@@ -202,6 +202,7 @@ object PipelineQueries {
     videoPhash(s, dir, r2 = true).count()
     audioFp(s, dir).count()
     audioFp(s, dir, r1 = true).count()
+    Staged.fragmentedTicks(s, dir)
     ()
   }
 

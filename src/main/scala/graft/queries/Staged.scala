@@ -93,14 +93,14 @@ object Staged {
   }
 
   /** The keys, `name(params)`, of the artifacts built for (session,
-    * dir), or of one artifact name only — StagedLifecycleSpec's
-    * prewarm-coverage probe (a staged key that only appears when a
-    * QUERY runs means prewarm missed it and the bench bills that build
-    * to the first rep, as typo_retrieval_eval's `weak` arm once did). */
-  def keys(s: SparkSession, dir: String, artifact: String = ""): Set[String] =
+    * dir) — StagedLifecycleSpec's prewarm-coverage probe (a staged key
+    * that only appears when a QUERY runs means prewarm missed it and
+    * the bench bills that build to the first rep, as
+    * typo_retrieval_eval's `weak` arm once did). */
+  def keys(s: SparkSession, dir: String): Set[String] =
     registry.iterator.collect {
-      case ((ks, kd, name, params), slot) if ks == s && kd == dir &&
-          (artifact.isEmpty || name == artifact) && slot.value.isDefined =>
+      case ((ks, kd, name, params), slot)
+          if ks == s && kd == dir && slot.value.isDefined =>
         s"$name($params)"
     }.toSet
 

@@ -10,8 +10,9 @@ import java.nio.file.{Files, Paths}
   *   sbt "runMain graft.tools.PlanDump plans/r15 before bm25_capped_eval ..."
   *
   * args(0) = output dir, args(1) = tag (before/after), rest = query
-  * names. Runs under the driver's bench conditions (local[32], 32
-  * shuffle partitions) so Exchange counts match what Bench executes.
+  * names. Runs under Bench's conditions (local[SPARK_GRAFT_CPUS] with
+  * as many shuffle partitions, default 4) so Exchange counts match what
+  * Bench executes.
   * Queries with construction-time side effects (streaming runs,
   * pipeline writes) dump the plan of their final read-back frame —
   * that is what their registered fn returns. */
@@ -21,8 +22,9 @@ object PlanDump {
     val outDir = args(0)
     val tag = args(1)
     val names = args.drop(2)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * appear in BASELINE.md — a decade row, an adjudication note, or a
   * family measurement section. A name this lint reports was added
   * without the scale measurement the repo's convention requires; add
-  * the BenchOne ×10 row (and the adjudication if any term is
-  * super-linear) rather than whitelisting.
+  * the ×10 row (timed with `SPARK_GRAFT_BENCH_ONLY=<name> graft.Bench`,
+  * plus the adjudication if any term is super-linear) rather than
+  * whitelisting.
   */
 class BaselineCoverageSpec extends AnyFunSuite {
 
@@ -28,7 +29,8 @@ class BaselineCoverageSpec extends AnyFunSuite {
     }
     assert(missing.isEmpty,
       s"queries with no BASELINE.md measurement row: " +
-        s"${missing.mkString(", ")} — run tools.BenchOne on sf0.1 and " +
-        "the ×10 fixture and add the decade rows")
+        s"${missing.mkString(", ")} — run graft.Bench with " +
+        "SPARK_GRAFT_BENCH_ONLY on sf0.1 and the ×10 fixture and add the " +
+        "decade rows")
   }
 }

@@ -7,11 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** LIVE plan-quality assertions: lock in the physical properties the
   * 100 TB design depends on by compiling the actual current plans, so a
   * refactor that silently adds a shuffle or loses a broadcast/pushdown
-  * fails CI immediately — not only after someone re-runs ExplainAudit.
-  * Complements [[PlanQualitySpec]], which lints the checked-in PLANS.md
-  * artifact registry-wide (some registry entries execute side work on
-  * construction, so the artifact grep is the only way to cover ALL of
-  * them; this spec covers the critical shapes live).
+  * fails CI immediately. Complements the registry-wide [[PlanLint]]
+  * checks QueriesSmokeSpec runs on every query's plan: this spec pins
+  * the critical shapes of chosen plans, including the OHLC-bars and
+  * reconcile joins of the two queries outside that pass.
   */
 class LivePlanSpec extends AnyFunSuite with SparkTestBase {
 
@@ -32,11 +31,10 @@ class LivePlanSpec extends AnyFunSuite with SparkTestBase {
     // clearCache leaves the memos returning now-uncached frames and
     // every later suite silently recomputes staged builds per action.
     graft.queries.Staged.clearSession(spark)
-    // ...and the catalog cache too: the MV family caches its hourly
-    // bars OUTSIDE the Staged memos, and a prior suite in this JVM
-    // (QueriesSmokeSpec runs the whole registry) leaves that
-    // InMemoryRelation to substitute into the plan under test, whose
-    // printed AQE initial+final sections double-count the exchange.
+    // ...and the catalog cache too: a frame cached outside the Staged
+    // registry by a prior suite in this JVM would substitute its
+    // InMemoryRelation into the plan under test, whose printed AQE
+    // initial+final sections double-count the exchange.
     // Order matters: memos are dropped FIRST, so nothing keeps
     // returning silently-uncached frames afterwards.
     spark.catalog.clearCache()
@@ -124,8 +122,8 @@ class LivePlanSpec extends AnyFunSuite with SparkTestBase {
     // filter → project → partial-agg pipelines fused. A custom
     // expression or operator change that silently drops one of these
     // plans out of codegen is a 2-5× regression at 100 TB before any
-    // logic bug shows. (Static PLANS.md can't carry this check: AQE
-    // assigns codegen ids only at execution — so it lives here, live.)
+    // logic bug shows. (An unexecuted plan can't carry this check: AQE
+    // assigns codegen ids only at execution — so it executes here.)
     Seq("q1_pricing_summary", "ohlc_daily", "revenue_by_nation",
       "token_count", "order_stats").foreach { n =>
       val df = SparkEntry.queries(n)(spark, sf)

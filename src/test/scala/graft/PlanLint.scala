@@ -1,33 +1,40 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
-/** Registry-wide lint for scale-killer join shapes, over the PLANS.md
-  * artifact (regenerated per round by graft.tools.ExplainAudit;
-  * PlansArtifactSpec proves it covers every non-skipped query).
+/** The registry-wide plan lints, run by [[QueriesSmokeSpec]] on the
+  * live formatted plan of every query its per-query pass constructs.
   *
-  * A CartesianProduct or BroadcastNestedLoopJoin is the plan Spark falls
-  * back to when a join has no usable equality key. On two corpus-scale
-  * sides that is O(n·m) — the one guaranteed non-survivor at 100× — so
-  * every occurrence must be on the explicit whitelist below, where each
+  * Scale-killer join shapes: a CartesianProduct or
+  * BroadcastNestedLoopJoin is the plan Spark falls back to when a join
+  * has no usable equality key. On two corpus-scale sides that is
+  * O(n·m) — the one guaranteed non-survivor at 100× — so every
+  * occurrence must be on the explicit whitelist below, where each
   * entry records why its non-equi join is bounded: a broadcast side of
   * CONSTANT size (a 1-row scalar, a 16-row centroid table, a 10-row
   * query set) costs one linear pass, not a quadratic pair explosion.
-  * A new query that picks up a nested-loop join fails here until its
-  * bound is argued and listed.
+  * A new query that picks up a nested-loop join fails the lint until
+  * its bound is argued and listed; an entry whose query no longer
+  * plans a nested-loop join must be dropped, so it cannot silently
+  * cover a later regression in that query.
+  *
+  * Quadratic window frames: a frame whose upper bound is UNBOUNDED
+  * FOLLOWING but whose lower bound is anything other than UNBOUNDED
+  * PRECEDING (UnboundedFollowingWindowFunctionFrame) re-scans the
+  * partition tail for every row — the forward as-of's first
+  * implementation used it and measured 132 s vs 1.4 s for the
+  * running-frame mirror at sf0.1. Running frames and whole-partition
+  * (both-unbounded) frames are O(n) and allowed. FormattedMode spells
+  * frames as `specifiedwindowframe(<type>, <lower>, <upper>)`.
   */
-class PlanQualitySpec extends AnyFunSuite {
-
-  private lazy val plans =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("PLANS.md")), "UTF-8")
+object PlanLint {
 
   /** query -> why its nested-loop join is bounded (broadcast side size
     * is a CONSTANT, independent of corpus scale). */
-  private val BoundedNonEquiJoins: Map[String, String] = Map(
+  val BoundedNonEquiJoins: Map[String, String] = Map(
     "orders_above_avg" -> "1-row global-average scalar, broadcast",
+    "customer_deciles" ->
+      ("1-row max(ntile_rn)+1 row count, broadcast: a keyless aggregate " +
+        "is exactly one row at any scale (distributed ntile)"),
     "tfidf_top_terms" -> "1-row corpus-size scalar, broadcast",
-    "ivf_cell_stats" -> "16-row centroid table, broadcast",
     "ann_topk_brute" -> "10-row query set, broadcast (brute-force EVAL BASELINE)",
     "ann_hard_negatives" ->
       "10-row query set (with labels), broadcast — label-mismatch mining",
@@ -59,22 +66,14 @@ class PlanQualitySpec extends AnyFunSuite {
     "ann_topk_pruned" ->
       "16-row centroid table + 10-row query set, broadcast (probe step)",
     "ann_recall_ivf2" -> "contains ann_topk_brute (eval baseline) + k1=4 super-centroids",
-    "ann_topk_graph" ->
-      "1-row entry-point scalar (min vec_id) + 10-row query set, broadcast",
-    "ann_recall_graph" ->
-      "contains ann_topk_brute (eval baseline) + the whitelisted graph search",
+    "ann_recall_graph" -> "contains ann_topk_brute (eval baseline)",
     "ann_graph_steps_curve" ->
       "contains ann_topk_brute (eval baseline) + a 4-row steps-arm table, broadcast",
     "ann_recall_lsh" -> "contains ann_topk_brute (eval baseline)",
-    "dedup_embedding_cosine" -> "16-row centroid table, broadcast (cell assignment)",
-    "dedup_embedding_recall" -> "16-row centroid table, broadcast (cell assignment)",
     "classifier_duel" ->
       "5-row NB class-stats table + 1-row eval-count scalars, broadcast",
     "key_skew_profile" ->
       "1-row totals scalar cross joined onto a 10-row top-k, broadcast",
-    "join_size_est" ->
-      "1-row sketch-estimate × 1-row exact-count scalars, broadcast (per pair)",
-    "funnel_conversion" -> "1-row step-1 count scalar, broadcast",
     "streaming_funnel" -> "1-row step-1 count scalar, broadcast",
     "fuzzy_block_recall" -> ("distinct-name vocabulary all-pairs EVAL " +
       "BASELINE (bounded by generator vocabulary, not corpus rows) + " +
@@ -118,24 +117,18 @@ class PlanQualitySpec extends AnyFunSuite {
     "bm25_index_append" -> "1-row base/batch doc-count scalars, broadcast",
     "streaming_bm25_append" ->
       "1-row base/batch doc-count scalars, broadcast (delta-log merge)",
-    "streaming_classify" ->
-      "|classes|-row model-stats table, broadcast (frozen-model scoring)",
     "nb_classify" ->
       "|classes|-row model-stats table, broadcast (score fan-out)",
     "nb_confusion" -> "|classes|-row model-stats table, broadcast",
     "corpus_filter_nb" -> "|classes|-row model-stats table, broadcast",
     "nb_filter_threshold_curve" ->
       "|classes|-row model-stats table + 1-row per-arm count scalars, broadcast",
-    "cluster_balanced_sample" ->
-      "16-row centroid table, broadcast (cell assignment)",
     "bm25_typo_topk" ->
       "1-row stats scalar + corrected term set, broadcast",
     "contrastive_triples" ->
       "10-row labeled query set, broadcast (one scored corpus pass)",
     "snippet_topk_dedup" ->
       "fuses two whitelisted snippet retrievers; inputs ≤ queries×k rows",
-    "bm25_typo_corrections" ->
-      "first-char-blocked vocabulary join (all equi); tiny term set broadcast",
     "typo_retrieval_eval" ->
       "contains the whitelisted raw/corrected/colbert arms + stats scalars",
     "bm25_capped_eval_zipf" ->
@@ -152,8 +145,6 @@ class PlanQualitySpec extends AnyFunSuite {
       "1-row cohort-average scalar, broadcast (uncorrelated subquery)",
     "q11_important_parts" ->
       "1-row global revenue-threshold scalar, broadcast (HAVING subquery)",
-    "q15_top_supplier" ->
-      "1-row view-max scalar, broadcast (argmax against the agg view)",
     "doc_ppl_bigram" ->
       "1-row (n_train, v_train) scalar, broadcast (backoff denominator)",
     "corpus_ppl_buckets" ->
@@ -161,43 +152,17 @@ class PlanQualitySpec extends AnyFunSuite {
     "corpus_split_leakproof" ->
       "two 1-row audit aggregates cross-joined per scheme, broadcast")
 
-  private def sections: Seq[(String, String)] = {
-    val parts = plans.split("\n## ").toSeq.drop(1)
-    parts.map { p =>
-      val name = p.takeWhile(_ != '\n').trim
-      (name, p)
-    }
-  }
+  def hasNestedLoopJoin(plan: String): Boolean =
+    plan.contains("CartesianProduct") || plan.contains("BroadcastNestedLoopJoin")
 
-  test("every nested-loop/cartesian join in the registry is a documented bounded one") {
-    val offenders = sections.collect {
-      case (name, body)
-        if (body.contains("CartesianProduct") ||
-          body.contains("BroadcastNestedLoopJoin")) &&
-          !BoundedNonEquiJoins.contains(name) => name
-    }
-    assert(offenders.isEmpty,
-      s"unexplained non-equi join plan(s): $offenders — either key the " +
-        "join on an equality (bucketing/blocking) or argue the bound and " +
-        "whitelist it here")
-  }
+  /** Every unbounded-following frame; group 1 is its lower bound. */
+  val UnboundedFollowingFrame =
+    """specifiedwindowframe\(\w+, ([^,()]+(?:\(\))?), unboundedfollowing\$\(\)\)""".r
 
-  test("the headline embedding dedup plan is candidate-blocked, not all-pairs") {
-    val cosine = sections.find(_._1 == "dedup_embedding_cosine")
-      .getOrElse(fail("dedup_embedding_cosine missing from PLANS.md"))._2
-    // the candidate join must be an equality join on the cell id — a
-    // SortMergeJoin/ShuffledHashJoin/BroadcastHashJoin node, never a
-    // vec_id < vec_id nested loop over the full corpus on both sides
-    assert(!cosine.contains("CartesianProduct"),
-      "headline embedding dedup degenerated to a cartesian join")
-    val hashJoins = Seq("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin")
-    assert(hashJoins.exists(cosine.contains),
-      "expected an equality-keyed candidate join in dedup_embedding_cosine")
-  }
-
-  test("the whitelist carries no stale entries") {
-    val registered = SparkEntry.registry.map(_.name).toSet
-    val stale = BoundedNonEquiJoins.keySet.filterNot(registered)
-    assert(stale.isEmpty, s"whitelisted but not registered: $stale")
-  }
+  /** The unbounded-following frames in `plan` that are not
+    * whole-partition, i.e. the quadratic ones. */
+  def quadraticFrames(plan: String): List[String] =
+    UnboundedFollowingFrame.findAllMatchIn(plan)
+      .filter(_.group(1) != "unboundedpreceding$()")
+      .map(_.matched).toList
 }

@@ -56,11 +56,11 @@ class StagedLifecycleSpec extends AnyFunSuite with SparkTestBase {
     // rep of whatever query touches it (the round-10 typo_retrieval_eval
     // `weak`: two BM25 eval arms recomputed per rep while the colbert arm
     // read a staged table). Contract: after Staged.prewarm, executing
-    // every retrieval-family query must create NO new retrieval keys.
+    // every query of these families must create NO new staged keys.
     Staged.clearSession(spark)
     Staged.prewarm(spark, sf)
-    val warmed = Staged.keys(spark, sf, "retrieval")
-    assert(warmed.nonEmpty, "prewarm should stage retrieval artifacts")
+    val warmed = Staged.keys(spark, sf)
+    assert(warmed.nonEmpty, "prewarm should stage artifacts")
     // every family that stages retrieval-keyed artifacts (round 14
     // added the multimodal phash and join-size-CMS families)
     (graft.queries.RetrievalQueries.all ++
@@ -68,7 +68,7 @@ class StagedLifecycleSpec extends AnyFunSuite with SparkTestBase {
       graft.queries.AnalyticsQueries.all ++
       graft.queries.SimilarityQueries.all).foreach { q =>
       q.fn(spark, sf).write.format("noop").mode("overwrite").save()
-      val now = Staged.keys(spark, sf, "retrieval")
+      val now = Staged.keys(spark, sf)
       assert((now -- warmed).isEmpty,
         s"query ${q.name} staged keys prewarm missed: ${now -- warmed}")
     }
