@@ -18,7 +18,10 @@ import org.apache.spark.sql.SparkSession
   * rounds straight (hourly_ohlc_mv, orders_rollup burned round 3's
   * comparison). The `spread` map records per-query (max - min) across
   * reps so a noisy measurement is visible at comparison time instead of
-  * masquerading as a code regression.
+  * masquerading as a code regression. The `codegen_compiles` map
+  * records per query how many classes whole-stage codegen compiled
+  * over its reps (Spark's CodegenMetrics): a query that keeps
+  * compiling after its first rep misses Spark's codegen cache.
   *
   * Output protocol (the driver captures only the LAST 2000 chars of
   * stdout — round 5's 6.5 KB single-line JSON was truncated to
@@ -105,10 +108,15 @@ object Bench {
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
-    // (name, medianSec, spreadSec) for successes; (name, err) for failures
-    val ok = scala.collection.mutable.ArrayBuffer.empty[(String, Double, Double)]
+    // (name, medianSec, spreadSec, codegenCompiles) for successes;
+    // (name, err) for failures
+    val ok = scala.collection.mutable.ArrayBuffer
+      .empty[(String, Double, Double, Long)]
+    def compiles: Long = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
     val errs = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     names.foreach { n =>
+      val compiles0 = compiles
       force(n) match {
         case Left(err) => errs += ((n, err)) // failed once — don't rep it
         case Right(t1) =>
@@ -118,7 +126,8 @@ object Bench {
           // into the JSON, making the whole output unparseable.
           val more = Seq.fill(reps - 1)(force(n)).collect { case Right(t) => t }
           val times = (t1 +: more).sorted
-          ok += ((n, times(times.length / 2), times.last - times.head))
+          ok += ((n, times(times.length / 2), times.last - times.head,
+            compiles - compiles0))
       }
     }
 
@@ -129,9 +138,10 @@ object Bench {
     val total = r3(ok.map(_._2).sum)
     val qs = jmap(ok.toSeq.map(r => r._1 -> r3(r._2).toString))
     val spread = jmap(ok.toSeq.map(r => r._1 -> r3(r._3).toString))
+    val codegen = jmap(ok.toSeq.map(r => r._1 -> r._4.toString))
     val errJson = jmap(errs.toSeq.map { case (n, e) => n -> jstr(e) })
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"reps":$reps,"errors":$errJson,"spread":$spread,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"reps":$reps,"errors":$errJson,"spread":$spread,"codegen_compiles":$codegen,"sf":"$sfDir"}"""
     // Full JSON: to a file (always parseable) and the log (for humans).
     try {
       val p = java.nio.file.Paths.get("BENCH_FULL.json")

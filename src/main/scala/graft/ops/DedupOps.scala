@@ -319,11 +319,13 @@ object DedupOps {
     * pair RDDs; string/UUID ids would need a keying pass first — at
     * which point the surrogate long id IS the production answer).
     *
-    * The returned DataFrame is backed by a session-cached RDD that is
-    * freed by Spark's ContextCleaner once the frame becomes
-    * unreachable (the bench's per-query GC collects it promptly); a
-    * long-lived service that holds many results should unpersist via
-    * `df.rdd.unpersist()` when done.
+    * The call leaves nothing persisted: the loop's edge and label RDDs
+    * are freed before it returns, and the returned DataFrame reads the
+    * final labels from their last shuffle's map output, which Spark
+    * keeps while the frame is reachable and removes after it (its
+    * ContextCleaner). Re-reading the frame re-runs no pair screen and
+    * no union-find or propagation round; a caller that wants the labels
+    * in memory caches the frame and owns that cache (Staged.dupClusters).
     *
     * @param pairs (doc_a, doc_b) undirected near-dup evidence
     * @param smallGraphEdges directed-edge-row bound for the single-task
@@ -393,8 +395,11 @@ object DedupOps {
         }
         val ids = parent.keys.toArray
         ids.iterator.map(id => (id, find(id)))
-      }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      labels.foreachPartition(_ => ()) // materialize before freeing raw
+      }.partitionBy(new org.apache.spark.HashPartitioner(
+        math.max(1, sc.defaultParallelism)))
+      // one job runs the union-find into the shuffle every later read
+      // of the labels starts from; only then is raw freed
+      labels.foreachPartition(_ => ())
       raw.unpersist(blocking = false)
       return labelsToDf(spark, labels)
     }
@@ -463,7 +468,10 @@ object DedupOps {
         s"dupClusters: min-label propagation did NOT converge after " +
           s"$maxIters rounds — labels may span an unfinished component " +
           s"(graph diameter > $maxIters); raise maxIters")
+    // the last round's reduceByKey output was written by its labelSum
+    // job: later reads start from that shuffle, not from these caches
     edges.unpersist(blocking = false)
+    labels.unpersist(blocking = false)
     labelsToDf(spark, labels)
   }
 

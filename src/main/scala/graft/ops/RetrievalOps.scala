@@ -95,12 +95,12 @@ object RetrievalOps {
   /** [[bm25TopK]] over EXTERNALLY supplied one-row stats and per-token
     * idf tables — the production index-serving shape (df/idf and the
     * corpus stats ship WITH an inverted index; recomputing them per
-    * probe re-scans the index). The capped-index eval derives both
-    * from one vocabulary-bounded df table instead of re-aggregating
-    * the capped postings twice (guide §2.3). The probe's semantics are
-    * unchanged: only tokens present in `idf` can contribute, so
-    * passing a SUBSET vocabulary's idf prunes the same postings a
-    * pre-joined subset index would. */
+    * probe re-scans the index). The registered queries pass their
+    * session-staged index; the capped-index eval derives a capped idf
+    * from the staged df instead of re-aggregating the capped postings
+    * (guide §2.3). The probe's semantics are unchanged: only tokens
+    * present in `idf` can contribute, so passing a SUBSET vocabulary's
+    * idf prunes the same postings a pre-joined subset index would. */
   def bm25TopKWith(postings: DataFrame, stats: DataFrame, idf: DataFrame,
                    qterms: DataFrame, k: Int,
                    includeSelf: Boolean): DataFrame = {

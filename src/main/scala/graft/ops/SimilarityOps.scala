@@ -291,28 +291,48 @@ object SimilarityOps {
       explode(nearestCellsCol(superCents, 1, col("n_emb"))).as("scell"))
   }
 
-  /** Child (second-level) centroids: the `k2` lowest-vec_id members of
-    * each super-cell — (scell, sub_id, s_emb). sub_id is the member's
-    * vec_id (globally unique, so a child cell id needs no pair key).
-    *
-    * The per-super-cell row_number window shuffles the corpus into k1
-    * partitions — the same bounded-deterministic-sample pattern
-    * [[ivfCentroidsNorm]] uses for centroid estimation (its sampleM
-    * window). At extreme scale both run on a corpus SAMPLE staged
-    * before training (the quantizer is trained once, on a sample, and
-    * shared — assignment, the n-sized pass, never windows). */
-  def ivf2Children(corpus: DataFrame, superCents: DataFrame, k2: Int): DataFrame = {
+  /** The child-centroid ids: the `k2` lowest-vec_id members of each
+    * super-cell, (scell, sub_id). The per-super-cell row_number window
+    * shuffles the corpus into k1 partitions — the same
+    * bounded-deterministic-sample pattern [[ivfCentroidsNorm]] uses for
+    * centroid estimation (its sampleM window) — and only ids cross that
+    * shuffle, so it carries no float arrays. At extreme scale both
+    * windows run on a corpus SAMPLE staged before training (the
+    * quantizer is trained once, on a sample, and shared — assignment,
+    * the n-sized pass, never windows). */
+  def ivf2ChildIds(corpus: DataFrame, superCents: DataFrame, k2: Int): DataFrame = {
     val w = Window.partitionBy(col("scell")).orderBy(col("vec_id").asc)
     superAssign(corpus, superCents)
+      .select(col("vec_id"), col("scell"))
       .withColumn("crn", row_number().over(w))
       .filter(col("crn") <= k2)
+      .select(col("scell"), col("vec_id").as("sub_id"))
+  }
+
+  /** Child (second-level) centroids: the [[ivf2ChildIds]] members with
+    * their embeddings — (scell, sub_id, s_emb). sub_id is the member's
+    * vec_id (globally unique, so a child cell id needs no pair key).
+    * The k1·k2 ids are collected (one driver job at call time, the same
+    * bound as the super-centroid matrix [[nearestCellsCol]] collects)
+    * and the corpus is filtered to them: a broadcast join-back would
+    * build a hashed relation (a fixed 1 MB page at any size) that a
+    * cached index keeps referenced for the whole session. */
+  def ivf2Children(corpus: DataFrame, superCents: DataFrame, k2: Int): DataFrame = {
+    val ids = ivf2ChildIds(corpus, superCents, k2)
+      .select(col("sub_id")).collect().map(_.getLong(0)).toSeq
+    // a member's super-cell is a function of its embedding: re-deriving
+    // it on the k1·k2 filtered rows reproduces the window's scell
+    superAssign(corpus.filter(col("vec_id").isInCollection(ids)), superCents)
       .select(col("scell"), col("vec_id").as("sub_id"), col("n_emb").as("s_emb"))
   }
 
-  /** Two-level assignment: each vector's child cell within its own
-    * super-cell — (vec_id, n_emb, cell). The child argmax is a hash-agg
-    * (max_by over the scell-equality join), so the per-vector candidate
-    * rows reduce map-side: no n·k2 window shuffle. */
+  /** Two-level assignment, self-trained: each vector's child cell
+    * within its own super-cell — (vec_id, n_emb, cell). The child argmax
+    * is a hash-agg (max_by over the scell-equality join), so the
+    * per-vector candidate rows reduce map-side: no n·k2 window shuffle.
+    * Serving reads the staged id-only assignment of
+    * [[ivf2AssignBatchNorm]] instead; AnnIncrementalSpec pins that the
+    * two rules agree on the training corpus. */
   def ivf2AssignNorm(corpus: DataFrame, superCents: DataFrame, k2: Int): DataFrame = {
     val children = ivf2Children(corpus, superCents, k2)
     superAssign(corpus, superCents)
@@ -326,32 +346,45 @@ object SimilarityOps {
         first(col("n_emb")).as("n_emb"))
   }
 
-  /** Two-level IVF top-k: probe `nprobe1` super-cells per query, rank
-    * the children of those super-cells and keep the `nprobe2` nearest
-    * child cells overall, then score only vectors assigned to probed
-    * child cells. Approximate by construction; the oracle implements the
-    * identical two-level blocking so results hash-match. */
-  def ivf2TopKNormWith(corpus: DataFrame, superCents: DataFrame, k2: Int,
+  /** Two-level IVF top-k over a STAGED index: probe `nprobe1`
+    * super-cells per query, rank the children of those super-cells and
+    * keep the `nprobe2` nearest child cells overall, then score only
+    * vectors assigned to probed child cells. `children` is the
+    * (scell, sub_id, s_emb) table of [[ivf2Children]]; `assigned` is the
+    * corpus assignment as ids, (vec_id, cell), from
+    * [[ivf2AssignBatchNorm]]. The probe nominates candidate ids from
+    * `assigned` against the broadcast probed-cell set and joins
+    * embeddings back from `corpus` only for those candidates (broadcast
+    * into the corpus scan) for the exact rerank: no corpus-sized
+    * shuffle, window or aggregate per query. Approximate by
+    * construction; the oracle implements the identical two-level
+    * blocking so results hash-match. */
+  def ivf2TopKNormWith(corpus: DataFrame, superCents: DataFrame,
+                       children: DataFrame, assigned: DataFrame,
                        queryIds: Seq[Long], k: Int,
                        nprobe1: Int, nprobe2: Int): DataFrame = {
-    val children = ivf2Children(corpus, superCents, k2)
-    val assigned = ivf2AssignNorm(corpus, superCents, k2)
     val queries = corpus.filter(col("vec_id").isInCollection(queryIds))
       .select(col("vec_id").as("query_id"), col("n_emb").as("q_emb"))
     val qsuper = queries.select(col("query_id"), col("q_emb"),
       explode(nearestCellsCol(superCents, nprobe1, col("q_emb"))).as("scell"))
     val cw = Window.partitionBy(col("query_id"))
       .orderBy(col("qc").desc, col("sub_id").asc)
+    // q_emb rides along with the query ids (|queries|·nprobe2 rows):
+    // joining the query vectors back later would make Spark inject a
+    // runtime bloom filter, one more job per call, between two copies
+    // of the same query set
     val qcell = qsuper.join(broadcast(children), Seq("scell"))
       .select(col("query_id"), col("q_emb"), col("sub_id"),
         dotCosine(col("q_emb"), col("s_emb")).as("qc"))
       .withColumn("cr", row_number().over(cw))
       .filter(col("cr") <= nprobe2)
       .select(col("query_id"), col("q_emb"), col("sub_id").as("cell"))
+    val cands = assigned.join(broadcast(qcell), Seq("cell"))
+      .filter(col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("q_emb"), col("vec_id"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine_sim").desc, col("neighbor_id").asc)
-    qcell.join(assigned, Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
+    corpus.join(broadcast(cands), Seq("vec_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         dotCosine(col("q_emb"), col("n_emb")).as("cosine_sim"))
       .withColumn("rank", row_number().over(w))

@@ -82,6 +82,33 @@ object RetrievalQueries {
       RetrievalOps.bm25Postings(famDocs(s, dir, fam))
     }
 
+  /** The published BM25 index of a corpus family: its postings, the
+    * one-row corpus stats (n_docs, avgdl) and the per-token
+    * (token, df, idf) table — the stats and idf every production
+    * inverted index ships NEXT TO its postings, staged once per family
+    * with the postings' lifecycle. Every ranked probe here reads it
+    * through `bm25TopKWith`; re-deriving df, idf and the stats per call
+    * re-aggregated the whole postings table on every query. */
+  private def bm25IndexFam(s: SparkSession, dir: String,
+                           fam: String): (DataFrame, DataFrame, DataFrame) = {
+    val posts = postingsFam(s, dir, fam)
+    val stats = Staged.retrieval(s, dir, s"${fam}bm25_stats") {
+      RetrievalOps.bm25Stats(posts)
+    }
+    val idf = Staged.retrieval(s, dir, s"${fam}bm25_idf") {
+      RetrievalOps.bm25Idf(posts, stats)
+    }
+    (posts, stats, idf)
+  }
+
+  /** Top-k BM25 candidates of `qterms` over the family's staged index. */
+  private def bm25TopKFam(s: SparkSession, dir: String, fam: String,
+                          qterms: DataFrame,
+                          includeSelf: Boolean): DataFrame = {
+    val (posts, stats, idf) = bm25IndexFam(s, dir, fam)
+    RetrievalOps.bm25TopKWith(posts, stats, idf, qterms, BmK, includeSelf)
+  }
+
   /** Hash-embedded corpus at [[EmbDim]] dims (null vectors dropped). */
   private def corpusEmb(s: SparkSession, dir: String): DataFrame =
     Staged.retrieval(s, dir, "doc_emb16") {
@@ -119,8 +146,8 @@ object RetrievalQueries {
   private def snipBm25Fam(s: SparkSession, dir: String,
                           fam: String): DataFrame =
     Staged.retrieval(s, dir, s"${fam}snip_bm25") {
-      RetrievalOps.bm25TopK(postingsFam(s, dir, fam),
-        qtermsSnipFam(s, dir, fam), BmK, includeSelf = true)
+      bm25TopKFam(s, dir, fam, qtermsSnipFam(s, dir, fam),
+        includeSelf = true)
     }
 
   /** Snippet dense ranking: embed the snippet OUT of corpus (the query
@@ -198,17 +225,16 @@ object RetrievalQueries {
     * (the round-10 `weak`: 2.12 → 5.02 s from exactly that asymmetry). */
   private def typoBm25Raw(s: SparkSession, dir: String): DataFrame =
     Staged.retrieval(s, dir, "typo_bm25_raw") {
-      RetrievalOps.bm25TopK(postings(s, dir), qtermsTypo(s, dir), BmK,
-        includeSelf = true)
+      bm25TopKFam(s, dir, "", qtermsTypo(s, dir), includeSelf = true)
     }
 
   /** Corrected-terms BM25 ranking, cached — the eval's second arm. */
   private def typoBm25Corr(s: SparkSession, dir: String): DataFrame =
     Staged.retrieval(s, dir, "typo_bm25_corr") {
-      RetrievalOps.bm25TopK(postings(s, dir),
+      bm25TopKFam(s, dir, "",
         typoCorrections(s, dir)
           .select(col("query_id"), col("corrected").as("token"))
-          .distinct(), BmK, includeSelf = true)
+          .distinct(), includeSelf = true)
     }
 
   /** Spell correction of deterministically corrupted snippet terms
@@ -249,9 +275,8 @@ object RetrievalQueries {
   private def prfTermsFam(s: SparkSession, dir: String,
                           fam: String): DataFrame =
     Staged.retrieval(s, dir, s"${fam}prf_terms") {
-      val posts = postingsFam(s, dir, fam)
-      val idf = RetrievalOps.bm25Idf(posts, RetrievalOps.bm25Stats(posts))
-        .select(col("token"), col("idf"))
+      val (posts, _, bm25Idf) = bm25IndexFam(s, dir, fam)
+      val idf = bm25Idf.select(col("token"), col("idf"))
       val fb = snipBm25Fam(s, dir, fam).filter(col("rank") <= PrfF)
         .select(col("query_id"), col("neighbor_id"))
       val cand = fb.join(posts, fb("neighbor_id") === posts("doc_id"))
@@ -287,40 +312,17 @@ object RetrievalQueries {
   private def prfRankedFam(s: SparkSession, dir: String,
                            fam: String): DataFrame =
     Staged.retrieval(s, dir, s"${fam}prf_ranked") {
-      RetrievalOps.bm25TopK(postingsFam(s, dir, fam),
-        qtermsPrfFam(s, dir, fam), BmK, includeSelf = true)
-    }
-
-  /** Per-token document-frequency table of the published index —
-    * (token, df), the idf side every production inverted index ships
-    * NEXT TO its postings (staged with the same lifecycle as
-    * `${fam}bm25_postings`; vocabulary-bounded). Re-deriving it per
-    * consumer re-scanned the whole postings table once per reference —
-    * the capped-index eval alone referenced it 3× per run. */
-  private def dfreqFam(s: SparkSession, dir: String,
-                       fam: String): DataFrame =
-    Staged.retrieval(s, dir, s"${fam}bm25_dfreq") {
-      postingsFam(s, dir, fam).groupBy(col("token"))
-        .agg(count(lit(1)).as("df"))
-    }
-
-  /** One-row published-index stats: distinct doc count + total posting
-    * count of the staged FULL index (the `bm25Stats` family of values
-    * an index ships with; the capped side's stats stay computed in the
-    * consuming query — the capped index is the eval's subject). */
-  private def indexStatsFam(s: SparkSession, dir: String,
-                            fam: String): DataFrame =
-    Staged.retrieval(s, dir, s"${fam}bm25_corpus_stats") {
-      postingsFam(s, dir, fam).agg(
-        countDistinct(col("doc_id")).as("nd"),
-        count(lit(1)).as("n_postings_full"))
+      bm25TopKFam(s, dir, fam, qtermsPrfFam(s, dir, fam),
+        includeSelf = true)
     }
 
   /** Force this family's staged artifacts (Staged.prewarm hook). */
   private[queries] def prewarm(s: SparkSession, dir: String): Unit = {
-    postings(s, dir).count()
-    dfreqFam(s, dir, "").count()
-    indexStatsFam(s, dir, "").count()
+    def warmIndex(fam: String): Unit = {
+      val (posts, stats, idf) = bm25IndexFam(s, dir, fam)
+      posts.count(); stats.count(); idf.count()
+    }
+    warmIndex("")
     corpusEmb(s, dir).count()
     snipBm25(s, dir).count()
     snipDense(s, dir).count()
@@ -336,9 +338,7 @@ object RetrievalQueries {
     // its postings/rankings — the lifecycle contract (no staged key
     // created outside prewarm) covers both corpus families
     Staged.zipfDocs(s, dir).count()
-    postingsFam(s, dir, "zipf_").count()
-    dfreqFam(s, dir, "zipf_").count()
-    indexStatsFam(s, dir, "zipf_").count()
+    warmIndex("zipf_")
     snipBm25Fam(s, dir, "zipf_").count()
     prfTermsFam(s, dir, "zipf_").count()
     prfRankedFam(s, dir, "zipf_").count()
@@ -366,7 +366,7 @@ object RetrievalQueries {
        |  FROM pdf CROSS JOIN pstats)""".stripMargin.replace("\n", " ")
 
   /** BM25 ranked top-k for a (query_id, token) term-set relation over
-    * NAMED postings/idf/stats relations — mirrors RetrievalOps.bm25TopK
+    * NAMED postings/idf/stats relations — mirrors RetrievalOps.bm25TopKWith
     * (9-dp idf/norm/contrib rounding, DECIMAL(30,9) candidate sums,
     * 6-dp scores). */
   private def bm25RankSqlOver(postRel: String, idfRel: String,
@@ -582,23 +582,20 @@ object RetrievalQueries {
     // per consumer: capped stats, capped idf, the probe, and the
     // capped-postings count each re-derived them, ~10 full passes over
     // the 8.6M-row postings index; 150 Exchanges at sf0.1). Everything
-    // vocabulary-bounded is derived ONCE from the df table:
+    // vocabulary-bounded is derived ONCE from the staged index's df:
     //  - kept tokens carry their df, so capped idf needs NO postings
     //    pass (df over the capped index ≡ df over the full index for a
     //    kept token — a capped token loses ALL its postings);
-    //  - n_postings_capped = Σ df over kept tokens (same identity);
-    //  - n_postings_full rides the nd aggregate (one pass computes
-    //    both one-row stats);
+    //  - n_postings_capped = Σ df over kept tokens (same identity), and
+    //    n_postings_full = Σ df over all tokens (postings are unique per
+    //    (doc_id, token));
     //  - the probe runs on the FULL postings joined to the kept-token
     //    query idf: qidf only contains kept tokens, so posts⨝qidf ≡
     //    capped⨝qidf row-for-row.
-    // Remaining full-postings passes: dfreq, nd+nFull, capped cstats,
-    // probe — 4.
-    val posts = postingsFam(s, dir, fam)
-    val dfreq = dfreqFam(s, dir, fam)
-    val ndFull = indexStatsFam(s, dir, fam)
-    val keepDf = dfreq.crossJoin(broadcast(ndFull.select(col("nd"))))
-      .filter(col("df") <= col("nd") * lit(CapFrac.toDouble))
+    // Remaining full-postings passes: capped cstats, probe — 2.
+    val (posts, stats, idf) = bm25IndexFam(s, dir, fam)
+    val keepDf = idf.crossJoin(broadcast(stats.select(col("n_docs"))))
+      .filter(col("df") <= col("n_docs") * lit(CapFrac.toDouble))
       .select(col("token"), col("df"))
     val capped = posts.join(keepDf.select(col("token")), Seq("token"))
     val cstats = capped.agg(
@@ -615,7 +612,8 @@ object RetrievalQueries {
       .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
     val full = snipBm25Fam(s, dir, fam)
       .select(col("query_id"), col("neighbor_id"))
-    val nFull = ndFull.select(col("n_postings_full"))
+    val nFull = idf.agg(coalesce(sum(col("df")), lit(0L))
+      .as("n_postings_full"))
     val nCap = keepDf.agg(coalesce(sum(col("df")), lit(0L))
       .as("n_postings_capped"))
     full.join(cr, Seq("query_id", "neighbor_id"), "left")
@@ -759,13 +757,10 @@ object RetrievalQueries {
     // counterpart of ivf_cell_stats (what a deployment inspects to
     // size posting caps / spot stop-dense terms).
     Q("bm25_index_stats",
-      (s, dir) => {
-        val posts = postings(s, dir)
-        RetrievalOps.bm25Idf(posts, RetrievalOps.bm25Stats(posts))
-          .select(col("token"), col("df").cast("long").as("df"), col("idf"))
-          .orderBy(col("df").desc, col("token").asc)
-          .limit(20)
-      },
+      (s, dir) => bm25IndexFam(s, dir, "")._3
+        .select(col("token"), col("df").cast("long").as("df"), col("idf"))
+        .orderBy(col("df").desc, col("token").asc)
+        .limit(20),
       s"""WITH $postWith
          |SELECT token, CAST(df AS BIGINT) AS df, idf FROM pidf
          |ORDER BY df DESC, token ASC LIMIT 20"""
@@ -774,8 +769,8 @@ object RetrievalQueries {
     // Whole-document BM25 search (self excluded): lexical related-
     // document retrieval — the sparse twin of doc_ann_topk.
     Q("bm25_topk",
-      (s, dir) => RetrievalOps.bm25TopK(postings(s, dir),
-          qtermsFull(s, dir), BmK, includeSelf = false)
+      (s, dir) => bm25TopKFam(s, dir, "", qtermsFull(s, dir),
+          includeSelf = false)
         .select(col("query_id"), col("neighbor_id"), col("score"),
           col("rank").cast("int").as("rank"))
         .orderBy("query_id", "rank"),
@@ -980,11 +975,11 @@ object RetrievalQueries {
     // RetrievalSpec pins the recovery rate), then the standard ranked
     // probe runs unchanged.
     Q("bm25_typo_topk",
-      (s, dir) => RetrievalOps.bm25TopK(postings(s, dir),
+      (s, dir) => bm25TopKFam(s, dir, "",
           typoCorrections(s, dir)
             .select(col("query_id"), col("corrected").as("token"))
             .distinct(),
-          BmK, includeSelf = true)
+          includeSelf = true)
         .select(col("query_id"), col("neighbor_id"), col("score"),
           col("rank").cast("int").as("rank"))
         .orderBy("query_id", "rank"),

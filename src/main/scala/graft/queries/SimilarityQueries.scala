@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.ops.SimilarityOps
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import OracleFrags.{dotCosine, normCorpus}
 
@@ -468,6 +469,24 @@ object SimilarityQueries {
     (k1, math.max(2, math.ceil(k.toDouble / k1).toInt))
   }
 
+  /** The staged two-level serving index at this corpus's
+    * [[ivf2Params]]: (super-centroids, children, id-only assignment). */
+  private def ivf2Serving(s: org.apache.spark.sql.SparkSession,
+                          dir: String): (DataFrame, DataFrame, DataFrame) = {
+    val (k1, k2) = ivf2Params(Staged.corpusCount(s, dir))
+    val (children, assigned) = Staged.ivf2Index(s, dir, k1, k2)
+    (Staged.ivfCentroids(s, dir, k1), children, assigned)
+  }
+
+  /** The two-level probe both ann_topk_ivf2 and ann_recall_ivf2 grade:
+    * probe 2 supers → 4 child cells per query over the staged index. */
+  private def ivf2TopK(s: org.apache.spark.sql.SparkSession,
+                       dir: String): DataFrame = {
+    val (superCents, children, assigned) = ivf2Serving(s, dir)
+    SimilarityOps.ivf2TopKNormWith(Staged.normCorpus(s, dir), superCents,
+      children, assigned, QueryIds, K, 2, 4)
+  }
+
   /** Hot-cell trigger: a cell holding > HotFactor × the mean cell load
     * after an append is due for an in-place split. Mean-relative so the
     * trigger is scale-free. */
@@ -499,17 +518,19 @@ object SimilarityQueries {
     }
 
   /** Force this family's staged artifacts (Staged.prewarm hook):
-    * normalized corpus + count, flat and two-level centroids, the
-    * cell-partitioned layout, the PQ codebook/codes, and the frozen
-    * maintenance index with its post-append state. Parameter derivation
-    * is the registered queries' own (ivf2Params / annIdxParams), so a
-    * knob change can't silently leave an artifact cold. */
+    * normalized corpus + count, flat centroids, the two-level serving
+    * index, the cell-partitioned layout, the PQ codebook/codes, and the
+    * frozen maintenance index with its post-append state. Parameter
+    * derivation is the registered queries' own (ivf2Params /
+    * annIdxParams), so a knob change can't silently leave an artifact
+    * cold. */
   private[queries] def prewarm(
       s: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    val n = Staged.corpusCount(s, dir) // forces normCorpus
     bruteTopK(s, dir).count()
     Staged.ivfCentroids(s, dir, 16).count()
-    Staged.ivfCentroids(s, dir, ivf2Params(n)._1).count()
+    // forces normCorpus, corpusCount and the two-level super-centroids
+    val (_, ivf2Children, ivf2Assigned) = ivf2Serving(s, dir)
+    ivf2Children.count(); ivf2Assigned.count()
     Staged.ivfLayout(s, dir, 16)
     val (cb, codes) = Staged.pqIndex(s, dir, PqM, PqKsub)
     cb.count(); codes.count()
@@ -664,17 +685,13 @@ object SimilarityQueries {
     // plan constant; the child table is distributed data reached by an
     // equality join — at 10^10+ vectors the flat index's driver-held
     // matrix (k* = 2√n centroids) no longer fits, the two-level one is
-    // O(√k·dim).
+    // O(√k·dim). The query only probes: children and the id-only corpus
+    // assignment are the session-staged index (Staged.ivf2Index).
     Q("ann_topk_ivf2",
-      (s, dir) => {
-        val corpus = Staged.normCorpus(s, dir)
-        val (k1, k2) = ivf2Params(Staged.corpusCount(s, dir))
-        SimilarityOps.ivf2TopKNormWith(corpus,
-            Staged.ivfCentroids(s, dir, k1), k2, QueryIds, K, 2, 4)
-          .select(col("query_id"), col("neighbor_id"), col("cosine_sim"),
-            col("rank").cast("int").as("rank"))
-          .orderBy("query_id", "rank")
-      },
+      (s, dir) => ivf2TopK(s, dir)
+        .select(col("query_id"), col("neighbor_id"), col("cosine_sim"),
+          col("rank").cast("int").as("rank"))
+        .orderBy("query_id", "rank"),
       s"SELECT * FROM ($ivf2Sql) ORDER BY query_id, rank"),
 
     // IVF as a STORAGE LAYOUT — the ANN twin of the reference's
@@ -702,12 +719,10 @@ object SimilarityQueries {
     // that region's children). Same single-agg cost as ivf_cell_stats.
     Q("ivf2_cell_stats",
       (s, dir) => {
-        val corpus = Staged.normCorpus(s, dir)
-        val (k1, k2) = ivf2Params(Staged.corpusCount(s, dir))
-        val cents = Staged.ivfCentroids(s, dir, k1)
-        SimilarityOps.ivf2AssignNorm(corpus, cents, k2)
-          .join(SimilarityOps.ivf2Children(corpus, cents, k2)
-            .select(col("sub_id").as("cell"), col("scell")), Seq("cell"))
+        val (_, children, assigned) = ivf2Serving(s, dir)
+        assigned
+          .join(children.select(col("sub_id").as("cell"), col("scell")),
+            Seq("cell"))
           .groupBy(col("scell"), col("cell"))
           .agg(count(lit(1)).as("n_vectors"),
             min(col("vec_id")).as("min_vec"), max(col("vec_id")).as("max_vec"))
@@ -864,9 +879,7 @@ object SimilarityQueries {
       (s, dir) => {
         val brute = bruteTopK(s, dir)
           .select(col("query_id"), col("neighbor_id"))
-        val (k1, k2) = ivf2Params(Staged.corpusCount(s, dir))
-        val ivf2 = SimilarityOps.ivf2TopKNormWith(Staged.normCorpus(s, dir),
-            Staged.ivfCentroids(s, dir, k1), k2, QueryIds, K, 2, 4)
+        val ivf2 = ivf2TopK(s, dir)
           .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
         brute.join(ivf2, Seq("query_id", "neighbor_id"), "left")
           .groupBy("query_id")

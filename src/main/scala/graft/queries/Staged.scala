@@ -164,6 +164,30 @@ object Staged {
         .ivfCentroidsNorm(normCorpus(s, dir), nCells).cache())
   }
 
+  /** Two-level IVF serving index over [[normCorpus]] at (k1, k2), built
+    * once per session+dir over [[ivfCentroids]]`(k1)`: the child
+    * centroids (scell, sub_id, s_emb), k1·k2 rows, and the corpus
+    * assignment as ids only, (vec_id, cell), by the batch rule
+    * `ivf2AssignBatchNorm`. Every two-level probe and the cell
+    * histogram read it instead of re-deriving the assignment per call
+    * (a corpus window plus an argmax aggregate); embeddings join back
+    * only for a probe's reranked candidates. At scale: the index table
+    * written once after the load (the reference's CREATE INDEX). */
+  def ivf2Index(s: SparkSession, dir: String, k1: Int,
+                k2: Int): (DataFrame, DataFrame) = {
+    stage(s, dir, "ivf2Index", k1, k2) {
+      import org.apache.spark.sql.functions.col
+      val corpus = normCorpus(s, dir)
+      val superCents = ivfCentroids(s, dir, k1)
+      val children = graft.ops.SimilarityOps
+        .ivf2Children(corpus, superCents, k2).cache()
+      val assigned = graft.ops.SimilarityOps
+        .ivf2AssignBatchNorm(corpus, superCents, children)
+        .select(col("vec_id"), col("cell")).cache()
+      (children, assigned)
+    }
+  }
+
   /** Frozen two-level ANN index over the HISTORICAL corpus slice
     * (vec_id % 5 != 0 — the same incremental fixture split
     * dedup_incremental uses): (superCents, children, existingAssign) at

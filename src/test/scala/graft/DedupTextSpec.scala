@@ -114,6 +114,29 @@ class DedupTextSpec extends AnyFunSuite with SparkTestBase {
     assert(fast.toMap.apply(31L) == 30L)
   }
 
+  test("dup clusters: one pair-screen pass, and nothing left persisted") {
+    // the loop's edge and label RDDs are freed before dupClusters
+    // returns, and reading the returned frame (twice here) starts from
+    // the labels' shuffle output instead of re-running the pair screen
+    val sc = spark.sparkContext
+    Seq("union-find" -> Long.MaxValue, "pregel" -> 0L).foreach {
+      case (path, smallGraphEdges) =>
+        val screened = sc.longAccumulator
+        val pairs = sc.parallelize((1L to 9L).map(i => (i, i + 1)) ++
+            Seq((20L, 21L), (30L, 31L)), 2)
+          .map { p => screened.add(1); p }
+          .toDF("doc_a", "doc_b")
+        val before = sc.getPersistentRDDs.keySet
+        val out = DedupOps.dupClusters(pairs, smallGraphEdges = smallGraphEdges)
+        assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+          s"$path: dupClusters left RDDs persisted")
+        assert(out.orderBy("doc_id").collect().length == 14)
+        out.collect()
+        assert(screened.value == 11L,
+          s"$path: the 11-row pair screen ran ${screened.value} row evaluations")
+    }
+  }
+
   test("langId scores stopwords and argmax picks the dominant language") {
     val out = TextOps.langId(docs).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("pred_lang")).toMap

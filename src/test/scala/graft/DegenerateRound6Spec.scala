@@ -44,8 +44,10 @@ class DegenerateRound6Spec extends AnyFunSuite with SparkTestBase {
       1L -> Seq(0f, 1f, 0f, 0f),
       2L -> Seq(0.9f, 0.1f, 0f, 0f))))
     val cents = SimilarityOps.ivfCentroidsNorm(tiny, 4)
+    val children = SimilarityOps.ivf2Children(tiny, cents, 4)
+    val assigned = SimilarityOps.ivf2AssignBatchNorm(tiny, cents, children)
     val out = SimilarityOps.ivf2TopKNormWith(
-      tiny, cents, 4, Seq(0L), 2, 4, 16).collect()
+      tiny, cents, children, assigned, Seq(0L), 2, 4, 16).collect()
     assert(out.nonEmpty && out.forall(_.getLong(1) != 0L))
   }
 

@@ -21,6 +21,7 @@ class Ivf2Spec extends AnyFunSuite with SparkTestBase {
 
   private def corpus = Staged.normCorpus(spark, dir)
   private def supers = Staged.ivfCentroids(spark, dir, k1)
+  private def index = Staged.ivf2Index(spark, dir, k1, k2)
 
   test("two-level assignment is a partition aligned with super-cells") {
     val n = corpus.count()
@@ -42,8 +43,9 @@ class Ivf2Spec extends AnyFunSuite with SparkTestBase {
     val k = 8
     val brute = SimilarityOps.bruteForceTopKNorm(corpus, qids, k)
       .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    val everything = SimilarityOps.ivf2TopKNormWith(
-        corpus, supers, k2, qids, k, nprobe1 = k1, nprobe2 = k1 * k2)
+    val (children, assigned) = index
+    val everything = SimilarityOps.ivf2TopKNormWith(corpus, supers,
+        children, assigned, qids, k, nprobe1 = k1, nprobe2 = k1 * k2)
       .select("query_id", "neighbor_id", "cosine_sim", "rank")
     assert(everything.exceptAll(brute).count() == 0 &&
       brute.exceptAll(everything).count() == 0,
@@ -73,8 +75,9 @@ class Ivf2Spec extends AnyFunSuite with SparkTestBase {
   }
 
   test("pruned probe returns at most k per query, ranked consistently") {
+    val (children, assigned) = index
     val res = SimilarityOps.ivf2TopKNormWith(
-        corpus, supers, k2, Seq(0L, 1L), 5, 2, 4)
+        corpus, supers, children, assigned, Seq(0L, 1L), 5, 2, 4)
       .collect()
     val byQ = res.groupBy(_.getLong(0))
     byQ.values.foreach { rows =>

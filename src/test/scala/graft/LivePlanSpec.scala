@@ -1,7 +1,15 @@
 package graft
 
-import graft.ops.{QualityOps, TickOps}
+import graft.ops.{QualityOps, SimilarityOps, TickOps}
+import graft.queries.Staged
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 import org.scalatest.funsuite.AnyFunSuite
 
 /** LIVE plan-quality assertions: lock in the physical properties the
@@ -480,5 +488,81 @@ class LivePlanSpec extends AnyFunSuite with SparkTestBase {
     val hash = "Exchange hashpartitioning".r.findAllIn(plan).length
     assert(hash == 1,
       s"all grouping-set granularities must share one shuffle, got $hash:\n$plan")
+  }
+
+  // ── staged serving indexes: queries probe, they do not rebuild ──
+
+  /** Every node of a physical plan, through AQE and its query stages,
+    * but not into a cached relation's build plan: a staged index's
+    * build is not part of the query that probes it. */
+  private def planNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case q: QueryStageExec => q +: planNodes(q.plan)
+    case r: ReusedExchangeExec => r +: planNodes(r.child)
+    case other =>
+      other +: (other.children ++ other.subqueries).flatMap(planNodes)
+  }
+
+  /** The executed plan of a query, run to completion (final AQE plan). */
+  private def ranPlan(name: String): Seq[SparkPlan] = {
+    val df = SparkEntry.queries(name)(spark, sf)
+    df.collect()
+    planNodes(df.queryExecution.executedPlan)
+  }
+
+  private def cacheScans(nodes: Seq[SparkPlan]) =
+    nodes.collect { case i: InMemoryTableScanExec => i.relation.cacheBuilder }
+
+  test("ann_topk_ivf2 probes the staged index: no corpus window or aggregate") {
+    val nodes = ranPlan("ann_topk_ivf2")
+    val aggs = nodes.collect { case a: BaseAggregateExec => a }
+    assert(aggs.isEmpty, s"ann_topk_ivf2 aggregates per call:\n${aggs.mkString("\n")}")
+    // the probed-cell ranking and the final top-k rank rows of ONE
+    // query each; a window keyed on anything else runs over the corpus
+    val windows = nodes.collect { case w: WindowExec => w }
+    assert(windows.nonEmpty)
+    windows.foreach(w => assert(w.partitionSpec.map(_.sql) == Seq("query_id"),
+      s"window over the corpus:\n$w"))
+    val (_, assigned) = Staged.ivf2Index(spark, sf, 4, 4)
+    assert(cacheScans(planNodes(assigned.queryExecution.executedPlan))
+      .exists(b => cacheScans(nodes).exists(_ eq b)),
+      "ann_topk_ivf2 does not read the staged assignment")
+  }
+
+  test("ivf2 index build shuffles ids only, never embeddings") {
+    // a cached frame keeps its build's shuffle files on disk for as long
+    // as it stays cached: float arrays in those shuffles cost disk. The
+    // build runs the child-id window (collected by ivf2Children) and the
+    // two cached frames' plans.
+    val (children, assigned) = Staged.ivf2Index(spark, sf, 4, 4)
+    val window = SimilarityOps.ivf2ChildIds(Staged.normCorpus(spark, sf),
+      Staged.ivfCentroids(spark, sf, 4), 4)
+    window.collect()
+    val builds = ("child-id window" -> window.queryExecution.executedPlan) +:
+      Seq("children" -> children, "assignment" -> assigned).map {
+        case (what, df) =>
+          df.count()
+          what -> planNodes(df.queryExecution.executedPlan).collectFirst {
+            case i: InMemoryTableScanExec => i.relation.cacheBuilder.cachedPlan
+          }.getOrElse(fail(s"$what is not a cached frame"))
+      }
+    val shuffles = builds.flatMap { case (what, plan) =>
+      planNodes(plan).collect { case e: ShuffleExchangeLike => what -> e }
+    }
+    assert(shuffles.map(_._1).distinct.sorted == Seq("assignment", "child-id window"),
+      s"expected the window and the argmax aggregate to shuffle:\n$shuffles")
+    shuffles.foreach { case (what, e) => assert(
+      !e.output.exists(_.dataType.isInstanceOf[ArrayType]),
+      s"$what shuffles an array column:\n$e") }
+  }
+
+  test("bm25_topk plans no aggregate over the postings outside the staged index") {
+    // df, idf and the corpus stats come from the staged index; the only
+    // aggregate left is the per-(query, candidate) score sum
+    val aggs = ranPlan("bm25_topk").collect { case a: BaseAggregateExec => a }
+    assert(aggs.nonEmpty, "expected the candidate score aggregate")
+    aggs.foreach(a => assert(
+      a.groupingExpressions.exists(_.references.exists(_.name == "query_id")),
+      s"aggregate not keyed per query:\n$a"))
   }
 }

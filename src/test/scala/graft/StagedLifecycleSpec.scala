@@ -58,6 +58,7 @@ class StagedLifecycleSpec extends AnyFunSuite with SparkTestBase {
     // read a staged table). Contract: after Staged.prewarm, executing
     // every query of these families must create NO new staged keys.
     Staged.clearSession(spark)
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
     Staged.prewarm(spark, sf)
     val warmed = Staged.keys(spark, sf)
     assert(warmed.nonEmpty, "prewarm should stage artifacts")
@@ -84,5 +85,11 @@ class StagedLifecycleSpec extends AnyFunSuite with SparkTestBase {
       "clearSession left a staged frame cached"))
     assert(Staged.keys(spark, sf).isEmpty,
       s"keys left after clearSession: ${Staged.keys(spark, sf)}")
+    // ...and nothing the queries persisted outlives it either: a query
+    // caches only through the registry, or leaves nothing persisted
+    val leaked = spark.sparkContext.getPersistentRDDs
+      .filter { case (id, _) => !persistedBefore(id) }
+    assert(leaked.isEmpty,
+      s"persisted RDDs outlive clearSession: ${leaked.values.mkString("; ")}")
   }
 }
