@@ -272,19 +272,12 @@ object BehaviorOps extends Serializable {
     import spark.implicits._
     // schema comes from the shared footer-derived stream (Tables'
     // single source of truth), not a hard-coded copy that could drift
-    val raw = graft.streaming.StreamingOhlc.rawEventStream(spark, dir)
+    val raw = graft.streaming.StreamingConf.tableStream(spark, dir, "events")
     val stepEvents = toStepEvents(raw, steps)
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("step_idx"))
       .as[(Long, Long, Int)]
-    graft.streaming.StreamingConf.withStatePartitions(spark) {
-      val q = funnelStream(stepEvents, steps.length)
-        .writeStream.format("memory").queryName(queryName)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(queryName)
+    graft.streaming.StreamingConf.runAvailableNow(
+      funnelStream(stepEvents, steps.length).toDF(), queryName, "append")
   }
 }

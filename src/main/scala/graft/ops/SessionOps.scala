@@ -180,17 +180,10 @@ object SessionOps {
     import spark.implicits._
     // schema comes from the shared footer-derived stream (Tables'
     // single source of truth), not a hard-coded copy that could drift
-    val raw = graft.streaming.StreamingOhlc.rawEventStream(spark, dir)
+    val raw = graft.streaming.StreamingConf.tableStream(spark, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"))
       .as[Ev]
-    graft.streaming.StreamingConf.withStatePartitions(spark) {
-      val q = sessionizeStream(raw, gapMinutes)
-        .writeStream.format("memory").queryName(queryName)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(queryName)
+    graft.streaming.StreamingConf.runAvailableNow(
+      sessionizeStream(raw, gapMinutes).toDF(), queryName, "append")
   }
 }

@@ -41,14 +41,11 @@ object WarehouseOps {
         .bucketBy(nBuckets, bucketCol).sortBy(bucketCol)
         .saveAsTable(table)
     } else {
-      val key = "spark.sql.sources.partitionOverwriteMode"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "dynamic")
-      try updates.select(spark.table(table).columns.map(col): _*)
-        .write.mode(SaveMode.Overwrite).insertInto(table)
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
+      // session toggle: Spark 4.1.2's InsertIntoStatement has no options
+      graft.streaming.StreamingConf.withConf(spark,
+          "spark.sql.sources.partitionOverwriteMode", "dynamic") {
+        updates.select(spark.table(table).columns.map(col): _*)
+          .write.mode(SaveMode.Overwrite).insertInto(table)
       }
     }
   }
@@ -181,19 +178,12 @@ object WarehouseOps {
     * the small-files discipline). */
   def refreshPartitions(updates: DataFrame, path: String,
                         partitionCol: String = "trade_date"): Unit = {
-    val spark = updates.sparkSession
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try updates
+    updates
       .repartition(col(partitionCol))
       .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCol)
       .parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
   }
 
   /** MERGE-style upsert as a relational transform: `updates` rows win on

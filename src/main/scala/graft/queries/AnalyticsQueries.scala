@@ -932,8 +932,7 @@ object AnalyticsQueries {
     // regardless of batch size: the sketch IS the incremental operator.
     Q("streaming_hll_users",
       (s, dir) => {
-        val work = graft.util.Fs.workDir("graft_stream_hll", dir).toString
-        graft.util.Fs.deleteRec(work)
+        val work = graft.util.Fs.freshWorkDir("graft_stream_hll", dir)
         val merged = graft.streaming.StreamingSketch
           .hllRegistersAvailableNow(s, dir, work, 64)
         val exact = Tables.events(s, dir)

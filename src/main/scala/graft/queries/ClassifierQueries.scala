@@ -65,6 +65,15 @@ object ClassifierQueries {
         KeepClass, PDim)
     }
 
+  /** Cached held-out feature vectors (the duel and
+    * `perceptron_classify` both score them). */
+  private def testFeats(s: SparkSession, dir: String,
+                        fam: String = ""): DataFrame =
+    Staged.retrieval(s, dir, s"${fam}perceptron_test_feats") {
+      graft.ops.PerceptronOps.features(test(s, dir, fam), "lang",
+        KeepClass, PDim)
+    }
+
   /** The trained weight vector as a (dim, weight) table, memoized per
     * (session, dir) — the driver loop runs once, not per query/rep. */
   private def modelDf(s: SparkSession, dir: String,
@@ -301,10 +310,7 @@ object ClassifierQueries {
         col("n_test").cast("long").as("n_test"),
         col("n_correct").cast("long").as("n_correct"))
     val pc = graft.ops.PerceptronOps.classify(
-        Staged.retrieval(s, dir, s"${fam}perceptron_test_feats") {
-          graft.ops.PerceptronOps.features(
-            test(s, dir, fam), "lang", KeepClass, PDim)
-        }, modelW(s, dir, fam))
+        testFeats(s, dir, fam), modelW(s, dir, fam))
       .agg(count(lit(1)).as("n_test"),
         sum(col("correct").cast("long")).as("n_correct"))
       .select(lit("perceptron").as("classifier"),
@@ -470,8 +476,7 @@ object ClassifierQueries {
     // over the full corpus applies verbatim.
     Q("streaming_classify",
       (s, dir) => {
-        val work = graft.util.Fs.workDir("graft_stream_nb", dir).toString
-        graft.util.Fs.deleteRec(work)
+        val work = graft.util.Fs.freshWorkDir("graft_stream_nb", dir)
         graft.streaming.StreamingDocApply.applyAvailableNow(s, dir, work,
             b => nbClassify(s, dir, b))
           .orderBy("doc_id")
@@ -501,10 +506,7 @@ object ClassifierQueries {
     // classifier's nb_classify twin on the same split.
     Q("perceptron_classify",
       (s, dir) => graft.ops.PerceptronOps.classify(
-          Staged.retrieval(s, dir, "perceptron_test_feats") {
-            graft.ops.PerceptronOps.features(
-              test(s, dir), "lang", KeepClass, PDim)
-          }, modelW(s, dir))
+          testFeats(s, dir), modelW(s, dir))
         .orderBy("doc_id"),
       s"""WITH RECURSIVE ${pfWith("tr", trainRel)}, $perceptronWith,
          |${pfWith("te", testRel)}, $papplyWith

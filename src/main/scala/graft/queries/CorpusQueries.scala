@@ -341,8 +341,7 @@ object CorpusQueries {
     // is 8 rows.
     Q("corpus_shards_write",
       (s, dir) => {
-        val work = graft.util.Fs.workDir("graft_shards", dir).toString
-        graft.util.Fs.deleteRec(work)
+        val work = graft.util.Fs.freshWorkDir("graft_shards", dir)
         val sharded = Tables.documents(s, dir).select(
           col("doc_id"), col("lang"),
           size(TextOps.tokens(col("text"))).cast("long").as("n_tokens"),
@@ -398,8 +397,7 @@ object CorpusQueries {
     // exactly like corpus_shards_write proves the doc shards.
     Q("corpus_pack_write",
       (s, dir) => {
-        val work = graft.util.Fs.workDir("graft_pack", dir).toString
-        graft.util.Fs.deleteRec(work)
+        val work = graft.util.Fs.freshWorkDir("graft_pack", dir)
         val spans = CorpusOps.packSpans(bpeDocTokens(s, dir), PackSeqLen)
         val rows = spans.select(col("doc_id"), col("n"), col("o"),
             col("s0"), explode(sequence(col("s0"), col("s1"))).as("seq_id"))

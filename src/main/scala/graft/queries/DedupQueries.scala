@@ -403,8 +403,7 @@ object DedupQueries {
     // micro-batch slicing — so the batch oracle applies verbatim.
     Q("streaming_dedup_incremental",
       (s, dir) => {
-        val work = graft.util.Fs.workDir("graft_stream_inc", dir).toString
-        graft.util.Fs.deleteRec(work)
+        val work = graft.util.Fs.freshWorkDir("graft_stream_inc", dir)
         graft.streaming.StreamingDedup
           .incrementalScreenAvailableNow(s, dir, work, K, NH, BAND, TH)
           .orderBy("doc_id")

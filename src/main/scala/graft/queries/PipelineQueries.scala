@@ -154,12 +154,6 @@ object PipelineQueries {
       |  FROM amag a JOIN amag b ON a.doc_id = b.doc_id AND b.f = a.f + 1
       |  GROUP BY a.doc_id)""".stripMargin.replace("\n", " ")
 
-  private def freshWorkDir(prefix: String, dir: String): String = {
-    val p = graft.util.Fs.workDir(prefix, dir)
-    graft.util.Fs.deleteRec(p.toString)
-    p.toString
-  }
-
   // ── session-staged perceptual-hash artifacts ──────────────────────
   // One getter per staged tag (the codec round-trips are the expensive
   // once-per-session builds; every pair/cluster screen consumes them),
@@ -678,7 +672,7 @@ object PipelineQueries {
     // the stream was batched.
     Q("streaming_qc_summary",
       (s, dir) => {
-        val work = freshWorkDir("graft_stream_qc", dir)
+        val work = graft.util.Fs.freshWorkDir("graft_stream_qc", dir)
         val (_, summary) = graft.streaming.StreamingQc.runAvailableNow(s, dir, work)
         s.read.parquet(summary)
           .groupBy(col("symbol"))
@@ -767,7 +761,7 @@ object PipelineQueries {
     // checks the merged read-back per date.
     Q("warehouse_refresh",
       (s, dir) => {
-        val work = freshWorkDir("graft_wh_query", dir)
+        val work = graft.util.Fs.freshWorkDir("graft_wh_query", dir)
         val wh = s"$work/ticks"
         val ticks = graft.ops.TickOps
           .normalizeEvents(Tables.events(s, dir))
@@ -803,7 +797,7 @@ object PipelineQueries {
     Q("compaction_roundtrip",
       (s, dir) => {
         val frag = Staged.fragmentedTicks(s, dir)
-        val tidy = s"${freshWorkDir("graft_compact_query", dir)}/tidy"
+        val tidy = s"${graft.util.Fs.freshWorkDir("graft_compact_query", dir)}/tidy"
         graft.ops.WarehouseOps.compactPartitions(s, frag, tidy,
           maxRecordsPerFile = 1000L)
         s.read.parquet(tidy)
@@ -830,7 +824,7 @@ object PipelineQueries {
     Q("compaction_bytes_roundtrip",
       (s, dir) => {
         val frag = Staged.fragmentedTicks(s, dir)
-        val tidy = s"${freshWorkDir("graft_compactb_query", dir)}/tidy"
+        val tidy = s"${graft.util.Fs.freshWorkDir("graft_compactb_query", dir)}/tidy"
         val bound = graft.ops.WarehouseOps.compactPartitionsToBytes(
           s, frag, tidy, targetBytesPerFile = 64L << 10)
         s.read.parquet(tidy)

@@ -967,7 +967,7 @@ object RelationalQueries {
     // — applies verbatim.
     Q("streaming_cdf_consume",
       (s, dir) => {
-        val work = graft.util.Fs.workDir("graft_stream_cdf", dir).toString
+        val work = graft.util.Fs.freshWorkDir("graft_stream_cdf", dir)
         graft.streaming.StreamingCdf.consumeAvailableNow(
             s, Staged.snapshotTable(s, dir), work, "o_orderkey")
           .orderBy("o_orderstatus")

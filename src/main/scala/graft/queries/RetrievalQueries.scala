@@ -933,8 +933,7 @@ object RetrievalQueries {
     // table — the batch oracle applies verbatim.
     Q("streaming_bm25_append",
       (s, dir) => {
-        val work = graft.util.Fs.workDir("graft_stream_bm25", dir).toString
-        graft.util.Fs.deleteRec(work)
+        val work = graft.util.Fs.freshWorkDir("graft_stream_bm25", dir)
         val deltas = graft.streaming.StreamingDocApply
           .applyAvailableNow(s, dir, work,
             b => b.filter(isAppendBatch)
@@ -1112,9 +1111,7 @@ object RetrievalQueries {
     // the batch oracle applies verbatim.
     Q("streaming_typo_search",
       (s, dir) => {
-        val work = graft.util.Fs
-          .workDir("graft_stream_typosearch", dir).toString
-        graft.util.Fs.deleteRec(work)
+        val work = graft.util.Fs.freshWorkDir("graft_stream_typosearch", dir)
         // postings rows are already unique per (doc_id, token) — the
         // index is built by groupBy(doc_id, token) — so a .distinct()
         // here was a full no-op shuffle of the 8.6M-row index inside

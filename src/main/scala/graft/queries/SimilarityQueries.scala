@@ -230,6 +230,16 @@ object SimilarityQueries {
         Staged.ivfCentroids(s, dir, 16), GM, GProbe)
     }
 
+  /** The standing graph over the historical slice (vec_id ≢ 0 mod 5)
+    * that `ann_graph_append` extends. */
+  private def annGraphBase(s: org.apache.spark.sql.SparkSession,
+                           dir: String): org.apache.spark.sql.DataFrame =
+    Staged.retrieval(s, dir, "ann_graph_base") {
+      graft.ops.GraphAnnOps.knnGraph(
+        Staged.normCorpus(s, dir).filter(col("vec_id") % 5 =!= 0),
+        Staged.ivfCentroids(s, dir, 16), GM, GProbe)
+    }
+
   /** Graph-build CTE chain (`corpus, cents, granked, gmembers,
     * gedges`) — mirrors GraphAnnOps.knnGraph: per node the top-[[GM]]
     * cosine neighbors among its [[GProbe]] nearest cells' members,
@@ -542,11 +552,7 @@ object SimilarityQueries {
     Staged.pcaModel(s, dir, PcaK, PcaIters)
     jlCands(s, dir).count()
     annGraph(s, dir).count()
-    Staged.retrieval(s, dir, "ann_graph_base") {
-      graft.ops.GraphAnnOps.knnGraph(
-        Staged.normCorpus(s, dir).filter(col("vec_id") % 5 =!= 0),
-        Staged.ivfCentroids(s, dir, 16), GM, GProbe)
-    }.count()
+    annGraphBase(s, dir).count()
     ()
   }
 
@@ -780,8 +786,7 @@ object SimilarityQueries {
       (s, dir) => {
         val (k1, k2) = annIdxParams(s, dir)
         val (superCents, children, _) = Staged.annIndex(s, dir, k1, k2)
-        val work = graft.util.Fs.workDir("graft_stream_ann", dir).toString
-        graft.util.Fs.deleteRec(work)
+        val work = graft.util.Fs.freshWorkDir("graft_stream_ann", dir)
         graft.streaming.StreamingAnn
           .appendAvailableNow(s, dir, work, superCents, children)
           .orderBy("vec_id")
@@ -1058,11 +1063,8 @@ object SimilarityQueries {
         val cents = Staged.ivfCentroids(s, dir, 16)
         val base = corpus.filter(col("vec_id") % 5 =!= 0)
         val batch = corpus.filter(col("vec_id") % 5 === 0)
-        val baseEdges = Staged.retrieval(s, dir, "ann_graph_base") {
-          graft.ops.GraphAnnOps.knnGraph(base, cents, GM, GProbe)
-        }
         graft.ops.GraphAnnOps
-          .knnGraphAppend(baseEdges, base, batch, cents, GM, GProbe)
+          .knnGraphAppend(annGraphBase(s, dir), base, batch, cents, GM, GProbe)
           .orderBy("src", "dst")
       },
       s"""WITH $graphWith

@@ -243,11 +243,10 @@ object Staged {
     * of the corpus bytes. Returns the layout path. */
   def ivfLayout(s: SparkSession, dir: String, nCells: Int): String = {
     stage(s, dir, "ivfLayout", nCells) {
-      val p = graft.util.Fs.workDir("graft_ann_layout", dir + "_" + nCells)
-      graft.util.Fs.deleteRec(p.toString)
+      val p = graft.util.Fs.freshWorkDir("graft_ann_layout", dir + "_" + nCells)
       graft.ops.SimilarityOps.writeCellLayout(
-        normCorpus(s, dir), ivfCentroids(s, dir, nCells), p.toString)
-      p.toString
+        normCorpus(s, dir), ivfCentroids(s, dir, nCells), p)
+      p
     }
   }
 
@@ -290,30 +289,10 @@ object Staged {
   /** Connected-component labels over [[ngramPairs]] — the iterative
     * propagation loop runs once per session+dir; `dedup_clusters` and
     * `corpus_select` both read the staged labels (the label table is
-    * tiny: one row per doc that appears in a near-dup pair).
-    *
-    * The loop's shuffle width is sized to the STAGED pair count — the
-    * cross-action sizing AQE can't do for an iterative cached loop
-    * (each round's task count is otherwise the batch engine's default,
-    * and per-round scheduling dominates on a small label table). */
+    * tiny: one row per doc that appears in a near-dup pair). */
   def dupClusters(s: SparkSession, dir: String, k: Int, th: Double): DataFrame = {
-    stage(s, dir, "dupClusters", k, th) {
-      val pairs = ngramPairs(s, dir, k, th)
-      val nPairs = pairs.count() // cached — cheap, and stages the set
-      val parts = math.max(2, math.min(32, (nPairs / 50000L).toInt + 2))
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      val prevAqe = s.conf.get("spark.sql.adaptive.enabled", "true")
-      s.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      // AQE re-plans every exchange of every round's job from scratch —
-      // pure driver latency once the loop's shuffles are already sized
-      // here (label tables are tiny relative to the pair count bound)
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      try DedupOps.dupClusters(pairs).cache()
-      finally {
-        s.conf.set("spark.sql.shuffle.partitions", prev)
-        s.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      }
-    }
+    stage(s, dir, "dupClusters", k, th)(
+      DedupOps.dupClusters(ngramPairs(s, dir, k, th)).cache())
   }
 
   /** All three tokenizer trainers' shared input: the corpus-wide word-
@@ -461,8 +440,7 @@ object Staged {
   def fragmentedTicks(s: SparkSession, dir: String): String = {
     stage(s, dir, "fragmentedTicks") {
       import org.apache.spark.sql.functions.{col, to_date}
-      val frag = graft.util.Fs.workDir("graft_frag_staged", dir).toString
-      graft.util.Fs.deleteRec(frag)
+      val frag = graft.util.Fs.freshWorkDir("graft_frag_staged", dir)
       graft.ops.TickOps.normalizeEvents(Tables.events(s, dir))
         .withColumn("trade_date", to_date(col("event_ts")))
         .repartition(16)
@@ -555,8 +533,7 @@ object Staged {
     stage(s, dir, "snapshotTable") {
       import org.apache.spark.sql.functions.{col, lit, when}
       import graft.ops.SnapshotOps
-      val path = graft.util.Fs.workDir("graft_snap_staged", dir).toString
-      graft.util.Fs.deleteRec(path)
+      val path = graft.util.Fs.freshWorkDir("graft_snap_staged", dir)
       val v0 = Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       SnapshotOps.initTable(v0, path, "o_orderkey")
@@ -598,8 +575,7 @@ object Staged {
     stage(s, dir, "snapshotConcurrentTable") {
       import org.apache.spark.sql.functions.{col, lit}
       import graft.ops.SnapshotOps
-      val path = graft.util.Fs.workDir("graft_snap_conc", dir).toString
-      graft.util.Fs.deleteRec(path)
+      val path = graft.util.Fs.freshWorkDir("graft_snap_conc", dir)
       val v0 = Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       SnapshotOps.initTable(v0, path, "o_orderkey")
@@ -651,8 +627,7 @@ object Staged {
     stage(s, dir, "snapshotSchemaConcTable") {
       import org.apache.spark.sql.functions.{col, lit}
       import graft.ops.SnapshotOps
-      val path = graft.util.Fs.workDir("graft_snap_schconc", dir).toString
-      graft.util.Fs.deleteRec(path)
+      val path = graft.util.Fs.freshWorkDir("graft_snap_schconc", dir)
       val o = Tables.orders(s, dir).filter(col("o_orderkey") % 3 === 0)
       val v0 = o.select(col("o_orderkey"), col("o_orderstatus"),
         col("o_totalprice"))
@@ -699,8 +674,7 @@ object Staged {
     stage(s, dir, "snapshotEvoTable") {
       import org.apache.spark.sql.functions.{col, lit}
       import graft.ops.SnapshotOps
-      val path = graft.util.Fs.workDir("graft_snap_evo", dir).toString
-      graft.util.Fs.deleteRec(path)
+      val path = graft.util.Fs.freshWorkDir("graft_snap_evo", dir)
       val o = Tables.orders(s, dir).filter(col("o_orderkey") % 3 === 0)
       SnapshotOps.initTable(
         o.select(col("o_orderkey"), col("o_orderstatus"),
@@ -726,8 +700,7 @@ object Staged {
     stage(s, dir, "snapshotVacuumTable") {
       import org.apache.spark.sql.functions.{col, lit}
       import graft.ops.SnapshotOps
-      val path = graft.util.Fs.workDir("graft_snap_vac", dir).toString
-      graft.util.Fs.deleteRec(path)
+      val path = graft.util.Fs.freshWorkDir("graft_snap_vac", dir)
       val o = Tables.orders(s, dir).filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), col("o_orderstatus"),
           col("o_totalprice"))
@@ -759,8 +732,7 @@ object Staged {
     stage(s, dir, "snapshotForgetTable") {
       import org.apache.spark.sql.functions.{col, lit}
       import graft.ops.SnapshotOps
-      val path = graft.util.Fs.workDir("graft_snap_forget", dir).toString
-      graft.util.Fs.deleteRec(path)
+      val path = graft.util.Fs.freshWorkDir("graft_snap_forget", dir)
       val o = Tables.orders(s, dir).filter(col("o_orderkey") % 4 === 0)
         .select(col("o_orderkey"), col("o_orderstatus"),
           col("o_totalprice"))

@@ -440,8 +440,7 @@ object TextQueries {
     // the identical result and the batch oracle applies verbatim.
     Q("streaming_ppl_score",
       (s, dir) => {
-        val work = graft.util.Fs.workDir("graft_stream_ppl", dir).toString
-        graft.util.Fs.deleteRec(work)
+        val work = graft.util.Fs.freshWorkDir("graft_stream_ppl", dir)
         val (big, uni, nv) =
           TextOps.bigramCounts(Tables.documents(s, dir))
         graft.streaming.StreamingDocApply.applyAvailableNow(s, dir, work,
@@ -485,8 +484,7 @@ object TextQueries {
     // oracle applies verbatim; only digests reach the sink.
     Q("streaming_pii_scan",
       (s, dir) => {
-        val work = graft.util.Fs.workDir("graft_stream_pii", dir).toString
-        graft.util.Fs.deleteRec(work)
+        val work = graft.util.Fs.freshWorkDir("graft_stream_pii", dir)
         graft.streaming.StreamingPii
           .scanAvailableNow(s, dir, work, piiAugment)
           .orderBy("doc_id")
@@ -626,8 +624,7 @@ object TextQueries {
     // yields the same rows and the batch oracle applies verbatim.
     Q("streaming_tokenize",
       (s, dir) => {
-        val work = graft.util.Fs.workDir("graft_stream_bpe", dir).toString
-        graft.util.Fs.deleteRec(work)
+        val work = graft.util.Fs.freshWorkDir("graft_stream_bpe", dir)
         val merges = Staged.bpeMerges(s, dir, BpeNMerges)
         graft.streaming.StreamingDocApply.applyAvailableNow(s, dir, work,
             b => graft.ops.BpeOps.tokenizeStats(b, merges))

@@ -124,8 +124,7 @@ object WebQueries {
     // batch oracle applies verbatim.
     Q("streaming_url_canonicalize",
       (s, dir) => {
-        val work = graft.util.Fs.workDir("graft_stream_url", dir).toString
-        graft.util.Fs.deleteRec(work)
+        val work = graft.util.Fs.freshWorkDir("graft_stream_url", dir)
         graft.streaming.StreamingDocApply.applyAvailableNow(s, dir, work,
             b => urlize(b).select(col("doc_id"), col("url"),
               UrlOps.canonicalize(col("url")).as("canon_url"),

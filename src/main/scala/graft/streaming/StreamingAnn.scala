@@ -3,14 +3,13 @@ package graft.streaming
 import graft.ops.SimilarityOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming ANN index maintenance (§2.9 uplift of the batch
   * `ann_index_append` move): an arriving vector stream assigned per
   * micro-batch against the FROZEN two-level quantizer trained on the
   * historical corpus — `SimilarityOps.ivf2AssignBatchNorm` inside
-  * `foreachBatch`, the same machinery as the streaming incremental
-  * dedup screen.
+  * the replay-safe foreachBatch sink, the same machinery as the
+  * streaming incremental dedup screen.
   *
   * Assignment is a per-vector pure function of the frozen
   * (superCents, children) tables, so the result is IDENTICAL under any
@@ -24,36 +23,11 @@ object StreamingAnn {
 
   def appendAvailableNow(spark: SparkSession, dir: String, workDir: String,
                          superCents: DataFrame, children: DataFrame,
-                         maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val out = s"$workDir/assigned"
-    // Seed the sink with an empty frame carrying the true output schema
-    // so a zero-match stream reads back empty instead of path-not-found
-    // (same posture as StreamingDedup.incrementalScreenAvailableNow).
-    SimilarityOps.ivf2AssignBatchNorm(
-        SimilarityOps.normalizedCorpus(
-          graft.Tables.embeddings(spark, dir).limit(0)),
-        superCents, children)
-      .write.mode("append").parquet(out)
-    val reader = spark.readStream
-      .schema(spark.read.parquet(s"$dir/embeddings.parquet").schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val stream = reader.parquet(s"$dir/embeddings.parque*")
-      .filter(col("vec_id") % 5 === 0)
-    // state-sized shuffle partitions: micro-batches are ~one file, so
-    // per-trigger task count (not scan width) dominates the cost —
-    // same sizing rationale as StreamingConf's stateful queries.
-    StreamingConf.withStatePartitions(spark) {
-      val q = stream.writeStream
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          SimilarityOps.ivf2AssignBatchNorm(
-              SimilarityOps.normalizedCorpus(b), superCents, children)
-            .write.mode("append").parquet(out)
-        }
-        .option("checkpointLocation", s"$workDir/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+                         maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    StreamingConf.replaySafeAvailableNow(
+      StreamingConf.tableStream(spark, dir, "embeddings", maxFilesPerTrigger)
+        .filter(col("vec_id") % 5 === 0), workDir) { b =>
+      SimilarityOps.ivf2AssignBatchNorm(
+        SimilarityOps.normalizedCorpus(b), superCents, children)
     }
-    spark.read.parquet(out)
-  }
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.ops.TickOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming exact deduplication (§2.9 uplift of the dedup family):
   * `dropDuplicatesWithinWatermark` over the normalized tick stream.
@@ -37,9 +36,9 @@ object StreamingDedup {
     * state, no watermark, nothing to evict; the only state is the
     * static corpus version pinned at query start).
     *
-    * Batch results land in an append parquet sink (foreachBatch — the
-    * op is a multi-join batch transformation, exactly what foreachBatch
-    * exists for); the returned frame reads the sink back. */
+    * Batch results land in the replay-safe foreachBatch sink (the op is
+    * a multi-join batch transformation, exactly what foreachBatch exists
+    * for); the returned frame reads the sink back. */
   def incrementalScreenAvailableNow(spark: SparkSession, dir: String,
                                     workDir: String, k: Int, nHashes: Int,
                                     bandSize: Int, threshold: Double,
@@ -56,38 +55,14 @@ object StreamingDedup {
       nHashes, bandSize).cache()
     val shingles = corpus.select(col("doc_id").as("cand_id"),
       DedupOps.fastShingles(corpus, k, "text").as("csh")).cache()
-    val out = s"$workDir/screened"
-    // Seed the sink with an EMPTY frame carrying the true output schema:
-    // if the stream side matches zero documents (no doc_id % 5 == 0 in
-    // some future fixture), foreachBatch never writes and the read-back
-    // below would throw path-not-found instead of returning an empty
-    // result. An empty screen of an empty batch is the cheapest way to
-    // get the exact schema parquet-registered up front.
-    DedupOps.dedupIncrementalStaged(digests, bands, shingles,
-        docs.limit(0), k, nHashes, bandSize, threshold)
-      .write.mode("append").parquet(out)
-    val reader = spark.readStream
-      .schema(spark.read.parquet(s"$dir/documents.parquet").schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val stream = reader.parquet(s"$dir/documents.parque*")
-      .filter(col("doc_id") % 5 === 0)
-    // state-sized shuffle partitions: the per-batch screen joins a
-    // ~one-file micro-batch against the staged artifacts — trigger
-    // cost scales with tasks, not data (round-12 experiment).
-    StreamingConf.withStatePartitions(spark) {
-      val q = stream.writeStream
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          DedupOps.dedupIncrementalStaged(digests, bands, shingles, b,
-              k, nHashes, bandSize, threshold)
-            .write.mode("append").parquet(out)
-        }
-        .option("checkpointLocation", s"$workDir/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    val screened = StreamingConf.replaySafeAvailableNow(
+      StreamingConf.tableStream(spark, dir, "documents", maxFilesPerTrigger)
+        .filter(col("doc_id") % 5 === 0), workDir) { b =>
+      DedupOps.dedupIncrementalStaged(digests, bands, shingles, b,
+        k, nHashes, bandSize, threshold)
     }
     Seq(digests, bands, shingles).foreach(_.unpersist())
-    spark.read.parquet(out)
+    screened
   }
 
   /** Distinct (symbol, second) pairs from the event stream; AvailableNow
@@ -98,20 +73,12 @@ object StreamingDedup {
                                 queryName: String = "streaming_dedup",
                                 maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val ticks = TickOps.normalizeEvents(
-      StreamingOhlc.rawEventStream(spark, dir, maxFilesPerTrigger))
-    StreamingConf.withStatePartitions(spark) {
-      val q = ticks
+      StreamingConf.tableStream(spark, dir, "events", maxFilesPerTrigger))
+    StreamingConf.runAvailableNow(
+      ticks
         .select(col("symbol"), date_trunc("second", col("event_ts")).as("ts_sec"))
         .withWatermark("ts_sec", "24 hours")
-        .dropDuplicatesWithinWatermark("symbol", "ts_sec")
-        .writeStream
-        .format("memory")
-        .queryName(queryName)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(queryName)
+        .dropDuplicatesWithinWatermark("symbol", "ts_sec"),
+      queryName, "append")
   }
 }

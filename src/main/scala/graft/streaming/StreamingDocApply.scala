@@ -1,60 +1,26 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 
-/** Generic per-row-pure document-stream apply with a REPLAY-SAFE
-  * append sink — the machinery behind the streaming twins of batch
-  * document passes (`streaming_pii_scan`, `streaming_tokenize`): the
-  * documents table streams in micro-batches, each batch runs the SAME
-  * pure per-row transform the batch query uses, and results land in a
-  * `batch_id=N`-keyed parquet sink.
+/** Generic per-row-pure document-stream apply — the machinery behind the
+  * streaming twins of batch document passes (`streaming_pii_scan`,
+  * `streaming_tokenize`): the documents table streams in micro-batches,
+  * each batch runs the SAME pure per-row transform the batch query uses,
+  * and results land in [[StreamingConf.replaySafeAvailableNow]]'s
+  * `batch_id=N`-keyed sink.
   *
   * Because the transform is per-row pure (no state, no watermark), any
   * micro-batch slicing yields the identical row set and the BATCH
-  * oracle applies verbatim to the streamed result. Replay safety: a
-  * batch directory already carrying a _SUCCESS marker is a redelivered
-  * micro-batch (foreachBatch's at-least-once contract) and is skipped;
-  * a partial directory (crash mid-write) is cleared and rewritten —
-  * so duplicate delivery cannot append duplicate rows. */
+  * oracle applies verbatim to the streamed result; a redelivered batch
+  * cannot append duplicate rows. */
 object StreamingDocApply {
 
-  /** Stream `dir`'s documents through `transform` into
-    * `workDir`/applied and return the read-back result. `transform`
-    * must be per-row pure; its output schema seeds the sink so a
-    * zero-row stream reads back empty instead of path-not-found. */
+  /** Stream `dir`'s documents through `transform` into a sink under
+    * `workDir` and return the read-back result. `transform` must be
+    * per-row pure. */
   def applyAvailableNow(spark: SparkSession, dir: String, workDir: String,
                         transform: DataFrame => DataFrame,
-                        maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val out = s"$workDir/applied"
-    transform(graft.Tables.documents(spark, dir).limit(0))
-      .write.mode("append").parquet(s"$out/batch_id=-1")
-    val reader = spark.readStream
-      .schema(spark.read.parquet(s"$dir/documents.parquet").schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val stream = reader.parquet(s"$dir/documents.parque*")
-    // foreachBatch pays a fixed per-trigger cost per TASK (micro-batch
-    // planning + commit), and each micro-batch carries ~one file of
-    // data — so shuffles inside `transform` are sized for state, not
-    // the batch engine's scan width (round-12 controlled experiment:
-    // the foreachBatch family runs ~2× slower at local[32] vs local[8]
-    // purely from tasks-per-trigger).
-    StreamingConf.withStatePartitions(spark) {
-      val q = stream.writeStream
-        .foreachBatch { (b: DataFrame, batchId: Long) =>
-          val dest = s"$out/batch_id=$batchId"
-          if (!java.nio.file.Files.exists(
-              java.nio.file.Paths.get(dest, "_SUCCESS"))) {
-            graft.util.Fs.deleteRec(dest)
-            transform(b).write.mode("overwrite").parquet(dest)
-          }
-        }
-        .option("checkpointLocation", s"$workDir/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    // batch_id is sink bookkeeping (partition-discovered), not output
-    spark.read.parquet(out).drop("batch_id")
-  }
+                        maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    StreamingConf.replaySafeAvailableNow(StreamingConf.tableStream(
+      spark, dir, "documents", maxFilesPerTrigger), workDir)(transform)
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.ops.TickOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Stream-stream inner join (§2.9 uplift of the join family): big trades
   * joined to the same symbol's follow-on trades within a bounded
@@ -30,23 +29,18 @@ object StreamingJoin {
       ("click", "web"), ("view", "web"), ("purchase", "commerce"),
       ("signup", "commerce"), ("error", "ops"))
       .toDF("symbol", "sector")
-    val ticks = TickOps.normalizeEvents(StreamingOhlc.rawEventStream(spark, dir))
+    val ticks = TickOps.normalizeEvents(
+      StreamingConf.tableStream(spark, dir, "events"))
     // LEFT join + default bucket: a symbol missing from the dimension
     // keeps its rows (sector 'ops'), matching the oracle's CASE ... ELSE
     // semantically — an inner join would only agree while the fixture's
     // symbol domain exactly covers the dim keys
-    val q = ticks
-      .join(org.apache.spark.sql.functions.broadcast(dim), Seq("symbol"), "left")
-      .select(col("event_id"), col("symbol"),
-        coalesce(col("sector"), lit("ops")).as("sector"), col("price"))
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+    StreamingConf.runAvailableNow(
+      ticks
+        .join(org.apache.spark.sql.functions.broadcast(dim), Seq("symbol"), "left")
+        .select(col("event_id"), col("symbol"),
+          coalesce(col("sector"), lit("ops")).as("sector"), col("price")),
+      queryName, "append")
   }
 
   /** Time-bounded LEFT OUTER stream-stream join over arbitrary streaming
@@ -72,13 +66,13 @@ object StreamingJoin {
                             threshold: Double, windowSec: Int,
                             maxFilesPerTrigger: Option[Int]): DataFrame = {
     val a = TickOps.normalizeEvents(
-        StreamingOhlc.rawEventStream(spark, dir, maxFilesPerTrigger))
+        StreamingConf.tableStream(spark, dir, "events", maxFilesPerTrigger))
       .filter(col("price") >= threshold)
       .select(col("symbol"), col("event_ts").as("a_ts"),
         col("event_id").as("a_id"))
       .withWatermark("a_ts", "2 hours")
     val b = TickOps.normalizeEvents(
-        StreamingOhlc.rawEventStream(spark, dir, maxFilesPerTrigger))
+        StreamingConf.tableStream(spark, dir, "events", maxFilesPerTrigger))
       .select(col("symbol").as("symbol_b"), col("event_ts").as("b_ts"),
         col("event_id").as("b_id"))
       .withWatermark("b_ts", "2 hours")
@@ -107,20 +101,11 @@ object StreamingJoin {
     // the restartable file sink (bigTradeFollowersToFiles) and the
     // left-outer spec path keep the default (cleanup and null
     // emission matter when state outlives the run).
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevNd = spark.conf.get(ndKey)
-    spark.conf.set(ndKey, "false")
-    try StreamingConf.withStatePartitions(spark) {
-      val q = followersPlan(spark, dir, threshold, windowSec, None)
-        .writeStream
-        .format("memory")
-        .queryName(queryName)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set(ndKey, prevNd)
-    spark.table(queryName)
+    StreamingConf.withConf(spark,
+        "spark.sql.streaming.noDataMicroBatches.enabled", "false") {
+      StreamingConf.runAvailableNow(
+        followersPlan(spark, dir, threshold, windowSec, None), queryName, "append")
+    }
   }
 
   /** PRODUCTION sink for the stream-stream join: append parquet + durable
@@ -134,18 +119,14 @@ object StreamingJoin {
                                windowSec: Int = 3600,
                                queryName: String = "streaming_join_files",
                                maxFilesPerTrigger: Option[Int] = None): String = {
-    StreamingConf.withStatePartitions(spark) {
-      val q = followersPlan(spark, dir, threshold, windowSec, maxFilesPerTrigger)
+    StreamingConf.runAvailableNow(spark,
+      followersPlan(spark, dir, threshold, windowSec, maxFilesPerTrigger)
         .writeStream
         .format("parquet")
         .option("path", s"$outDir/pairs")
         .option("checkpointLocation", s"$outDir/checkpoint")
         .queryName(queryName)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+        .outputMode("append"))
     s"$outDir/pairs"
   }
 }

@@ -3,8 +3,6 @@ package graft.streaming
 import graft.ops.TickOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types._
 
 /** Structured-Streaming twin of the batch OHLC path (SURVEY.md §2.9).
   *
@@ -19,29 +17,12 @@ import org.apache.spark.sql.types._
   */
 object StreamingOhlc {
 
-  /** The raw events table as a file stream (shared by every streaming
-    * operator, including the sessionizer and funnel entry points): the
-    * explicit schema streaming requires is read from the parquet footer
-    * via [[graft.Tables.eventsOnDiskSchema]] — one source of truth with
-    * the batch reader, so a fixture schema change cannot silently null
-    * out columns here — plus the shared ns→µs shim. `maxFilesPerTrigger`
-    * bounds each micro-batch (multi-file fixtures then exercise real
-    * cross-batch watermark advancement instead of one catch-all batch). */
-  private[graft] def rawEventStream(spark: SparkSession, dir: String,
-                                    maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    // the file-stream source wants a directory or glob, not a bare file —
-    // a glob that matches exactly the events table keeps it happy
-    val reader = spark.readStream.schema(graft.Tables.eventsOnDiskSchema(spark, dir))
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    graft.Tables.normalizeTs(reader.parquet(s"$dir/events.parque*"))
-  }
-
   /** The incremental hourly-bars plan (shared by every sink): watermarked
     * tumbling-window aggregation over the normalized tick stream. */
   def hourlyBarsStream(spark: SparkSession, dir: String,
                        maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val ticks = TickOps.normalizeEvents(
-      rawEventStream(spark, dir, maxFilesPerTrigger))
+      StreamingConf.tableStream(spark, dir, "events", maxFilesPerTrigger))
     // (ts, event_id) composite argmin/argmax key — the batch twin's
     // tie-break, so a stream replaying same-timestamp ticks in any
     // micro-batch order finalizes identical bars
@@ -65,17 +46,13 @@ object StreamingOhlc {
   def hourlyOhlcToFiles(spark: SparkSession, dir: String, outDir: String,
                         queryName: String = "streaming_ohlc_files",
                         maxFilesPerTrigger: Option[Int] = None): String = {
-    StreamingConf.withStatePartitions(spark) {
-      val q = hourlyBarsStream(spark, dir, maxFilesPerTrigger).writeStream
+    StreamingConf.runAvailableNow(spark,
+      hourlyBarsStream(spark, dir, maxFilesPerTrigger).writeStream
         .format("parquet")
         .option("path", s"$outDir/bars")
         .option("checkpointLocation", s"$outDir/checkpoint")
         .queryName(queryName)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+        .outputMode("append"))
     s"$outDir/bars"
   }
 
@@ -83,16 +60,7 @@ object StreamingOhlc {
     * the FULL result (including still-open trailing bars) back
     * synchronously for the oracle compare. */
   def hourlyOhlcAvailableNow(spark: SparkSession, dir: String,
-                             queryName: String = "streaming_ohlc"): DataFrame = {
-    StreamingConf.withStatePartitions(spark) {
-      val q = hourlyBarsStream(spark, dir).writeStream
-        .format("memory")
-        .queryName(queryName)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(queryName)
-  }
+                             queryName: String = "streaming_ohlc"): DataFrame =
+    StreamingConf.runAvailableNow(hourlyBarsStream(spark, dir), queryName,
+      "complete")
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.ops.TickOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming quality-check sinks (SURVEY.md §2.9: "QC checks become
   * foreachBatch sinks"): each micro-batch of the tick stream fans out to
@@ -22,27 +21,21 @@ object StreamingQc {
     val quarantine = s"$workDir/quarantine"
     val summary = s"$workDir/summary"
     val ticks = TickOps.normalizeEvents(
-      StreamingOhlc.rawEventStream(spark, dir, maxFilesPerTrigger))
+      StreamingConf.tableStream(spark, dir, "events", maxFilesPerTrigger))
     val qcCols = Seq("price", "qty", "trader_id")
-
-    StreamingConf.withStatePartitions(spark) {
-      val q = ticks.writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val b = batch.cache()
-          TickOps.invalidRows(b, qcCols)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(quarantine)
-          graft.ops.QualityOps.invalidSummary(b, qcCols, "symbol")
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(summary)
-          b.unpersist()
-          ()
-        }
-        .start()
-      q.awaitTermination()
-    }
+    StreamingConf.runAvailableNow(spark, ticks.writeStream
+      .outputMode("append")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val b = batch.cache()
+        TickOps.invalidRows(b, qcCols)
+          .withColumn("batch_id", lit(batchId))
+          .write.mode("append").parquet(quarantine)
+        graft.ops.QualityOps.invalidSummary(b, qcCols, "symbol")
+          .withColumn("batch_id", lit(batchId))
+          .write.mode("append").parquet(summary)
+        b.unpersist()
+        ()
+      })
     (quarantine, summary)
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming per-domain quota admission (§2.9 uplift of
   * `domain_quota_sample`): the crawl-frontier quota as it actually runs
@@ -77,19 +77,9 @@ object StreamingQuota {
                               derive: DataFrame => DataFrame,
                               queryName: String = "stream_quota"): DataFrame = {
     import spark.implicits._
-    val stream = spark.readStream
-      .schema(spark.read.parquet(s"$dir/documents.parquet").schema)
-      .parquet(s"$dir/documents.parque*")
-    val pairs = derive(stream)
+    val pairs = derive(StreamingConf.tableStream(spark, dir, "documents"))
       .select(col("domain"), col("doc_id")).as[(String, Long)]
-    StreamingConf.withStatePartitions(spark) {
-      val q = quotaStream(pairs, quota)
-        .writeStream.format("memory").queryName(queryName)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(queryName)
+    StreamingConf.runAvailableNow(quotaStream(pairs, quota).toDF(),
+      queryName, "append")
   }
 }

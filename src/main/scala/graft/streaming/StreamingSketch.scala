@@ -3,12 +3,12 @@ package graft.streaming
 import graft.ops.SketchOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming HyperLogLog register maintenance (§2.9 uplift of the batch
   * `distinct_users_hll`): each micro-batch computes its own per-(day,
-  * bucket) register maxima and appends them to a register log; the
-  * read-back MAX-merges the log into the current registers.
+  * bucket) register maxima and writes them to a register log through the
+  * replay-safe foreachBatch sink; the read-back MAX-merges the log into
+  * the current registers.
   *
   * MAX is associative, commutative, and idempotent, so the merged
   * registers are IDENTICAL to the batch computation's under any
@@ -25,42 +25,17 @@ object StreamingSketch {
                                workDir: String, m: Int,
                                maxFilesPerTrigger: Option[Int] = None)
       : DataFrame = {
-    val out = s"$workDir/registers"
-    def registersOf(b: DataFrame): DataFrame =
+    // to_date() needs the normalized ts the events stream carries: the
+    // raw nanos-long footer shape broke it (round-9 registry sweep)
+    val log = StreamingConf.replaySafeAvailableNow(
+      StreamingConf.tableStream(spark, dir, "events", maxFilesPerTrigger),
+      workDir) { b =>
       SketchOps.hllRegisters(
         b.select(to_date(col("ts")).as("trade_date"), col("user_id")),
         col("trade_date"), col("user_id"), m)
-    // Seed the sink with an empty frame carrying the register schema so
-    // a zero-row stream reads back empty instead of path-not-found
-    // (same posture as the other foreachBatch sinks).
-    registersOf(graft.Tables.events(spark, dir).limit(0))
-      .write.mode("append").parquet(out)
-    // Schema + ts normalization through the ONE source of truth
-    // (Tables.eventsOnDiskSchema / normalizeTs): the fixture's ts
-    // physical type has shipped as TIMESTAMP(NANOS) (long under
-    // nanosAsLong), TIMESTAMP(MICROS)/NTZ, and LTZ — reading the raw
-    // footer schema here without normalizing broke to_date() on the
-    // nanos-long shape (caught by the round-9 full-registry ×10 sweep;
-    // StreamingOhlc always did it right).
-    val reader = spark.readStream
-      .schema(graft.Tables.eventsOnDiskSchema(spark, dir))
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val stream = graft.Tables.normalizeTs(reader.parquet(s"$dir/events.parque*"))
-    // state-sized shuffle partitions for the per-trigger register agg
-    // (micro-batches are ~one file; task count dominates trigger cost)
-    StreamingConf.withStatePartitions(spark) {
-      val q = stream.writeStream
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          registersOf(b).write.mode("append").parquet(out)
-        }
-        .option("checkpointLocation", s"$workDir/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
     }
     // the merge: MAX over every appended register generation
-    spark.read.parquet(out)
-      .groupBy(col("grp"), col("bucket"))
+    log.groupBy(col("grp"), col("bucket"))
       .agg(max(col("r")).as("r"))
   }
 }

@@ -11,6 +11,14 @@ object Fs {
     Paths.get(System.getProperty("java.io.tmpdir"), prefix,
       java.lang.Integer.toHexString(dir.hashCode))
 
+  /** [[workDir]], emptied: a run that must start from nothing any
+    * earlier run left behind. */
+  def freshWorkDir(prefix: String, dir: String): String = {
+    val p = workDir(prefix, dir).toString
+    deleteRec(p)
+    p
+  }
+
   /** Atomically publish `content` at `target`: write a temp sibling,
     * then move into place. A killed run leaves no partial file a later
     * idempotence check could mistake for the real one. */

@@ -41,13 +41,23 @@ class QueriesSmokeSpec extends AnyFunSuite with SparkTestBase
     spark.catalog.clearCache()
   }
 
+  // the session confs a query must leave as it found them; Tables.events
+  // sets nanosAsLong for the session on purpose
+  private def confs(): Map[String, String] =
+    spark.conf.getAll - "spark.sql.legacy.parquet.nanosAsLong"
+
   smoked.foreach { q =>
     test(s"query ${q.name} executes at sf0.001") {
+      val before = confs()
       val df = q.fn(spark, sf)
       val plan = df.queryExecution.explainString(FormattedMode)
       plans(q.name) = plan
       assert(df.columns.nonEmpty)
       assert(df.count() >= 0)
+      val after = confs()
+      assert(after == before, s"${q.name} left session confs changed: " +
+        (before.keySet ++ after.keySet).filter(k => before.get(k) != after.get(k))
+          .map(k => s"$k: ${before.get(k)} -> ${after.get(k)}").mkString(", "))
       val unlisted = PlanLint.hasNestedLoopJoin(plan) &&
         !PlanLint.BoundedNonEquiJoins.contains(q.name)
       assert(!unlisted,

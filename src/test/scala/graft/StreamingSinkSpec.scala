@@ -262,22 +262,85 @@ class StreamingSinkSpec extends AnyFunSuite with SparkTestBase {
     assert(streamed.except(batch).isEmpty && batch.except(streamed).isEmpty)
   }
 
+  /** documents, embeddings and events as 4 files each, with modTimes
+    * pinned to the part order, so maxFilesPerTrigger=1 yields 4
+    * micro-batches and a rerun slices them the same way. */
+  private lazy val replaySrc: String = {
+    val base = s"${System.getProperty("java.io.tmpdir")}/graft_replay_src"
+    deleteRec(base)
+    Seq("documents" -> Tables.documents(spark, sf),
+        "embeddings" -> Tables.embeddings(spark, sf),
+        "events" -> Tables.events(spark, sf)).foreach { case (t, df) =>
+      df.repartition(4).write.parquet(s"$base/$t.parquet")
+      new java.io.File(s"$base/$t.parquet").listFiles()
+        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+        .zipWithIndex.foreach { case (f, i) =>
+          f.setLastModified(1700000000000L + i * 60000L)
+        }
+    }
+    base
+  }
+
+  /** Every operator on the replay-safe foreachBatch sink, as
+    * (name, work dir => streamed result). */
+  private lazy val sinkInputs: Seq[(String, String => org.apache.spark.sql.DataFrame)] = {
+    import graft.streaming._
+    val one = Some(1)
+    val (superCents, children, _) = graft.queries.Staged.annIndex(spark, sf, 2, 2)
+    Seq(
+      "pii" -> (w => StreamingPii.scanAvailableNow(spark, replaySrc, w,
+        _.select(col("doc_id"), col("text")), one)),
+      "ann append" -> (w => StreamingAnn.appendAvailableNow(spark, replaySrc,
+        w, superCents, children, one)),
+      "dedup screen" -> (w => StreamingDedup.incrementalScreenAvailableNow(
+        spark, replaySrc, w, 3, 16, 2, 0.5, one)),
+      "hll registers" -> (w => StreamingSketch.hllRegistersAvailableNow(
+        spark, replaySrc, w, 64, one)),
+      "cdf consumer" -> (w => StreamingCdf.consumeAvailableNow(spark,
+        graft.queries.Staged.snapshotTable(spark, sf), w, "o_orderkey")))
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
   test("streaming PII sink is replay-safe: redelivered batches don't duplicate") {
-    val work = s"${System.getProperty("java.io.tmpdir")}/graft_pii_replay"
-    deleteRec(work)
-    val aug = (df: org.apache.spark.sql.DataFrame) =>
-      df.select(col("doc_id"), col("text"))
-    val n1 = graft.streaming.StreamingPii
-      .scanAvailableNow(spark, sf, work, aug).count()
-    assert(n1 > 0, "first run scanned nothing")
-    // wipe the checkpoint but keep the sink: the rerun redelivers every
-    // micro-batch with the same batchIds — exactly foreachBatch's
-    // at-least-once failure mode. The batchId-keyed sink must skip the
-    // already-committed directories instead of appending duplicates.
-    deleteRec(s"$work/ckpt")
-    val r2 = graft.streaming.StreamingPii
-      .scanAvailableNow(spark, sf, work, aug)
-    assert(r2.count() == n1, "replayed batches appended duplicate rows")
-    assert(r2.select("doc_id").distinct().count() == n1)
+    sinkInputs.foreach { case (name, run) =>
+      val work = s"${System.getProperty("java.io.tmpdir")}/graft_replay_${name.replace(' ', '_')}"
+      deleteRec(work)
+      val first = rows(run(work))
+      assert(first.nonEmpty, s"$name: first run returned nothing")
+      // wipe the checkpoint but keep the sink: the rerun redelivers every
+      // micro-batch with the same batchIds — exactly foreachBatch's
+      // at-least-once failure mode. The sink must skip the batches it
+      // already committed instead of appending duplicates.
+      deleteRec(s"$work/ckpt")
+      val again = rows(run(work))
+      if (again != first)
+        fail(s"$name: replayed batches changed the result: ${first.size} " +
+          s"rows first, ${again.size} after the replay")
+    }
+  }
+
+  test("streaming sink restart after a crash mid-batch returns the first run's rows") {
+    sinkInputs.foreach { case (name, run) =>
+      val work = s"${System.getProperty("java.io.tmpdir")}/graft_crash_${name.replace(' ', '_')}"
+      deleteRec(work)
+      val first = rows(run(work))
+      assert(first.nonEmpty, s"$name: first run returned nothing")
+      // the crash: the last batch's output is partly written (files, no
+      // _SUCCESS) and its commit never reached the checkpoint, so the
+      // restart re-executes that batch into its partial directory
+      val commits = new java.io.File(s"$work/ckpt/commits")
+      val last = commits.list().filter(_.forall(_.isDigit)).map(_.toLong).max
+      Seq(s"$last", s".$last.crc").foreach(f => new java.io.File(commits, f).delete())
+      val partial = s"$work/sink/batch_id=$last"
+      assert(new java.io.File(s"$partial/_SUCCESS").delete(),
+        s"$name: batch $last left no _SUCCESS to remove")
+      new java.io.File(s"$partial/._SUCCESS.crc").delete()
+      val again = rows(run(work))
+      if (again != first)
+        fail(s"$name: restart after a partial batch $last changed the " +
+          s"result: ${first.size} rows first, ${again.size} after the restart")
+    }
   }
 }
