@@ -42,10 +42,12 @@ object Tables {
   /** The events fixture's on-disk schema, read from the parquet footer —
     * the ONE source of truth for streaming readers (which must pass an
     * explicit schema; hard-coding it would silently yield nulls if the
-    * fixture schema drifted). */
+    * fixture schema drifted). Read through the plain table path: a glob
+    * here makes Spark probe it as a literal streaming-sink metadata path
+    * and log a FileNotFoundException stack trace per call. */
   def eventsOnDiskSchema(spark: SparkSession, dir: String): org.apache.spark.sql.types.StructType = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$dir/events.parque*").schema
+    load(spark, dir, "events").schema
   }
   def lineitem(spark: SparkSession, dir: String): DataFrame   = load(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame     = load(spark, dir, "orders")

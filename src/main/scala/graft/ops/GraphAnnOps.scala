@@ -19,9 +19,9 @@ import org.apache.spark.sql.functions._
   * kNN edges within each shard's candidate set, union), every ranking
   * tie-breaks on (rounded-6dp cosine DESC, id ASC), the search runs a
   * FIXED number of supersteps (Pregel-as-joins, the GraphOps
-  * discipline) with a fixed beam width, and the entry point is the
-  * corpus's min vec_id (production pins the medoid; the pin is what
-  * matters for replay).
+  * discipline) with a fixed beam width, and the entry point is pinned
+  * by the caller to the corpus's min vec_id (production pins the
+  * medoid; the pin is what matters for replay).
   *
   * Scale posture: the build never goes all-pairs — per node the
   * candidate set is its `buildProbe` nearest cells' members (Σ|cell|²
@@ -144,33 +144,22 @@ object GraphAnnOps {
     untouched.unionByName(recomputed)
   }
 
-  /** Beam search over a [[knnGraph]] edge table: `steps` supersteps,
-    * each keeping the `beam` best nodes (by cosine to the query, ties
-    * id ASC) of the current beam ∪ its out-neighbors; the answer is
-    * the top-`k` of the final beam, self excluded (the ANN-family
-    * convention). The beam-keep rule is monotone — a kept node is
-    * never worse than a dropped one — so fixed-step replay needs no
-    * visited-set state, which is exactly what lets the oracle unroll
+  /** Beam search over a [[knnGraph]] edge table: every query's walk
+    * starts at `entryId` (the corpus's min vec_id by convention — the
+    * caller derives it once per corpus, e.g. queries.Staged.corpusMinId,
+    * so no search pays a driver job for it), then runs `steps`
+    * supersteps, each keeping the `beam` best nodes (by cosine to the
+    * query, ties id ASC) of the current beam ∪ its out-neighbors; the
+    * answer is the top-`k` of the final beam, self excluded (the
+    * ANN-family convention). The beam-keep rule is monotone — a kept
+    * node is never worse than a dropped one — so fixed-step replay needs
+    * no visited-set state, which is exactly what lets the oracle unroll
     * the same supersteps as plain CTEs. With `snapshotEachStep` the
     * walk additionally emits the top-k AFTER EVERY superstep, labeled
     * by step — the steps tuning curve's input, at the cost of one walk
     * (the per-step snapshots share the prefix; rows gain a leading
     * `steps` column). */
-  /** The walk's entry point (min vec_id), memoized per corpus
-    * DataFrame INSTANCE (same discipline as the collected-centroid
-    * memo in SimilarityOps: the staged corpus is one immutable
-    * instance per session, and every beam-search consumer paid one
-    * driver job per call to re-derive the same scalar; a fresh corpus
-    * frame still computes it). */
-  private val minIdMemo =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[DataFrame, java.lang.Long]())
-
-  private def minVecId(corpus: DataFrame): Long =
-    minIdMemo.computeIfAbsent(corpus,
-      c => Long.box(c.agg(min(col("vec_id"))).head().getLong(0)))
-
-  def beamSearchTopK(corpus: DataFrame, graph: DataFrame,
+  def beamSearchTopK(corpus: DataFrame, graph: DataFrame, entryId: Long,
                      queryIds: Seq[Long], beam: Int, steps: Int,
                      k: Int, snapshotEachStep: Boolean = false): DataFrame = {
     require(steps >= 1 && beam >= 1 && k >= 1,
@@ -208,17 +197,12 @@ object GraphAnnOps {
     def topkOf(frontier: Seq[(Long, Long)]): DataFrame = {
       val fDf = frontier.toDF("query_id", "node")
         .filter(col("node") =!= col("query_id"))
-      nodes
+      SimilarityOps.topKPerQuery(nodes
         .join(broadcast(fDf), Seq("node"))
         .join(broadcast(queries), Seq("query_id"))
         .select(col("query_id"), col("node").as("neighbor_id"),
-          dotCosine(col("q_emb"), col("n_emb")).as("cosine_sim"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("query_id"))
-            .orderBy(col("cosine_sim").desc, col("neighbor_id").asc)))
-        .filter(col("rank") <= k)
+          dotCosine(col("q_emb"), col("n_emb")).as("cosine_sim")), k)
     }
-    val entryId = minVecId(corpus)
     var frontier: Seq[(Long, Long)] = queryIds.map(q => (q, entryId))
     val perStep = (1 to steps).map { t =>
       frontier = step(frontier)

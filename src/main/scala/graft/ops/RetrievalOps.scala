@@ -75,7 +75,16 @@ object RetrievalOps {
           9).as("idf"))
 
   /** Score a query term-set against the postings and keep the top-k
-    * candidates per query.
+    * candidates per query, over EXTERNALLY supplied one-row stats
+    * ([[bm25Stats]]) and per-token idf ([[bm25Idf]]) tables — the
+    * production index-serving shape (df/idf and the corpus stats ship
+    * WITH an inverted index; recomputing them per probe re-scans the
+    * index). The registered queries pass their session-staged index;
+    * the capped-index eval derives a capped idf from the staged df
+    * instead of re-aggregating the capped postings (guide §2.3). Only
+    * tokens present in `idf` can contribute, so passing a SUBSET
+    * vocabulary's idf prunes the same postings a pre-joined subset
+    * index would.
     *
     * @param qterms (query_id, token) DISTINCT pairs — the bag-of-unique-
     *               terms query model; tiny, broadcast twice (into the
@@ -85,22 +94,6 @@ object RetrievalOps {
     *               set (snippet self-retrieval wants it; doc-similarity
     *               search excludes it like every ANN twin).
     */
-  def bm25TopK(postings: DataFrame, qterms: DataFrame, k: Int,
-               includeSelf: Boolean): DataFrame = {
-    val stats = bm25Stats(postings)
-    bm25TopKWith(postings, stats, bm25Idf(postings, stats), qterms, k,
-      includeSelf)
-  }
-
-  /** [[bm25TopK]] over EXTERNALLY supplied one-row stats and per-token
-    * idf tables — the production index-serving shape (df/idf and the
-    * corpus stats ship WITH an inverted index; recomputing them per
-    * probe re-scans the index). The registered queries pass their
-    * session-staged index; the capped-index eval derives a capped idf
-    * from the staged df instead of re-aggregating the capped postings
-    * (guide §2.3). The probe's semantics are unchanged: only tokens
-    * present in `idf` can contribute, so passing a SUBSET vocabulary's
-    * idf prunes the same postings a pre-joined subset index would. */
   def bm25TopKWith(postings: DataFrame, stats: DataFrame, idf: DataFrame,
                    qterms: DataFrame, k: Int,
                    includeSelf: Boolean): DataFrame = {
@@ -117,16 +110,12 @@ object RetrievalOps {
         lit(B.toDouble) * (col("dl") / col("avgdl"))), 9)
     val contrib9 = round(
       col("idf") * ((col("tf") * lit(K1p1.toDouble)) / (col("tf") + norm9)), 9)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    cands
+    SimilarityOps.topKPerQuery(cands
       .select(col("query_id"), col("doc_id").as("neighbor_id"),
         contrib9.as("c"))
       .groupBy(col("query_id"), col("neighbor_id"))
       .agg(round(sum(col("c").cast(DecimalType(30, 9))).cast("double"), 6)
-        .as("score"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+        .as("score")), k, "score")
   }
 
   /** Exact cosine over 6-dp-rounded unit vectors, boundary-proof: the
@@ -224,16 +213,13 @@ object RetrievalOps {
         Seq("dtoken"))
       .groupBy(col("qterm"), col("doc_id"))
       .agg(max(col("cos")).as("ms"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    qterms.select(col("query_id"), col("token").as("qterm")).distinct()
-      .join(ms, Seq("qterm"))
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(round(sum(col("ms").cast(DecimalType(30, 12))), 6)
-        .cast("double").as("score"))
-      .withColumnRenamed("doc_id", "neighbor_id")
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    SimilarityOps.topKPerQuery(
+      qterms.select(col("query_id"), col("token").as("qterm")).distinct()
+        .join(ms, Seq("qterm"))
+        .groupBy(col("query_id"), col("doc_id"))
+        .agg(round(sum(col("ms").cast(DecimalType(30, 12))), 6)
+          .cast("double").as("score"))
+        .withColumnRenamed("doc_id", "neighbor_id"), k, "score")
   }
 
   /** Merge a document-frequency delta into a standing df table and
@@ -275,12 +261,10 @@ object RetrievalOps {
     val fused9 =
       coalesce(round(lit(wa.toDouble) / (lit(RrfC) + col("rank_a")), 9), lit(0.0)) +
       coalesce(round(lit(wb.toDouble) / (lit(RrfC) + col("rank_b")), 9), lit(0.0))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("fused_score").desc, col("neighbor_id").asc)
-    ra.join(rb, Seq("query_id", "neighbor_id"), "full_outer")
-      .select(col("query_id"), col("neighbor_id"), fused9.as("fused_score"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    SimilarityOps.topKPerQuery(
+      ra.join(rb, Seq("query_id", "neighbor_id"), "full_outer")
+        .select(col("query_id"), col("neighbor_id"), fused9.as("fused_score")),
+      k, "fused_score")
   }
 
   /** Self-retrieval quality of one ranking: for each query in `qids`

@@ -57,24 +57,31 @@ object SimilarityOps {
     embeddings.select(col("vec_id"), l2Normalize(col("embedding")).as("n_emb"))
   }
 
-  /** Brute-force cosine top-k: query set × corpus, rank per query.
-    * Queries are broadcast; ranking is a per-query-partition window. */
-  def bruteForceTopK(embeddings: DataFrame, queryIds: Seq[Long], k: Int): DataFrame =
-    bruteForceTopKNorm(normalizedCorpus(embeddings), queryIds, k)
+  /** The per-query top-k rule every ANN operator (and its DuckDB
+    * oracle) shares: rank each query's scored rows by (`score` DESC,
+    * neighbor_id ASC) into `rank`, keep rank <= k. The window partitions
+    * by query, so each partition ranks locally and only k rows per query
+    * reach the final merge. */
+  private[ops] def topKPerQuery(scored: DataFrame, k: Int,
+                                score: String = "cosine_sim"): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col(score).desc, col("neighbor_id").asc)
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+  }
 
-  /** Same, over an already-normalized (vec_id, n_emb) corpus — the shape
-    * a production pipeline stages once and shares across query batches. */
+  /** Brute-force cosine top-k over a normalized (vec_id, n_emb) corpus
+    * ([[normalizedCorpus]] — the shape a production pipeline stages once
+    * and shares across query batches): query set × corpus, rank per
+    * query. Queries are broadcast; ranking is a per-query-partition
+    * window. */
   def bruteForceTopKNorm(corpus: DataFrame, queryIds: Seq[Long], k: Int): DataFrame = {
     val queries = corpus.filter(col("vec_id").isInCollection(queryIds))
       .select(col("vec_id").as("query_id"), col("n_emb").as("q_emb"))
-    val scored = corpus.join(broadcast(queries),
+    topKPerQuery(corpus.join(broadcast(queries),
         col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        dotCosine(col("q_emb"), col("n_emb")).as("cosine_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine_sim").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+        dotCosine(col("q_emb"), col("n_emb")).as("cosine_sim")), k)
   }
 
   /** Exact-cosine rerank of an externally produced candidate set
@@ -89,15 +96,11 @@ object SimilarityOps {
                           queryIds: Seq[Long], k: Int): DataFrame = {
     val queries = corpus.filter(col("vec_id").isInCollection(queryIds))
       .select(col("vec_id").as("query_id"), col("n_emb").as("q_emb"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine_sim").desc, col("neighbor_id").asc)
-    cands.join(broadcast(queries), Seq("query_id"))
+    topKPerQuery(cands.join(broadcast(queries), Seq("query_id"))
       .join(corpus.select(col("vec_id").as("neighbor_id"), col("n_emb")),
         Seq("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        dotCosine(col("q_emb"), col("n_emb")).as("cosine_sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+        dotCosine(col("q_emb"), col("n_emb")).as("cosine_sim")), k)
   }
 
   /** The top-`nprobe` nearest-cell column against a FIXED centroid
@@ -146,10 +149,21 @@ object SimilarityOps {
       (rows.map(_.getLong(0)).toSeq, rows.flatMap(_.getSeq[Double](1)).toSeq)
     })
 
-  private def assignTo(corpus: DataFrame, centroids: DataFrame): DataFrame = {
+  /** Corpus-side cell assignment — the one place a corpus vector is
+    * tagged with its `nprobe` nearest cells: one row per (vector,
+    * probed cell), (vec_id, n_emb, cell), by the codegen'd argmax
+    * ([[nearestCellsCol]]); tie-breaks are (rounded-6dp cosine DESC,
+    * centroid_id ASC), identical to the window-based oracle mirror.
+    * nprobe = 1 is single assignment; nprobe > 1 is the multi-probe
+    * assignment that lets a pair on a cell boundary still collide in a
+    * shared cell. Callers rename `cell` (or `n_emb`) in a LATER select:
+    * an alias next to the generator in the same select trips Spark 4's
+    * analyzer (INTERNAL_ERROR LateralColumnAliasReference). */
+  def assignCellsNorm(corpus: DataFrame, centroids: DataFrame,
+                      nprobe: Int): DataFrame = {
     graft.functions.GraftFunctions.register(corpus.sparkSession)
-    corpus.select(col("vec_id"),
-      explode(nearestCellsCol(centroids, 1, col("n_emb"))).as("cell"))
+    corpus.select(col("vec_id"), col("n_emb"),
+      explode(nearestCellsCol(centroids, nprobe, col("n_emb"))).as("cell"))
   }
 
   /** Deterministic spherical-k-means centroids: the `nCells` lowest-
@@ -173,8 +187,7 @@ object SimilarityOps {
       .select(col("vec_id").as("centroid_id"), col("n_emb").as("c_emb"))
     for (_ <- 0 until iters) {
       val w = Window.partitionBy(col("cell")).orderBy(col("vec_id").asc)
-      val sampled = assignTo(corpus, cents)
-        .join(corpus, Seq("vec_id"))
+      val sampled = assignCellsNorm(corpus, cents, 1)
         .withColumn("m_rn", row_number().over(w))
         .filter(col("m_rn") <= sampleM)
       val grouped = sampled.groupBy(col("cell"))
@@ -191,48 +204,22 @@ object SimilarityOps {
     cents
   }
 
-  /** IVF cell assignment against an externally staged centroid table
-    * (Lloyd-refined, [[ivfCentroidsNorm]]) — the production shape: the
-    * coarse quantizer is trained once and shared by every
-    * assignment/search job (queries.Staged.ivfCentroids). Ties break to
-    * the smaller centroid. */
-  def ivfAssignNormWith(corpus: DataFrame, centroids: DataFrame): DataFrame =
-    assignTo(corpus, centroids)
-
-  /** Per-vector `nprobe` nearest cells WITH the embedding carried —
-    * the codegen'd argmax ([[nearestCellsCol]]), one row per (vector,
-    * probed cell). The graph-ANN build reads this on both sides of its
-    * within-cell candidate join (GraphAnnOps.knnGraph); tie-breaks are
-    * (rounded-6dp cosine DESC, centroid_id ASC), identical to the
-    * window-based oracle mirror. */
-  def assignCellsNorm(corpus: DataFrame, centroids: DataFrame,
-                      nprobe: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
-    corpus.select(col("vec_id"), col("n_emb"),
-      explode(nearestCellsCol(centroids, nprobe, col("n_emb"))).as("cell"))
-  }
-
   /** The IVF probe's CANDIDATE set before the top-k cut:
-    * (query_id, neighbor_id, cosine_sim) for every corpus vector in a
-    * probed cell. Exposed separately so the nprobe tuning curve can
-    * report scan cost (candidate count) next to recall — the two axes
-    * a deployment trades off when sizing nprobe. */
-  def ivfCandidatesNormWith(corpus: DataFrame, centroids: DataFrame,
-                            queryIds: Seq[Long], nprobe: Int): DataFrame =
-    ivfCandidatesNormRanked(corpus, centroids, queryIds, nprobe)
-      .drop("probe_rank")
-
-  /** [[ivfCandidatesNormWith]] with the probing cell's rank carried on
-    * every candidate row. Because each arm of an nprobe sweep probes a
-    * PREFIX of the same (qc_sim DESC, centroid_id ASC) cell ranking,
-    * the arm-p candidate set is exactly `probe_rank <= p` of this one
+    * (query_id, neighbor_id, probe_rank, cosine_sim) for every corpus
+    * vector in one of the query's `nprobe` nearest cells, with the
+    * probing cell's rank carried on every row — so the nprobe tuning
+    * curve can report scan cost (candidate count) next to recall, the
+    * two axes a deployment trades off when sizing nprobe. Because each
+    * arm of an nprobe sweep probes a PREFIX of the same
+    * (qc_sim DESC, centroid_id ASC) cell ranking, the arm-p candidate
+    * set is exactly `probe_rank <= p` of this one
     * relation — the nprobe tuning curve derives all its arms from ONE
     * corpus-side candidate join instead of one per arm (guide §2.3;
     * the curve's before-plan carried 8 assignment subtrees / 174
     * Exchanges at 4 arms). */
   def ivfCandidatesNormRanked(corpus: DataFrame, centroids: DataFrame,
                               queryIds: Seq[Long], nprobe: Int): DataFrame = {
-    val assigned = assignTo(corpus, centroids).join(corpus, Seq("vec_id"))
+    val assigned = assignCellsNorm(corpus, centroids, 1)
     val queries = corpus.filter(col("vec_id").isInCollection(queryIds))
       .select(col("vec_id").as("query_id"), col("n_emb").as("q_emb"))
     val probeW = Window.partitionBy(col("query_id"))
@@ -255,13 +242,9 @@ object SimilarityOps {
     * within probed cells. Approximate by construction; the oracle
     * implements the identical algorithm, so results still hash-match. */
   def ivfTopKNormWith(corpus: DataFrame, centroids: DataFrame,
-                      queryIds: Seq[Long], k: Int, nprobe: Int): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine_sim").desc, col("neighbor_id").asc)
-    ivfCandidatesNormWith(corpus, centroids, queryIds, nprobe)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
+                      queryIds: Seq[Long], k: Int, nprobe: Int): DataFrame =
+    topKPerQuery(ivfCandidatesNormRanked(corpus, centroids, queryIds, nprobe)
+      .drop("probe_rank"), k)
 
   // ---------------------------------------------------------------------
   // Two-level (hierarchical) IVF — the scale continuation of the flat
@@ -283,14 +266,6 @@ object SimilarityOps {
   // argmax breaks ties on (rounded-6dp cosine DESC, id ASC).
   // ---------------------------------------------------------------------
 
-  /** Corpus rows tagged with their nearest super-cell:
-    * (vec_id, n_emb, scell). */
-  private def superAssign(corpus: DataFrame, superCents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
-    corpus.select(col("vec_id"), col("n_emb"),
-      explode(nearestCellsCol(superCents, 1, col("n_emb"))).as("scell"))
-  }
-
   /** The child-centroid ids: the `k2` lowest-vec_id members of each
     * super-cell, (scell, sub_id). The per-super-cell row_number window
     * shuffles the corpus into k1 partitions — the same
@@ -302,8 +277,8 @@ object SimilarityOps {
     * the n-sized pass, never windows). */
   def ivf2ChildIds(corpus: DataFrame, superCents: DataFrame, k2: Int): DataFrame = {
     val w = Window.partitionBy(col("scell")).orderBy(col("vec_id").asc)
-    superAssign(corpus, superCents)
-      .select(col("vec_id"), col("scell"))
+    assignCellsNorm(corpus, superCents, 1)
+      .select(col("vec_id"), col("cell").as("scell"))
       .withColumn("crn", row_number().over(w))
       .filter(col("crn") <= k2)
       .select(col("scell"), col("vec_id").as("sub_id"))
@@ -322,8 +297,9 @@ object SimilarityOps {
       .select(col("sub_id")).collect().map(_.getLong(0)).toSeq
     // a member's super-cell is a function of its embedding: re-deriving
     // it on the k1·k2 filtered rows reproduces the window's scell
-    superAssign(corpus.filter(col("vec_id").isInCollection(ids)), superCents)
-      .select(col("scell"), col("vec_id").as("sub_id"), col("n_emb").as("s_emb"))
+    assignCellsNorm(corpus.filter(col("vec_id").isInCollection(ids)), superCents, 1)
+      .select(col("cell").as("scell"), col("vec_id").as("sub_id"),
+        col("n_emb").as("s_emb"))
   }
 
   /** Two-level assignment, self-trained: each vector's child cell
@@ -335,7 +311,7 @@ object SimilarityOps {
     * two rules agree on the training corpus. */
   def ivf2AssignNorm(corpus: DataFrame, superCents: DataFrame, k2: Int): DataFrame = {
     val children = ivf2Children(corpus, superCents, k2)
-    superAssign(corpus, superCents)
+    assignCellsNorm(corpus, superCents, 1).withColumnRenamed("cell", "scell")
       .join(children, Seq("scell"))
       .select(col("vec_id"), col("n_emb"), col("sub_id"),
         dotCosine(col("n_emb"), col("s_emb")).as("cs"))
@@ -382,13 +358,9 @@ object SimilarityOps {
     val cands = assigned.join(broadcast(qcell), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("q_emb"), col("vec_id"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine_sim").desc, col("neighbor_id").asc)
-    corpus.join(broadcast(cands), Seq("vec_id"))
+    topKPerQuery(corpus.join(broadcast(cands), Seq("vec_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        dotCosine(col("q_emb"), col("n_emb")).as("cosine_sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+        dotCosine(col("q_emb"), col("n_emb")).as("cosine_sim")), k)
   }
 
   /** Multi-probe two-level assignment: each vector lands in its nearest
@@ -397,10 +369,8 @@ object SimilarityOps {
     * boundary lives. ≤ nprobe rows per vector: (vec_id, n_emb, cell). */
   def ivf2MultiAssignNorm(corpus: DataFrame, superCents: DataFrame,
                           k2: Int, nprobe: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val children = ivf2Children(corpus, superCents, k2)
-    corpus.select(col("vec_id"), col("n_emb"),
-        explode(nearestCellsCol(superCents, nprobe, col("n_emb"))).as("scell"))
+    assignCellsNorm(corpus, superCents, nprobe).withColumnRenamed("cell", "scell")
       .join(children, Seq("scell"))
       .select(col("vec_id"), col("n_emb"), col("scell"), col("sub_id"),
         dotCosine(col("n_emb"), col("s_emb")).as("cs"))
@@ -424,17 +394,9 @@ object SimilarityOps {
                                          threshold: Double,
                                          nprobe: Int = 2,
                                          maxCellSize: Long = Long.MaxValue): DataFrame = {
-    val assigned = capCells(
-      ivf2MultiAssignNorm(corpus, superCents, k2, nprobe), maxCellSize)
-    val a = assigned.select(col("cell"), col("vec_id").as("vec_a"),
-      col("n_emb").as("ea"))
-    val b = assigned.select(col("cell"), col("vec_id").as("vec_b"),
-      col("n_emb").as("eb"))
-    a.join(b, Seq("cell"))
-      .filter(col("vec_a") < col("vec_b"))
-      .select(col("vec_a"), col("vec_b"),
-        dotCosine(col("ea"), col("eb")).as("cosine_sim"))
-      .filter(col("cosine_sim") >= threshold)
+    cellPairs(capCells(
+        ivf2MultiAssignNorm(corpus, superCents, k2, nprobe), maxCellSize),
+        threshold)
       .groupBy(col("vec_a"), col("vec_b"))
       .agg(max(col("cosine_sim")).as("cosine_sim"))
   }
@@ -476,7 +438,8 @@ object SimilarityOps {
     * and arriving vectors alike.) */
   def ivf2AssignBatchNorm(batch: DataFrame, superCents: DataFrame,
                           children: DataFrame): DataFrame =
-    childArgmax(superAssign(batch, superCents), children)
+    childArgmax(assignCellsNorm(batch, superCents, 1)
+      .withColumnRenamed("cell", "scell"), children)
 
   /** Post-append occupancy per child cell: existing assignment unioned
     * with the arriving batch's, counted per (scell, cell), flagged
@@ -554,11 +517,8 @@ object SimilarityOps {
     * keys; only corpus vectors sharing at least one band with the query
     * are scored. The candidate join is equality-keyed on (band, value) —
     * the second ANN scale path next to IVF: no centroid assignment pass,
-    * and recall tunes with nBands/nPlanes instead of nprobe. */
-  def lshTopK(embeddings: DataFrame, queryIds: Seq[Long], k: Int,
-              nPlanes: Int, nBands: Int): DataFrame =
-    lshTopKNorm(normalizedCorpus(embeddings), queryIds, k, nPlanes, nBands)
-
+    * and recall tunes with nBands/nPlanes instead of nprobe. `corpus` is
+    * the normalized (vec_id, n_emb) relation of [[normalizedCorpus]]. */
   def lshTopKNorm(corpus: DataFrame, queryIds: Seq[Long], k: Int,
                   nPlanes: Int, nBands: Int): DataFrame = {
     require(nPlanes % nBands == 0, "nPlanes must split into equal bands")
@@ -593,16 +553,12 @@ object SimilarityOps {
       .distinct()
     val queries = corpus.filter(col("vec_id").isInCollection(queryIds))
       .select(col("vec_id").as("query_id"), col("n_emb").as("q_emb"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine_sim").desc, col("neighbor_id").asc)
-    cands
+    topKPerQuery(cands
       .join(broadcast(queries), Seq("query_id"))
       .join(corpus.select(col("vec_id").as("neighbor_id"), col("n_emb")),
         Seq("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        dotCosine(col("q_emb"), col("n_emb")).as("cosine_sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+        dotCosine(col("q_emb"), col("n_emb")).as("cosine_sim")), k)
   }
 
   /** Feature-hashing document embedder (hashing-trick bag of words):
@@ -690,21 +646,17 @@ object SimilarityOps {
     val codes = int8Codes(embeddings)
     val qs = codes.filter(col("vec_id").isInCollection(queryIds))
       .select(col("vec_id").as("query_id"), col("c").as("qc"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("qdot").desc, col("neighbor_id").asc)
-    codes.join(broadcast(qs), col("vec_id") =!= col("query_id"))
+    topKPerQuery(codes.join(broadcast(qs), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         aggregate(zip_with(col("qc"), col("c"), (a, b) => a * b),
-          lit(0L), (acc, x) => acc + x).as("qdot"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+          lit(0L), (acc, x) => acc + x).as("qdot")), k, "qdot")
   }
 
   /** Embedding near-duplicate pairs: all pairs above a cosine threshold.
     * EXACT SMALL-N BASELINE ONLY — a triangular self-join is O(n²) pairs
     * and must never run on a full production corpus; the scale path is
-    * [[cosineNearDupPairsBlocked]] (IVF-cell candidates, then verify),
-    * and the exact-but-tiled middle ground is
+    * [[cosineNearDupPairsBlockedNormWith]] (IVF-cell candidates, then
+    * verify), and the exact-but-tiled middle ground is
     * [[SimilarityKernel.cosineNearDupPairsKernelNorm]].
     *
     * Guarded: refuses a corpus above `maxExactRows` (the count is one
@@ -717,7 +669,7 @@ object SimilarityOps {
     require(n <= maxExactRows,
       s"cosineNearDupPairs is the exact O(n²) small-n baseline and the " +
         s"corpus has $n rows (cap $maxExactRows): use " +
-        "cosineNearDupPairsBlocked (IVF-cell candidates) or " +
+        "cosineNearDupPairsBlockedNormWith (IVF-cell candidates) or " +
         "SimilarityKernel.cosineNearDupPairsKernel (tiled exact) at scale, " +
         "or raise maxExactRows deliberately")
     e.as("a").join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
@@ -726,52 +678,17 @@ object SimilarityOps {
       .filter(col("cosine_sim") >= threshold)
   }
 
-  /** Multi-probe IVF cell assignment: each vector lands in its `nprobe`
-    * nearest cells, so a pair sitting on a cell boundary still collides
-    * in at least one shared cell (the standard recall repair for
-    * cell-blocked pairing; nprobe=1 degenerates to single assignment).
-    * Output (vec_id, cell) has nprobe rows per vector. */
-  def ivfMultiAssignNormWith(corpus: DataFrame, centroids: DataFrame,
-                             nprobe: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
-    corpus.select(col("vec_id"),
-      explode(nearestCellsCol(centroids, nprobe, col("n_emb"))).as("cell"))
-  }
-
-  /** SCALE PATH for embedding near-dup: candidates are generated by IVF
-    * cell blocking — pairs must share one of their `nprobe` nearest
-    * cells — and only candidates are verified with the exact dot
-    * product. The candidate join is EQUALITY-KEYED on the cell id
-    * (never all-pairs): work is Σ over cells of |cell|², bounded by
-    * nprobe²·n²/nCells for balanced cells, and nCells scales with the
-    * corpus — the same candidates-then-verify shape as
-    * [[graft.ops.DedupOps.minhashLshPairsFromIndex]] for text.
-    * Approximate by construction (a near-dup pair whose members share
-    * no probed cell is missed); the oracle implements the identical
-    * blocking so results still hash-match. */
-  def cosineNearDupPairsBlocked(embeddings: DataFrame, threshold: Double,
-                                nCells: Int, nprobe: Int = 2): DataFrame =
-    cosineNearDupPairsBlockedNorm(normalizedCorpus(embeddings),
-      threshold, nCells, nprobe)
-
-  def cosineNearDupPairsBlockedNorm(corpus: DataFrame, threshold: Double,
-                                    nCells: Int, nprobe: Int = 2): DataFrame =
-    cosineNearDupPairsBlockedNormWith(corpus,
-      ivfCentroidsNorm(corpus, nCells), threshold, nprobe)
-
-  /** Blocked near-dup with the cell count FOLLOWING the corpus:
-    * nCells = max(16, n / targetCellSize), so candidate work
+  /** The corpus-following cell count: nCells = max(16,
+    * n / targetCellSize), so blocked near-dup candidate work
     * Σ|cell|² ≈ nprobe²·targetCellSize·n stays LINEAR in n at fixed
     * cell occupancy. A fixed nCells is quadratic in disguise —
     * measured on the 20k-vector sf1 fixture: 16 cells = 95 s of
     * candidate work, 256 cells (≈ n/78) = 3.3 s (BASELINE.md round-4
-    * scaling table). Recall tunes with nprobe/targetCellSize; the
-    * fixture-registered queries pin nCells=16 so the DuckDB oracle can
-    * mirror the blocking verbatim at fixture scale. */
-  /** The corpus-following cell-count formula — the ONE source of the
-    * 16-cell floor / 128-per-cell occupancy constants, shared by
-    * [[cosineNearDupPairsBlockedAuto]] and the registered headline query
-    * (which needs the number separately to key its staged centroids).
+    * scaling table). Recall tunes with nprobe/targetCellSize; at the
+    * fixture scales the formula clamps to 16 cells, so the DuckDB
+    * oracle mirrors the blocking verbatim. This is the ONE source of
+    * the 16-cell floor / 128-per-cell occupancy constants; the
+    * registered headline query reads it to key its staged centroids.
     *
     * Two regimes (round-5 decade check, BASELINE.md):
     *  - occupancy-driven `n / targetCellSize` keeps candidate work
@@ -788,15 +705,6 @@ object SimilarityOps {
                     sqrtFactor: Int = 2): Int =
     math.max(16L, math.min(n / targetCellSize,
       (sqrtFactor * math.sqrt(n.toDouble)).toLong)).toInt
-
-  def cosineNearDupPairsBlockedAuto(embeddings: DataFrame,
-                                    threshold: Double,
-                                    targetCellSize: Int = 128,
-                                    nprobe: Int = 2): DataFrame = {
-    val corpus = normalizedCorpus(embeddings)
-    val nCells = autoCellCount(corpus.count(), targetCellSize)
-    cosineNearDupPairsBlockedNorm(corpus, threshold, nCells, nprobe)
-  }
 
   /** Hot-cell cap for cell-blocked pairing — the embedding twin of the
     * text paths' `maxDf`/`maxBandDf` guards. A skewed corpus (a dense
@@ -841,13 +749,10 @@ object SimilarityOps {
     * scale this is the nightly index build — the same job that computes
     * the assignment anyway, paying one extra sort-within-write. */
   def writeCellLayout(corpus: DataFrame, centroids: DataFrame,
-                      path: String): Unit = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
-    corpus.select(col("vec_id"), col("n_emb"),
-        explode(nearestCellsCol(centroids, 1, col("n_emb"))).as("cell"))
+                      path: String): Unit =
+    assignCellsNorm(corpus, centroids, 1)
       .write.partitionBy("cell")
       .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
-  }
 
   /** IVF top-k against the cell-partitioned layout: probe cells per
     * query (identical probe rule and tie-breaks as [[ivfTopKNormWith]],
@@ -882,14 +787,10 @@ object SimilarityOps {
     val pruned = spark.read.parquet(layoutPath)
       .filter(col("cell").isin(cells: _*))
       .select(col("vec_id"), col("n_emb"), col("cell").cast("long").as("cell"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine_sim").desc, col("neighbor_id").asc)
-    probed.join(pruned, Seq("cell"))
+    topKPerQuery(probed.join(pruned, Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        dotCosine(col("q_emb"), col("n_emb")).as("cosine_sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+        dotCosine(col("q_emb"), col("n_emb")).as("cosine_sim")), k)
   }
 
   // ---------------------------------------------------------------------
@@ -919,7 +820,7 @@ object SimilarityOps {
   def pqCodebook(corpus: DataFrame, dim: Int, m: Int, ksub: Int): DataFrame = {
     require(dim % m == 0, s"dim $dim must split into $m equal subspaces")
     val dsub = dim / m
-    // ksub-row window: bounded, same pattern as lshTopK's plane index
+    // ksub-row window: bounded, same pattern as lshTopKNorm's plane index
     val seeds = corpus.orderBy(col("vec_id").asc).limit(ksub)
       .withColumn("code", (row_number().over(
         Window.orderBy(col("vec_id").asc)) - 1).cast("int"))
@@ -1007,13 +908,9 @@ object SimilarityOps {
                      dim: Int, m: Int, ksub: Int,
                      queryIds: Seq[Long], k: Int): DataFrame = {
     val lut = adcLut(corpus, codebook, dim, m, ksub, queryIds)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_score").desc, col("neighbor_id").asc)
-    codes.join(broadcast(lut), col("vec_id") =!= col("query_id"))
+    topKPerQuery(codes.join(broadcast(lut), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        adcScore(m, ksub).as("adc_score"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+        adcScore(m, ksub).as("adc_score")), k, "adc_score")
   }
 
   /** Two-stage PQ search — ADC shortlist, then EXACT float rerank of
@@ -1031,15 +928,11 @@ object SimilarityOps {
       .select(col("query_id"), col("neighbor_id"))
     val qs = corpus.filter(col("vec_id").isInCollection(queryIds))
       .select(col("vec_id").as("query_id"), col("n_emb").as("q_emb"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine_sim").desc, col("neighbor_id").asc)
-    short.join(broadcast(qs), Seq("query_id"))
+    topKPerQuery(short.join(broadcast(qs), Seq("query_id"))
       .join(corpus.select(col("vec_id").as("neighbor_id"), col("n_emb")),
         Seq("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        dotCosine(col("q_emb"), col("n_emb")).as("cosine_sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+        dotCosine(col("q_emb"), col("n_emb")).as("cosine_sim")), k)
   }
 
   /** IVF-PQ — the production composition of the two scale axes: the
@@ -1052,8 +945,7 @@ object SimilarityOps {
   def ivfPqTopK(corpus: DataFrame, centroids: DataFrame, codes: DataFrame,
                 codebook: DataFrame, dim: Int, m: Int, ksub: Int,
                 queryIds: Seq[Long], k: Int, nprobe: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
-    val assigned = assignTo(corpus, centroids)
+    val assigned = assignCellsNorm(corpus, centroids, 1)
     val qs = corpus.filter(col("vec_id").isInCollection(queryIds))
       .select(col("vec_id").as("query_id"), col("n_emb").as("q_emb"))
     val probeW = Window.partitionBy(col("query_id"))
@@ -1065,19 +957,29 @@ object SimilarityOps {
       .filter(col("probe_rank") <= nprobe)
       .select(col("query_id"), col("centroid_id").as("cell"))
     val lut = adcLut(corpus, codebook, dim, m, ksub, queryIds)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_score").desc, col("neighbor_id").asc)
-    probed.join(assigned.select(col("vec_id"), col("cell")), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .join(codes.select(col("vec_id"), col("codes")), Seq("vec_id"))
-      .join(broadcast(lut), Seq("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        adcScore(m, ksub).as("adc_score"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKPerQuery(
+      probed.join(assigned.select(col("vec_id"), col("cell")), Seq("cell"))
+        .filter(col("vec_id") =!= col("query_id"))
+        .join(codes.select(col("vec_id"), col("codes")), Seq("vec_id"))
+        .join(broadcast(lut), Seq("query_id"))
+        .select(col("query_id"), col("vec_id").as("neighbor_id"),
+          adcScore(m, ksub).as("adc_score")), k, "adc_score")
   }
 
-  /** Fused candidates-and-verify: the embedding rides INTO the cell
+  /** SCALE PATH for embedding near-dup over a normalized corpus and a
+    * staged centroid table: candidates are generated by IVF cell
+    * blocking — pairs must share one of their `nprobe` nearest cells —
+    * and only candidates are verified with the exact dot product. The
+    * candidate join is EQUALITY-KEYED on the cell id (never all-pairs):
+    * work is Σ over cells of |cell|², bounded by nprobe²·n²/nCells for
+    * balanced cells, and nCells follows the corpus ([[autoCellCount]])
+    * — the same candidates-then-verify shape as
+    * [[graft.ops.DedupOps.minhashLshPairsFromSigs]] for text.
+    * Approximate by construction (a near-dup pair whose members share
+    * no probed cell is missed); the oracle implements the identical
+    * blocking so results still hash-match.
+    *
+    * Fused candidates-and-verify: the embedding rides INTO the cell
     * join (one shuffle of n·nprobe embedding-carrying rows keyed by
     * cell), the exact dot + threshold run inside the join's codegen
     * before anything is materialized, and only SURVIVING pairs reach
@@ -1094,11 +996,18 @@ object SimilarityOps {
                                         centroids: DataFrame,
                                         threshold: Double,
                                         nprobe: Int = 2,
-                                        maxCellSize: Long = Long.MaxValue): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
-    val assigned = capCells(corpus.select(col("vec_id"), col("n_emb"),
-      explode(nearestCellsCol(centroids, nprobe, col("n_emb"))).as("cell")),
-      maxCellSize)
+                                        maxCellSize: Long = Long.MaxValue): DataFrame =
+    cellPairs(capCells(assignCellsNorm(corpus, centroids, nprobe), maxCellSize),
+        threshold)
+      .groupBy(col("vec_a"), col("vec_b"))
+      .agg(max(col("cosine_sim")).as("cosine_sim"))
+
+  /** The cell-pair verify shared by the blocked screens: the
+    * `cell`-equality self-join of (vec_id, n_emb, cell) rows, each pair
+    * once per shared cell as (vec_a < vec_b), kept when the exact cosine
+    * reaches `threshold` — the dot and the threshold run inside the
+    * join, so only surviving pairs leave it. */
+  private def cellPairs(assigned: DataFrame, threshold: Double): DataFrame = {
     val a = assigned.select(col("cell"), col("vec_id").as("vec_a"),
       col("n_emb").as("ea"))
     val b = assigned.select(col("cell"), col("vec_id").as("vec_b"),
@@ -1108,8 +1017,6 @@ object SimilarityOps {
       .select(col("vec_a"), col("vec_b"),
         dotCosine(col("ea"), col("eb")).as("cosine_sim"))
       .filter(col("cosine_sim") >= threshold)
-      .groupBy(col("vec_a"), col("vec_b"))
-      .agg(max(col("cosine_sim")).as("cosine_sim"))
   }
 
   /** SemDedup-style within-cell semantic prune (Abbas et al. 2023,
@@ -1136,19 +1043,8 @@ object SimilarityOps {
   def semDedupWithinCellsNorm(corpus: DataFrame, centroids: DataFrame,
                               eps: Double,
                               maxCellSize: Long = Long.MaxValue): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
-    val assigned = capCells(corpus.select(col("vec_id"), col("n_emb"),
-      explode(nearestCellsCol(centroids, 1, col("n_emb"))).as("cell")),
-      maxCellSize)
-    val a = assigned.select(col("cell"), col("vec_id").as("vec_a"),
-      col("n_emb").as("ea"))
-    val b = assigned.select(col("cell"), col("vec_id").as("vec_b"),
-      col("n_emb").as("eb"))
-    val dropped = a.join(b, Seq("cell"))
-      .filter(col("vec_a") < col("vec_b"))
-      .select(col("vec_a"), col("vec_b"),
-        dotCosine(col("ea"), col("eb")).as("cosine_sim"))
-      .filter(col("cosine_sim") >= eps)
+    val assigned = capCells(assignCellsNorm(corpus, centroids, 1), maxCellSize)
+    val dropped = cellPairs(assigned, eps)
       .groupBy(col("vec_b").as("vec_id"))
       .agg(min(col("vec_a")).as("exemplar"),
         max(col("cosine_sim")).as("max_sim"))
@@ -1173,15 +1069,13 @@ object SimilarityOps {
   def decontaminateBlockedNorm(train: DataFrame, bench: DataFrame,
                                centroids: DataFrame, eps: Double,
                                nprobe: Int = 2): DataFrame = {
-    graft.functions.GraftFunctions.register(train.sparkSession)
-    val ta = train.select(col("vec_id"), col("n_emb"),
-      explode(nearestCellsCol(centroids, nprobe, col("n_emb"))).as("cell"))
-    // the generator must reference the INPUT column, not the b_emb
-    // alias from the same select — a lateral alias under explode trips
-    // Spark 4's analyzer (INTERNAL_ERROR LateralColumnAliasReference)
-    val ba = bench.select(col("vec_id").as("bench_id"),
-      col("n_emb").as("b_emb"),
-      explode(nearestCellsCol(centroids, nprobe, col("n_emb"))).as("cell"))
+    val ta = assignCellsNorm(train, centroids, nprobe)
+    // renamed AFTER the assignment: a b_emb alias in the generator's own
+    // select would be a lateral alias under explode, which trips Spark 4's
+    // analyzer (INTERNAL_ERROR LateralColumnAliasReference)
+    val ba = assignCellsNorm(bench, centroids, nprobe)
+      .select(col("vec_id").as("bench_id"), col("n_emb").as("b_emb"),
+        col("cell"))
     val hits = ta.join(ba, Seq("cell"))
       .select(col("vec_id"), col("bench_id"),
         dotCosine(col("n_emb"), col("b_emb")).as("cosine_sim"))
@@ -1217,14 +1111,10 @@ object SimilarityOps {
     val queries = c.filter(col("vec_id").isInCollection(queryIds))
       .select(col("vec_id").as("query_id"), col("n_emb").as("q_emb"),
         col("label").as("q_label"))
-    val scored = c.join(broadcast(queries), col("label") =!= col("q_label"))
+    topKPerQuery(c.join(broadcast(queries), col("label") =!= col("q_label"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         col("label").as("n_label"),
-        dotCosine(col("q_emb"), col("n_emb")).as("cosine_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine_sim").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+        dotCosine(col("q_emb"), col("n_emb")).as("cosine_sim")), k)
   }
 
   /** Contrastive-training triple mining: for each anchor in

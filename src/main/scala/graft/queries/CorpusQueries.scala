@@ -523,8 +523,8 @@ object CorpusQueries {
     // quadratic.
     Q("cluster_balanced_sample",
       (s, dir) => {
-        val assigned = graft.ops.SimilarityOps.ivfAssignNormWith(
-          Staged.normCorpus(s, dir), Staged.ivfCentroids(s, dir, 16))
+        val assigned = graft.ops.SimilarityOps.assignCellsNorm(
+          Staged.normCorpus(s, dir), Staged.ivfCentroids(s, dir, 16), 1)
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("cell"))
           .orderBy(col("h").asc, col("vec_id").asc)

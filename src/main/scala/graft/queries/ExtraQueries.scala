@@ -548,8 +548,8 @@ object ExtraQueries {
     // trigger; a single agg over the assignment pass).
     Q("ivf_cell_stats",
       (s, dir) => graft.ops.SimilarityOps
-        .ivfAssignNormWith(Staged.normCorpus(s, dir),
-          Staged.ivfCentroids(s, dir, 16))
+        .assignCellsNorm(Staged.normCorpus(s, dir),
+          Staged.ivfCentroids(s, dir, 16), 1)
         .groupBy(col("cell"))
         .agg(count(lit(1)).as("n_vectors"),
           min(col("vec_id")).as("min_vec"), max(col("vec_id")).as("max_vec"))

@@ -180,7 +180,7 @@ object OracleFrags {
   }
 
   /** N-gram-Jaccard near-dup pair relation (doc_a, doc_b) — mirrors
-    * ops.DedupOps.ngramJaccardPairs at threshold `th`. */
+    * ops.DedupOps.ngramJaccardPairsFromIndex at threshold `th`. */
   def jaccardPairsSql(k: Int, th: Double): String =
     s"""SELECT doc_a, doc_b FROM (
        |WITH ds AS (${docShingleHashes(k)}),

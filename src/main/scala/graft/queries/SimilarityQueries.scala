@@ -527,10 +527,56 @@ object SimilarityQueries {
         QueryIds, K)
     }
 
+  /** Recall@[[K]] of an approximate (query_id, neighbor_id, ...) top-K
+    * against the staged exact [[bruteTopK]] — the eval every
+    * `ann_recall_*` query runs: per query, how many exact neighbors the
+    * index found (`n_matched`) and their share of K (`recall_at_k`). One
+    * equality join on (query_id, neighbor_id) plus a per-query count:
+    * ~|queries|·K rows at any corpus size. */
+  private def recallAtK(s: org.apache.spark.sql.SparkSession, dir: String,
+                        approx: DataFrame): DataFrame =
+    bruteTopK(s, dir).select(col("query_id"), col("neighbor_id"))
+      .join(approx.select(col("query_id"), col("neighbor_id"),
+        lit(1).as("hit")), Seq("query_id", "neighbor_id"), "left")
+      .groupBy("query_id")
+      .agg(count(col("hit")).as("n_matched"))
+      .select(col("query_id"), col("n_matched"),
+        round(col("n_matched") / lit(K.toDouble), 6).as("recall_at_k"))
+      .orderBy("query_id")
+
+  /** Oracle of [[recallAtK]] over the approximate side's top-K SQL. */
+  private def recallSql(approxSql: String): String =
+    s"""SELECT b.query_id, CAST(count(i.neighbor_id) AS BIGINT) AS n_matched,
+       |round(count(i.neighbor_id) / ${K.toDouble}, 6) AS recall_at_k
+       |FROM ($bruteSql) b LEFT JOIN ($approxSql) i
+       |ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
+       |GROUP BY b.query_id ORDER BY b.query_id"""
+      .stripMargin.replace("\n", " ")
+
+  /** Beam search over the staged graph — what ann_topk_graph and
+    * ann_recall_graph grade. */
+  private def graphTopK(s: org.apache.spark.sql.SparkSession,
+                        dir: String): DataFrame =
+    graft.ops.GraphAnnOps.beamSearchTopK(Staged.normCorpus(s, dir),
+      annGraph(s, dir), Staged.corpusMinId(s, dir), QueryIds, GBeam,
+      GSteps, K)
+
+  /** PCA-space candidates reranked by exact cosine — what ann_topk_pca
+    * and ann_recall_pca grade. */
+  private def pcaTopK(s: org.apache.spark.sql.SparkSession,
+                      dir: String): DataFrame = {
+    val cands = SimilarityOps.pcaCandidates(
+      SimilarityOps.pcaProject(Tables.embeddings(s, dir),
+        Staged.pcaModel(s, dir, PcaK, PcaIters)),
+      QueryIds, PcaCandK, PcaK)
+    SimilarityOps.rerankExactTopKNorm(Staged.normCorpus(s, dir), cands,
+      QueryIds, K)
+  }
+
   /** Force this family's staged artifacts (Staged.prewarm hook):
-    * normalized corpus + count, flat centroids, the two-level serving
-    * index, the cell-partitioned layout, the PQ codebook/codes, and the
-    * frozen maintenance index with its post-append state. Parameter
+    * normalized corpus + count + min id, flat centroids, the two-level
+    * serving index, the cell-partitioned layout, the PQ codebook/codes,
+    * and the frozen maintenance index with its post-append state. Parameter
     * derivation is the registered queries' own (ivf2Params /
     * annIdxParams), so a knob change can't silently leave an artifact
     * cold. */
@@ -540,6 +586,7 @@ object SimilarityQueries {
     Staged.ivfCentroids(s, dir, 16).count()
     // forces normCorpus, corpusCount and the two-level super-centroids
     val (_, ivf2Children, ivf2Assigned) = ivf2Serving(s, dir)
+    Staged.corpusMinId(s, dir)
     ivf2Children.count(); ivf2Assigned.count()
     Staged.ivfLayout(s, dir, 16)
     val (cb, codes) = Staged.pqIndex(s, dir, PqM, PqKsub)
@@ -881,24 +928,8 @@ object SimilarityQueries {
     // tuning measurement as ann_recall_ivf, so flat and hierarchical
     // quantizers are comparable at identical effective cell counts.
     Q("ann_recall_ivf2",
-      (s, dir) => {
-        val brute = bruteTopK(s, dir)
-          .select(col("query_id"), col("neighbor_id"))
-        val ivf2 = ivf2TopK(s, dir)
-          .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-        brute.join(ivf2, Seq("query_id", "neighbor_id"), "left")
-          .groupBy("query_id")
-          .agg(count(col("hit")).as("n_matched"))
-          .select(col("query_id"), col("n_matched"),
-            round(col("n_matched") / lit(K.toDouble), 6).as("recall_at_k"))
-          .orderBy("query_id")
-      },
-      s"""SELECT b.query_id, CAST(count(i.neighbor_id) AS BIGINT) AS n_matched,
-         |round(count(i.neighbor_id) / ${K.toDouble}, 6) AS recall_at_k
-         |FROM ($bruteSql) b LEFT JOIN ($ivf2Sql) i
-         |ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
-         |GROUP BY b.query_id ORDER BY b.query_id"""
-        .stripMargin.replace("\n", " ")),
+      (s, dir) => recallAtK(s, dir, ivf2TopK(s, dir)),
+      recallSql(ivf2Sql)),
 
     // Recall@k evaluation of the approximate index against the exact
     // baseline — the measurement a production ANN deployment runs before
@@ -908,26 +939,10 @@ object SimilarityQueries {
     // a sampled query set — the corpus passes dominate, the eval join is
     // ~|queries|·k rows.
     Q("ann_recall_ivf",
-      (s, dir) => {
-        val brute = bruteTopK(s, dir)
-          .select(col("query_id"), col("neighbor_id"))
-        val ivf = SimilarityOps.ivfTopKNormWith(Staged.normCorpus(s, dir),
-            Staged.ivfCentroids(s, dir, 16), QueryIds, K, 4)
-          .select(col("query_id"), col("neighbor_id"),
-            lit(1).as("hit"))
-        brute.join(ivf, Seq("query_id", "neighbor_id"), "left")
-          .groupBy("query_id")
-          .agg(count(col("hit")).as("n_matched"))
-          .select(col("query_id"), col("n_matched"),
-            round(col("n_matched") / lit(K.toDouble), 6).as("recall_at_k"))
-          .orderBy("query_id")
-      },
-      s"""SELECT b.query_id, CAST(count(i.neighbor_id) AS BIGINT) AS n_matched,
-         |round(count(i.neighbor_id) / ${K.toDouble}, 6) AS recall_at_k
-         |FROM ($bruteSql) b LEFT JOIN ($ivfSql) i
-         |ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
-         |GROUP BY b.query_id ORDER BY b.query_id"""
-        .stripMargin.replace("\n", " ")),
+      (s, dir) => recallAtK(s, dir,
+        SimilarityOps.ivfTopKNormWith(Staged.normCorpus(s, dir),
+          Staged.ivfCentroids(s, dir, 16), QueryIds, K, 4)),
+      recallSql(ivfSql)),
 
     // Graph-ANN BUILD (the Vamana/NSW family — the missing index next
     // to IVF/LSH/PQ): a bounded-degree kNN edge table, candidates
@@ -955,9 +970,7 @@ object SimilarityQueries {
     // never corpus rate — the sub-linear serving path the IVF probe
     // family can't offer at high recall.
     Q("ann_topk_graph",
-      (s, dir) => graft.ops.GraphAnnOps.beamSearchTopK(
-          Staged.normCorpus(s, dir), annGraph(s, dir), QueryIds,
-          GBeam, GSteps, K)
+      (s, dir) => graphTopK(s, dir)
         .select(col("query_id"), col("neighbor_id"), col("cosine_sim"),
           col("rank").cast("int").as("rank"))
         .orderBy("query_id", "rank"),
@@ -967,27 +980,8 @@ object SimilarityQueries {
     // eval contract as ann_recall_ivf/ann_recall_ivf2, so all four
     // index families are comparable on one fixture.
     Q("ann_recall_graph",
-      (s, dir) => {
-        val brute = bruteTopK(s, dir)
-          .select(col("query_id"), col("neighbor_id"))
-        val g = graft.ops.GraphAnnOps.beamSearchTopK(
-            Staged.normCorpus(s, dir), annGraph(s, dir), QueryIds,
-            GBeam, GSteps, K)
-          .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-        brute.join(g, Seq("query_id", "neighbor_id"), "left")
-          .groupBy("query_id")
-          .agg(count(col("hit")).as("n_matched"))
-          .select(col("query_id"), col("n_matched"),
-            round(col("n_matched") / lit(K.toDouble), 6).as("recall_at_k"))
-          .orderBy("query_id")
-      },
-      s"""SELECT b.query_id, CAST(count(i.neighbor_id) AS BIGINT)
-         |  AS n_matched,
-         |round(count(i.neighbor_id) / ${K.toDouble}, 6) AS recall_at_k
-         |FROM ($bruteSql) b LEFT JOIN ($graphTopkSql) i
-         |ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
-         |GROUP BY b.query_id ORDER BY b.query_id"""
-        .stripMargin.replace("\n", " ")),
+      (s, dir) => recallAtK(s, dir, graphTopK(s, dir)),
+      recallSql(graphTopkSql)),
 
     // The SUPERSTEPS tuning curve — the graph index's knob shipped
     // with its curve (the ann_nprobe_curve discipline): recall@10
@@ -1003,8 +997,8 @@ object SimilarityQueries {
         val brute = bruteTopK(s, dir)
           .select(col("query_id"), col("neighbor_id"))
         val snaps = graft.ops.GraphAnnOps.beamSearchTopK(corpus,
-            annGraph(s, dir), QueryIds, GBeam, GSteps, K,
-            snapshotEachStep = true)
+            annGraph(s, dir), Staged.corpusMinId(s, dir), QueryIds,
+            GBeam, GSteps, K, snapshotEachStep = true)
           .select(col("steps"), col("query_id"), col("neighbor_id"),
             lit(1).as("hit"))
         brute
@@ -1142,25 +1136,9 @@ object SimilarityQueries {
     // measurement to ann_recall_ivf, so the two approximate indexes are
     // tunable against each other on the same scale.
     Q("ann_recall_lsh",
-      (s, dir) => {
-        val brute = bruteTopK(s, dir)
-          .select(col("query_id"), col("neighbor_id"))
-        val lsh = SimilarityOps
-          .lshTopKNorm(Staged.normCorpus(s, dir), QueryIds, K, 16, 4)
-          .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-        brute.join(lsh, Seq("query_id", "neighbor_id"), "left")
-          .groupBy("query_id")
-          .agg(count(col("hit")).as("n_matched"))
-          .select(col("query_id"), col("n_matched"),
-            round(col("n_matched") / lit(K.toDouble), 6).as("recall_at_k"))
-          .orderBy("query_id")
-      },
-      s"""SELECT b.query_id, CAST(count(i.neighbor_id) AS BIGINT) AS n_matched,
-         |round(count(i.neighbor_id) / ${K.toDouble}, 6) AS recall_at_k
-         |FROM ($bruteSql) b LEFT JOIN ($lshSql) i
-         |ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
-         |GROUP BY b.query_id ORDER BY b.query_id"""
-        .stripMargin.replace("\n", " ")),
+      (s, dir) => recallAtK(s, dir,
+        SimilarityOps.lshTopKNorm(Staged.normCorpus(s, dir), QueryIds, K, 16, 4)),
+      recallSql(lshSql)),
 
     // Quantized ANN: top-k by integer dot over the int8 codes — the
     // query path that pairs with embedding_quantize (exact integer
@@ -1316,25 +1294,11 @@ object SimilarityQueries {
     // code-compression recall (pq) measured on the same scale.
     Q("ann_recall_pq",
       (s, dir) => {
-        val brute = bruteTopK(s, dir)
-          .select(col("query_id"), col("neighbor_id"))
         val (cb, codes) = Staged.pqIndex(s, dir, PqM, PqKsub)
-        val pq = SimilarityOps.pqAdcTopKCodes(codes,
-            Staged.normCorpus(s, dir), cb, 64, PqM, PqKsub, QueryIds, K)
-          .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-        brute.join(pq, Seq("query_id", "neighbor_id"), "left")
-          .groupBy("query_id")
-          .agg(count(col("hit")).as("n_matched"))
-          .select(col("query_id"), col("n_matched"),
-            round(col("n_matched") / lit(K.toDouble), 6).as("recall_at_k"))
-          .orderBy("query_id")
+        recallAtK(s, dir, SimilarityOps.pqAdcTopKCodes(codes,
+          Staged.normCorpus(s, dir), cb, 64, PqM, PqKsub, QueryIds, K))
       },
-      s"""SELECT b.query_id, CAST(count(i.neighbor_id) AS BIGINT) AS n_matched,
-         |round(count(i.neighbor_id) / ${K.toDouble}, 6) AS recall_at_k
-         |FROM ($bruteSql) b LEFT JOIN ($pqSql) i
-         |ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
-         |GROUP BY b.query_id ORDER BY b.query_id"""
-        .stripMargin.replace("\n", " ")),
+      recallSql(pqSql)),
 
     // Embedding near-dup screen — the HEADLINE is the scale path:
     // IVF-cell blocked candidates (pairs must share one of their 2
@@ -1547,24 +1511,8 @@ object SimilarityQueries {
     // membership, 0.87); the variant that RECOVERS neighbors a single
     // index misses is ann_recall_hybrid_rerank (0.97).
     Q("ann_recall_rrf",
-      (s, dir) => {
-        val brute = bruteTopK(s, dir)
-          .select(col("query_id"), col("neighbor_id"))
-        val fused = rrfTopK(s, dir)
-          .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-        brute.join(fused, Seq("query_id", "neighbor_id"), "left")
-          .groupBy("query_id")
-          .agg(count(col("hit")).as("n_matched"))
-          .select(col("query_id"), col("n_matched"),
-            round(col("n_matched") / lit(K.toDouble), 6).as("recall_at_k"))
-          .orderBy("query_id")
-      },
-      s"""SELECT b.query_id, CAST(count(i.neighbor_id) AS BIGINT) AS n_matched,
-         |round(count(i.neighbor_id) / ${K.toDouble}, 6) AS recall_at_k
-         |FROM ($bruteSql) b LEFT JOIN ($rrfSql) i
-         |ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
-         |GROUP BY b.query_id ORDER BY b.query_id"""
-        .stripMargin.replace("\n", " ")),
+      (s, dir) => recallAtK(s, dir, rrfTopK(s, dir)),
+      recallSql(rrfSql)),
 
     // Hybrid retrieval, stage 2 — the fusion that actually BEATS its
     // best input: the three indexes only NOMINATE (candidate union,
@@ -1590,25 +1538,9 @@ object SimilarityQueries {
     // reranked ≥ every single index (HybridRerankSpec pins ≥; the
     // measured gap is +0.10 over IVF at sf0.01).
     Q("ann_recall_hybrid_rerank",
-      (s, dir) => {
-        val brute = bruteTopK(s, dir)
-          .select(col("query_id"), col("neighbor_id"))
-        val fused = SimilarityOps.rerankExactTopKNorm(
-            Staged.normCorpus(s, dir), hybridCandidates(s, dir), QueryIds, K)
-          .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-        brute.join(fused, Seq("query_id", "neighbor_id"), "left")
-          .groupBy("query_id")
-          .agg(count(col("hit")).as("n_matched"))
-          .select(col("query_id"), col("n_matched"),
-            round(col("n_matched") / lit(K.toDouble), 6).as("recall_at_k"))
-          .orderBy("query_id")
-      },
-      s"""SELECT b.query_id, CAST(count(i.neighbor_id) AS BIGINT) AS n_matched,
-         |round(count(i.neighbor_id) / ${K.toDouble}, 6) AS recall_at_k
-         |FROM ($bruteSql) b LEFT JOIN ($hybridSql) i
-         |ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
-         |GROUP BY b.query_id ORDER BY b.query_id"""
-        .stripMargin.replace("\n", " ")),
+      (s, dir) => recallAtK(s, dir, SimilarityOps.rerankExactTopKNorm(
+        Staged.normCorpus(s, dir), hybridCandidates(s, dir), QueryIds, K)),
+      recallSql(hybridSql)),
 
     // Dimension-wise standardization (the covariance pass APPLIED):
     // z-score the first 16 dims against their own corpus statistics —
@@ -1716,17 +1648,10 @@ object SimilarityQueries {
     // ships here: read the spectrum, then the recall eval, before
     // trusting any dim-reduction index.
     Q("ann_topk_pca",
-      (s, dir) => {
-        val model = Staged.pcaModel(s, dir, PcaK, PcaIters)
-        val cands = SimilarityOps.pcaCandidates(
-          SimilarityOps.pcaProject(Tables.embeddings(s, dir), model),
-          QueryIds, PcaCandK, PcaK)
-        SimilarityOps.rerankExactTopKNorm(
-            Staged.normCorpus(s, dir), cands, QueryIds, K)
-          .select(col("query_id"), col("neighbor_id"), col("cosine_sim"),
-            col("rank").cast("int").as("rank"))
-          .orderBy("query_id", "rank")
-      },
+      (s, dir) => pcaTopK(s, dir)
+        .select(col("query_id"), col("neighbor_id"), col("cosine_sim"),
+          col("rank").cast("int").as("rank"))
+        .orderBy("query_id", "rank"),
       s"SELECT * FROM ($pcaAnnSql) ORDER BY query_id, rank"),
 
     // Recall@k of the PCA-space index vs the exact baseline — how much
@@ -1735,29 +1660,8 @@ object SimilarityQueries {
     // fixture the answer is "not enough" (0.22) — which is the eval
     // doing its job; see ann_topk_pca's verdict note.
     Q("ann_recall_pca",
-      (s, dir) => {
-        val brute = bruteTopK(s, dir)
-          .select(col("query_id"), col("neighbor_id"))
-        val model = Staged.pcaModel(s, dir, PcaK, PcaIters)
-        val cands = SimilarityOps.pcaCandidates(
-          SimilarityOps.pcaProject(Tables.embeddings(s, dir), model),
-          QueryIds, PcaCandK, PcaK)
-        val pca = SimilarityOps.rerankExactTopKNorm(
-            Staged.normCorpus(s, dir), cands, QueryIds, K)
-          .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-        brute.join(pca, Seq("query_id", "neighbor_id"), "left")
-          .groupBy("query_id")
-          .agg(count(col("hit")).as("n_matched"))
-          .select(col("query_id"), col("n_matched"),
-            round(col("n_matched") / lit(K.toDouble), 6).as("recall_at_k"))
-          .orderBy("query_id")
-      },
-      s"""SELECT b.query_id, CAST(count(i.neighbor_id) AS BIGINT) AS n_matched,
-         |round(count(i.neighbor_id) / ${K.toDouble}, 6) AS recall_at_k
-         |FROM ($bruteSql) b LEFT JOIN ($pcaAnnSql) i
-         |ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
-         |GROUP BY b.query_id ORDER BY b.query_id"""
-        .stripMargin.replace("\n", " ")),
+      (s, dir) => recallAtK(s, dir, pcaTopK(s, dir)),
+      recallSql(pcaAnnSql)),
 
     // Johnson–Lindenstrauss signed random projection, 64 → 16 dims
     // (4× compression): the FIT-FREE dim reduction — the matrix is a
@@ -1800,25 +1704,9 @@ object SimilarityQueries {
     // only the compression-ratio bound applies, and an IVF/PQ probe
     // (which prunes rather than projects) is the better index.
     Q("ann_recall_jl",
-      (s, dir) => {
-        val brute = bruteTopK(s, dir)
-          .select(col("query_id"), col("neighbor_id"))
-        val jl = SimilarityOps.rerankExactTopKNorm(
-            Staged.normCorpus(s, dir), jlCands(s, dir), QueryIds, K)
-          .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-        brute.join(jl, Seq("query_id", "neighbor_id"), "left")
-          .groupBy("query_id")
-          .agg(count(col("hit")).as("n_matched"))
-          .select(col("query_id"), col("n_matched"),
-            round(col("n_matched") / lit(K.toDouble), 6).as("recall_at_k"))
-          .orderBy("query_id")
-      },
-      s"""SELECT b.query_id, CAST(count(i.neighbor_id) AS BIGINT) AS n_matched,
-         |round(count(i.neighbor_id) / ${K.toDouble}, 6) AS recall_at_k
-         |FROM ($bruteSql) b LEFT JOIN ($jlAnnSql) i
-         |ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
-         |GROUP BY b.query_id ORDER BY b.query_id"""
-        .stripMargin.replace("\n", " ")),
+      (s, dir) => recallAtK(s, dir, SimilarityOps.rerankExactTopKNorm(
+        Staged.normCorpus(s, dir), jlCands(s, dir), QueryIds, K)),
+      recallSql(jlAnnSql)),
 
     // Contrastive triple mining — the dataset-building op for
     // embedding training: per anchor, the nearest same-label neighbor

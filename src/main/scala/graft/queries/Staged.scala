@@ -154,6 +154,15 @@ object Staged {
     stage(s, dir, "corpusCount")(normCorpus(s, dir).count())
   }
 
+  /** Min vec_id of [[normCorpus]], found once per session+dir — the
+    * pinned entry point of every graph-ANN beam search
+    * (GraphAnnOps.beamSearchTopK), which would otherwise pay one driver
+    * job per search to re-derive the same scalar. */
+  def corpusMinId(s: SparkSession, dir: String): Long = {
+    stage(s, dir, "corpusMinId")(normCorpus(s, dir)
+      .agg(org.apache.spark.sql.functions.min("vec_id")).head().getLong(0))
+  }
+
   /** Lloyd-refined IVF centroids over [[normCorpus]], trained once per
     * session+dir+nCells — the staged coarse quantizer every IVF
     * assignment/search/blocking job shares (16×64 doubles: broadcast

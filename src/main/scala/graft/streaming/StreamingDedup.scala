@@ -45,16 +45,9 @@ object StreamingDedup {
                                     maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     import graft.ops.DedupOps
     val docs = graft.Tables.documents(spark, dir)
-    val corpus = docs.filter(col("doc_id") % 5 =!= 0)
-    val digests = corpus
-      .groupBy(md5(col("text")).as("content_hash"))
-      .agg(min(col("doc_id")).as("exact_match_id")).cache()
-    val bands = DedupOps.bandedSignatures(
-      DedupOps.minhashSignaturesFromIndex(
-        DedupOps.docShingleHashes(corpus, k), nHashes),
-      nHashes, bandSize).cache()
-    val shingles = corpus.select(col("doc_id").as("cand_id"),
-      DedupOps.fastShingles(corpus, k, "text").as("csh")).cache()
+    val (digests, bands, shingles) = DedupOps.incrementalCorpusIndex(
+      docs.filter(col("doc_id") % 5 =!= 0), k, nHashes, bandSize)
+    Seq(digests, bands, shingles).foreach(_.cache())
     val screened = StreamingConf.replaySafeAvailableNow(
       StreamingConf.tableStream(spark, dir, "documents", maxFilesPerTrigger)
         .filter(col("doc_id") % 5 === 0), workDir) { b =>

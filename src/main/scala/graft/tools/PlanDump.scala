@@ -15,7 +15,10 @@ import java.nio.file.{Files, Paths}
   * Bench executes.
   * Queries with construction-time side effects (streaming runs,
   * pipeline writes) dump the plan of their final read-back frame —
-  * that is what their registered fn returns. */
+  * that is what their registered fn returns.
+  * Expression ids (`#123`, `#123L`), exchange ids (`plan_id=N`) and
+  * lambda instance names are stripped, so dumps of the same plan from
+  * two builds diff clean. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: PlanDump <outDir> <tag> <query>...")
@@ -32,8 +35,8 @@ object PlanDump {
     Files.createDirectories(Paths.get(outDir))
     names.foreach { n =>
       val plan =
-        try SparkEntry.queries(n)(spark, dir).queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+        try stripIds(SparkEntry.queries(n)(spark, dir).queryExecution
+          .explainString(org.apache.spark.sql.execution.FormattedMode))
         catch { case e: Throwable => s"EXPLAIN FAILED: ${e.getMessage}" }
       val p = Paths.get(outDir, s"${n}_$tag.txt")
       Files.writeString(p, plan)
@@ -41,4 +44,10 @@ object PlanDump {
     }
     spark.stop()
   }
+
+  /** The plan text without the ids and instance names that change from
+    * run to run. */
+  def stripIds(plan: String): String =
+    plan.replaceAll("#\\d+L?", "").replaceAll(",? ?\\[plan_id=\\d+\\]", "")
+      .replaceAll("Lambda\\$\\d+/0x[0-9a-f]+@[0-9a-f]+", "Lambda")
 }

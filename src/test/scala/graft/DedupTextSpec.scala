@@ -26,7 +26,11 @@ class DedupTextSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("ngram jaccard: exact pair scores 1.0; near pair above 0.5; unrelated absent") {
-    val pairs = DedupOps.ngramJaccardPairs(docs, k = 3, threshold = 0.5)
+    val pairs = DedupOps.ngramJaccardPairsFromIndex(
+        DedupOps.docShingleHashes(docs, 3),
+        docs.select(col("doc_id"),
+          size(DedupOps.fastShingles(docs, 3, "text")).cast("long").as("n_sh")),
+        threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getAs[Double]("jaccard")).toMap
     assert(pairs((0L, 1L)) == 1.0)
     assert(pairs.contains((0L, 2L)) && pairs((0L, 2L)) > 0.5 && pairs((0L, 2L)) < 1.0)
@@ -34,14 +38,17 @@ class DedupTextSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("minhash signatures: identical docs identical, different docs differ") {
-    val sigs = DedupOps.minhashSignatures(docs, k = 3, nHashes = 16)
+    val sigs = DedupOps.minhashSignaturesFromIndex(
+        DedupOps.docShingleHashes(docs, 3), nHashes = 16)
       .collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
     assert(sigs(0L) == sigs(1L))
     assert(sigs(0L) != sigs(3L))
   }
 
   test("minhash LSH finds the exact and near pair with verified jaccard") {
-    val pairs = DedupOps.minhashLshPairs(docs, 3, 16, 2, 0.5)
+    val pairs = DedupOps.minhashLshPairsFromSigs(
+        DedupOps.minhashSignaturesFromIndex(DedupOps.docShingleHashes(docs, 3), 16),
+        docs, 3, 16, 2, 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((0L, 1L)))
     assert(pairs.contains((0L, 2L))) // jaccard ≈ 0.75, high LSH probability
@@ -205,7 +212,8 @@ class DedupTextSpec extends AnyFunSuite with SparkTestBase {
       (a, sa) <- sigs; (b, sb) <- sigs if a < b
       h = java.lang.Long.bitCount(sa ^ sb) if h <= 3
     } yield (a, b, h)).toSet
-    val banded = DedupOps.simhashHammingPairs(docs, 32, 4, 3).collect()
+    val banded = DedupOps.simhashHammingPairsFromSigs(
+        DedupOps.simhash(docs, 32), 32, 4, 3).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(brute.nonEmpty, "fixture has no close simhash pairs — weak test")
     assert(banded == brute)
@@ -214,10 +222,11 @@ class DedupTextSpec extends AnyFunSuite with SparkTestBase {
   test("LSH top-k scores candidates exactly (subset of brute with same sims)") {
     val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val qIds = Seq(0L, 1L, 2L)
-    val brute = SimilarityOps.bruteForceTopK(e, qIds, 50).collect()
+    val corpus = SimilarityOps.normalizedCorpus(e)
+    val brute = SimilarityOps.bruteForceTopKNorm(corpus, qIds, 50).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getAs[Double]("cosine_sim"))
       .toMap
-    val lsh = SimilarityOps.lshTopK(e, qIds, 10, 16, 4).collect()
+    val lsh = SimilarityOps.lshTopKNorm(corpus, qIds, 10, 16, 4).collect()
     assert(lsh.nonEmpty)
     // every LSH hit is a real neighbor with the exact same rerank score,
     // and per-query ranks are dense from 1
@@ -234,7 +243,8 @@ class DedupTextSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("simhash pair screen works on a tiny crafted corpus (exact dup at hamming 0)") {
-    val banded = DedupOps.simhashHammingPairs(docs, 32, 4, 3).collect()
+    val banded = DedupOps.simhashHammingPairsFromSigs(
+        DedupOps.simhash(docs, 32), 32, 4, 3).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
     // docs 0 and 1 are byte-identical → identical signatures → hamming 0
     assert(banded.contains((0L, 1L, 0)))
@@ -246,7 +256,8 @@ class DedupTextSpec extends AnyFunSuite with SparkTestBase {
       (2L, Array(0.5f, 0.5f)), (3L, Array(0.0f, 1.0f))
     ).toDF("vec_id", "embedding")
     // 4 planes over a 4-vector corpus: every vector doubles as a plane
-    val top = SimilarityOps.lshTopK(e, Seq(0L), 3, 4, 2).collect()
+    val top = SimilarityOps
+      .lshTopKNorm(SimilarityOps.normalizedCorpus(e), Seq(0L), 3, 4, 2).collect()
     assert(top.nonEmpty)
     // hits carry exact rerank scores and dense ranks
     assert(top.map(_.getAs[Int]("rank")).sorted.toSeq ==
@@ -254,13 +265,26 @@ class DedupTextSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("brute-force top-k ranks by similarity with id tiebreak") {
-    val e = Seq(
+    // 4 is an exact copy of 1: the two tie on cosine to query 0, and the
+    // smaller id must rank first on every top-k path
+    val corpus = SimilarityOps.normalizedCorpus(Seq(
       (0L, Array(1.0f, 0.0f)), (1L, Array(0.9f, 0.1f)),
-      (2L, Array(0.5f, 0.5f)), (3L, Array(0.0f, 1.0f))
-    ).toDF("vec_id", "embedding")
-    val top = SimilarityOps.bruteForceTopK(e, Seq(0L), 3)
-      .orderBy("rank").select("neighbor_id").as[Long].collect().toSeq
-    assert(top == Seq(1L, 2L, 3L))
+      (2L, Array(0.5f, 0.5f)), (3L, Array(0.0f, 1.0f)),
+      (4L, Array(0.9f, 0.1f))
+    ).toDF("vec_id", "embedding")).cache()
+    val cands = Seq(1L, 2L, 3L, 4L).map(n => (0L, n))
+      .toDF("query_id", "neighbor_id")
+    // nprobe = every cell: the IVF probe scores the whole corpus
+    val cents = SimilarityOps.ivfCentroidsNorm(corpus, 2)
+    Seq(
+      "brute" -> SimilarityOps.bruteForceTopKNorm(corpus, Seq(0L), 3),
+      "rerank" -> SimilarityOps.rerankExactTopKNorm(corpus, cands, Seq(0L), 3),
+      "ivf" -> SimilarityOps.ivfTopKNormWith(corpus, cents, Seq(0L), 3, 2)
+    ).foreach { case (path, df) =>
+      val top = df.orderBy("rank").select("neighbor_id").as[Long].collect().toSeq
+      assert(top == Seq(1L, 4L, 2L), path)
+    }
+    corpus.unpersist()
   }
 
   test("native shingles equal the declarative higher-order formulation") {
@@ -315,10 +339,12 @@ class DedupTextSpec extends AnyFunSuite with SparkTestBase {
     // exactly; at corpus scale the same knob keeps cell occupancy (and
     // therefore candidate work per row) constant instead of quadratic
     val e = Tables.embeddings(spark, "/root/testdata/sf0.01")
-    val auto = SimilarityOps.cosineNearDupPairsBlockedAuto(e, 0.4)
+    val corpus = SimilarityOps.normalizedCorpus(e)
+    def blocked(nCells: Int) = SimilarityOps.cosineNearDupPairsBlockedNormWith(
+        corpus, SimilarityOps.ivfCentroidsNorm(corpus, nCells), 0.4, 2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val fixed = SimilarityOps.cosineNearDupPairsBlocked(e, 0.4, 16, 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val auto = blocked(SimilarityOps.autoCellCount(corpus.count()))
+    val fixed = blocked(16)
     assert(auto == fixed)
   }
 

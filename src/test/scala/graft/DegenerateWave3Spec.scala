@@ -17,7 +17,9 @@ class DegenerateWave3Spec extends AnyFunSuite with SparkTestBase {
       .toDF("doc_id", "text")
     val posts = RetrievalOps.bm25Postings(docs)
     val qterms = Seq((9L, "zzz"), (9L, "qqq")).toDF("query_id", "token")
-    assert(RetrievalOps.bm25TopK(posts, qterms, 5,
+    val stats = RetrievalOps.bm25Stats(posts)
+    assert(RetrievalOps.bm25TopKWith(posts, stats,
+      RetrievalOps.bm25Idf(posts, stats), qterms, 5,
       includeSelf = true).count() == 0)
   }
 

@@ -13,7 +13,8 @@ class GraphAnnSpec extends AnyFunSuite with SparkTestBase {
 
   import spark.implicits._
 
-  // 12 deterministic 4-d vectors, no zero vector, no exact duplicates
+  // 12 deterministic 4-d vectors, no zero vector, no exact duplicates;
+  // vec_id 0 is the min id, the searches' pinned entry point
   private lazy val corpus = SimilarityOps.normalizedCorpus(
     (0 until 12).map { i =>
       (i.toLong, Array(
@@ -45,7 +46,8 @@ class GraphAnnSpec extends AnyFunSuite with SparkTestBase {
     val graph = GraphAnnOps.knnGraph(corpus, cents, m = 11, buildProbe = 2)
     val qs = Seq(0L, 5L, 11L)
     val got = GraphAnnOps
-      .beamSearchTopK(corpus, graph, qs, beam = 12, steps = 2, k = 3)
+      .beamSearchTopK(corpus, graph, entryId = 0L, qs, beam = 12, steps = 2,
+        k = 3)
       .select("query_id", "neighbor_id", "rank")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val want = SimilarityOps.bruteForceTopKNorm(corpus, qs, 3)
@@ -96,7 +98,8 @@ class GraphAnnSpec extends AnyFunSuite with SparkTestBase {
   test("a tighter beam never returns an unreachable or worse-ranked set size") {
     val graph = GraphAnnOps.knnGraph(corpus, cents, m = 3, buildProbe = 2)
     val res = GraphAnnOps
-      .beamSearchTopK(corpus, graph, Seq(0L, 7L), beam = 4, steps = 3, k = 3)
+      .beamSearchTopK(corpus, graph, entryId = 0L, Seq(0L, 7L), beam = 4,
+        steps = 3, k = 3)
       .collect()
     // k rows per query (beam ≥ k+1 covers the self-exclusion slot)
     assert(res.groupBy(_.getLong(0)).forall(_._2.length == 3), res.mkString("\n"))

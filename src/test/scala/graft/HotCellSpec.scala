@@ -32,7 +32,7 @@ class HotCellSpec extends AnyFunSuite with SparkTestBase {
   test("uncapped: the hot cell dominates candidate work quadratically") {
     val corpus = SimilarityOps.normalizedCorpus(skewed).cache()
     val cents = SimilarityOps.ivfCentroidsNorm(corpus, 16)
-    val assigned = SimilarityOps.ivfMultiAssignNormWith(corpus, cents, 2)
+    val assigned = SimilarityOps.assignCellsNorm(corpus, cents, 2)
     val top = assigned.groupBy("cell").count()
       .agg(max("count")).collect()(0).getLong(0)
     assert(top >= 1800L, s"hot cluster should land in one cell, top=$top")

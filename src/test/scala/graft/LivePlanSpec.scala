@@ -197,13 +197,14 @@ class LivePlanSpec extends AnyFunSuite with SparkTestBase {
 
   test("banded screens never go all-pairs (no cartesian product)") {
     val docs = Tables.documents(spark, sf)
-    val pairs = ops.DedupOps.simhashHammingPairs(docs, 32, 4, 3)
+    val pairs = ops.DedupOps.simhashHammingPairsFromSigs(
+      ops.DedupOps.simhash(docs, 32), 32, 4, 3)
     val pairsPlan = executedPlan(pairs)
     assert(!pairsPlan.contains("CartesianProduct"),
       s"simhash pair screen degenerated to all-pairs:\n$pairsPlan")
 
-    val lsh = ops.SimilarityOps.lshTopK(
-      Tables.embeddings(spark, sf), Seq(0L, 1L), 5, 16, 4)
+    val corpus = ops.SimilarityOps.normalizedCorpus(Tables.embeddings(spark, sf))
+    val lsh = ops.SimilarityOps.lshTopKNorm(corpus, Seq(0L, 1L), 5, 16, 4)
     val lshPlan = executedPlan(lsh)
     assert(!lshPlan.contains("CartesianProduct"),
       s"LSH candidate join degenerated to all-pairs:\n$lshPlan")
@@ -216,8 +217,8 @@ class LivePlanSpec extends AnyFunSuite with SparkTestBase {
     // the blocked embedding near-dup: candidate generation must be
     // equality-keyed on the cell id — the only non-equi join allowed is
     // the broadcast of the 16-row centroid set
-    val blocked = ops.SimilarityOps.cosineNearDupPairsBlocked(
-      Tables.embeddings(spark, sf), 0.4, 16, 2)
+    val blocked = ops.SimilarityOps.cosineNearDupPairsBlockedNormWith(
+      corpus, ops.SimilarityOps.ivfCentroidsNorm(corpus, 16), 0.4, 2)
     val bPlan = executedPlan(blocked)
     assert(!bPlan.contains("CartesianProduct"),
       s"blocked near-dup degenerated to all-pairs:\n$bPlan")

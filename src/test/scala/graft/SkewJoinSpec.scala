@@ -120,7 +120,8 @@ class SkewJoinSpec extends AnyFunSuite with SparkTestBase {
         .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
     val n = planted.count()
     val (nh, band) = (12, 3)
-    val sigs = ops.DedupOps.minhashSignatures(planted, 3, nh).cache()
+    val sigs = ops.DedupOps.minhashSignaturesFromIndex(
+      ops.DedupOps.docShingleHashes(planted, 3), nh).cache()
     try {
       val banded = ops.DedupOps.bandedSignatures(sigs, nh, band)
       val bandDf = banded.groupBy(col("band_key"))
