@@ -21,7 +21,11 @@ import org.apache.spark.sql.SparkSession
   * masquerading as a code regression. The `codegen_compiles` map
   * records per query how many classes whole-stage codegen compiled
   * over its reps (Spark's CodegenMetrics): a query that keeps
-  * compiling after its first rep misses Spark's codegen cache.
+  * compiling after its first rep misses Spark's codegen cache. The
+  * `streaming` map records, for each query that runs streaming queries,
+  * their progress summed over its reps (a `StreamingQueryListener`):
+  * micro-batches, the state-store count and the `triggerExecution` and
+  * `addBatch` milliseconds.
   *
   * Output protocol (the driver captures only the LAST 2000 chars of
   * stdout — round 5's 6.5 KB single-line JSON was truncated to
@@ -115,6 +119,10 @@ object Bench {
     def compiles: Long = org.apache.spark.metrics.source.CodegenMetrics
       .METRIC_COMPILATION_TIME.getCount
     val errs = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    val streamStats = new streaming.StreamingStats
+    spark.streams.addListener(streamStats)
+    val streams = scala.collection.mutable.ArrayBuffer
+      .empty[(String, streaming.StreamingStats.Totals)]
     names.foreach { n =>
       val compiles0 = compiles
       force(n) match {
@@ -129,6 +137,8 @@ object Bench {
           ok += ((n, times(times.length / 2), times.last - times.head,
             compiles - compiles0))
       }
+      val st = streamStats.drain()
+      if (st.batches > 0) streams += (n -> st)
     }
 
     def r3(x: Double) = math.rint(x * 1000) / 1000
@@ -140,8 +150,10 @@ object Bench {
     val spread = jmap(ok.toSeq.map(r => r._1 -> r3(r._3).toString))
     val codegen = jmap(ok.toSeq.map(r => r._1 -> r._4.toString))
     val errJson = jmap(errs.toSeq.map { case (n, e) => n -> jstr(e) })
+    val streamJson = jmap(streams.toSeq.map { case (n, t) => n ->
+      s"""{"batches":${t.batches},"state_partitions":${t.stateParts},"trigger_ms":${t.triggerMs},"addbatch_ms":${t.addBatchMs}}""" })
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"reps":$reps,"errors":$errJson,"spread":$spread,"codegen_compiles":$codegen,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"reps":$reps,"errors":$errJson,"spread":$spread,"codegen_compiles":$codegen,"streaming":$streamJson,"sf":"$sfDir"}"""
     // Full JSON: to a file (always parseable) and the log (for humans).
     try {
       val p = java.nio.file.Paths.get("BENCH_FULL.json")

@@ -295,12 +295,17 @@ object GraftFunctions {
     "graft_nearest_cells" -> (es => GraftNearestCells.fromArgs(es)))
 
   /** Idempotent per-session registration (works under any driver-created
-    * session — same pattern as Tables.events' runtime conf). */
-  def register(spark: SparkSession): Unit =
+    * session — same pattern as Tables.events' runtime conf): a function
+    * the session's registry already holds keeps its builder, so the
+    * operators that call this on every frame they build register each
+    * function once per session. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     builders.foreach { case (name, b) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, b, "built-in")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, b, "built-in")
     }
+  }
 }
 
 /** SparkSessionExtensions hook: `--conf

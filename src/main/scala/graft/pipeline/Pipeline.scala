@@ -50,21 +50,46 @@ object Pipeline {
     // interleaving changes (measured r15: the e2e row barely
     // parallelized, c8/c32 ratio 1.16, because six tiny jobs ran back
     // to back on a 32-core box).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
+    //
+    // Failure path: every overlapped stage's jobs carry one job tag (a
+    // tag, not a job group, so the caller's group and local properties
+    // stay as they were). The first failed stage cancels its tagged
+    // siblings, and the run waits for every sibling before it rethrows,
+    // so no job of the run outlives the call.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    try {
-      runDailyPhases(spark, fixtureDir, workDir)(ec)
-    } finally pool.shutdown()
+    val stages = new Stages(spark.sparkContext,
+      s"graft-pipeline-${java.util.UUID.randomUUID()}",
+      scala.concurrent.ExecutionContext.fromExecutor(pool))
+    try runDailyPhases(spark, fixtureDir, workDir, stages)
+    finally pool.shutdown()
+  }
+
+  /** The overlapped stages of one run, their jobs under the tag `tag`. */
+  private final class Stages(sc: org.apache.spark.SparkContext, tag: String,
+                             pool: scala.concurrent.ExecutionContext) {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+
+    def submit(body: => Unit): Future[Unit] = Future {
+      sc.addJobTag(tag)
+      try body finally sc.removeJobTag(tag)
+    }(pool)
+
+    /** Wait for `fs`. On the first failure cancel the run's tagged jobs,
+      * wait for every sibling to finish, then rethrow that failure. */
+    def awaitAll(fs: Future[Unit]*): Unit = {
+      implicit val callbacks: ExecutionContext = ExecutionContext.parasitic
+      try Await.result(Future.sequence(fs), Duration.Inf) // fails fast
+      catch { case e: Throwable =>
+        sc.cancelJobsWithTag(tag)
+        fs.foreach(Await.ready(_, Duration.Inf))
+        throw e
+      }
+    }
   }
 
   private def runDailyPhases(spark: SparkSession, fixtureDir: String,
-                             workDir: String)(
-      implicit ec: scala.concurrent.ExecutionContext): Result = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
+                             workDir: String, stages: Stages): Result = {
     // E1: ingest + normalize + day-partitioned parquet warehouse
     val obsWh = new org.apache.spark.sql.Observation("wh_rows")
     val ticks = TickOps.normalizeEvents(Tables.events(spark, fixtureDir))
@@ -72,7 +97,7 @@ object Pipeline {
     // cluster rows by the partition column before the partitioned write:
     // one file per date instead of (#tasks × #dates) small files — the
     // standard small-files discipline for a partitioned warehouse
-    val fWh = Future {
+    val fWh = stages.submit {
       ticks.observe(obsWh, count(lit(1)).as("n"))
         .repartition(col("trade_date"))
         .write.mode(SaveMode.Overwrite)
@@ -81,13 +106,12 @@ object Pipeline {
     }
     // E1b: CSV round-trip with explicit schema (S2/S7 surface) —
     // independent of the warehouse write, overlapped with it
-    val fCsv = Future {
+    val fCsv = stages.submit {
       ticks.drop("trade_date").limit(1000)
         .write.mode(SaveMode.Overwrite).option("header", "true")
         .csv(s"$workDir/export/ticks_csv")
     }
-    Await.result(fWh, Duration.Inf)
-    Await.result(fCsv, Duration.Inf) // read-back lists files at resolution
+    stages.awaitAll(fWh, fCsv) // read-back lists files at resolution
     val warehouse = spark.read.parquet(s"$workDir/warehouse/ticks")
     val csvBack = spark.read.option("header", "true")
       .schema(tickCsvSchema).csv(s"$workDir/export/ticks_csv")
@@ -96,68 +120,66 @@ object Pipeline {
     // (the reference re-reads the raw files per check; here the warehouse
     // scan is shared and cached across the QC branches)
     warehouse.cache()
-    val qcCols = Seq("price", "qty", "trader_id")
-    val invalid = TickOps.invalidRows(warehouse, qcCols)
-    // reference universe = observed symbols + a planted absent one, so the
-    // bhavcopy-style missing-symbol report provably fires (expect 1)
-    val universe = warehouse.select("symbol").distinct()
-      .unionByName(spark.sql("SELECT 'GHOST' AS symbol"))
-    val missing = QualityOps.missingKeys(
-      universe, "symbol", warehouse.select("symbol"), "symbol")
-    val daily = TickOps.dailyOhlc(warehouse)
-    val hourly = TickOps.ohlcBars(warehouse, "1 hour")
-    val official = hourly
-      .groupBy(to_date(col("bar_start")).as("trade_date"), col("symbol"))
-      .agg(min_by(col("open"), col("bar_start")).as("open"),
-        max(col("high")).as("high"), min(col("low")).as("low"),
-        max_by(col("close"), col("bar_start")).as("close"))
-    val recon = QualityOps.reconcile(daily, official, Seq("trade_date", "symbol"))
-    // E2/E3 writes all read the one cached warehouse scan and are
-    // mutually independent — overlapped (§2.6); block-level cache locks
-    // make the concurrent first materialization compute-once
-    val obsInvalid = new org.apache.spark.sql.Observation("invalid_rows")
-    val fInvalid = Future {
-      invalid.observe(obsInvalid, count(lit(1)).as("n"))
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .option("header", "true").csv(s"$workDir/reports/invalid")
-    }
-    val obsRecon = new org.apache.spark.sql.Observation("recon_rows")
-    val fRecon = Future {
-      recon.observe(obsRecon, count(lit(1)).as("n"))
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .option("header", "true").csv(s"$workDir/reports/reconcile")
-    }
-    // E3: analytics materialization (the reference's MV → parquet table)
-    val fMv = Future {
-      hourly.write.mode(SaveMode.Overwrite)
-        .parquet(s"$workDir/warehouse/hourly_ohlc")
-    }
-    Await.result(fInvalid, Duration.Inf)
-    Await.result(fRecon, Duration.Inf)
-    Await.result(fMv, Duration.Inf)
+    try {
+      val qcCols = Seq("price", "qty", "trader_id")
+      val invalid = TickOps.invalidRows(warehouse, qcCols)
+      // reference universe = observed symbols + a planted absent one, so the
+      // bhavcopy-style missing-symbol report provably fires (expect 1)
+      val universe = warehouse.select("symbol").distinct()
+        .unionByName(spark.sql("SELECT 'GHOST' AS symbol"))
+      val missing = QualityOps.missingKeys(
+        universe, "symbol", warehouse.select("symbol"), "symbol")
+      val daily = TickOps.dailyOhlc(warehouse)
+      val hourly = TickOps.ohlcBars(warehouse, "1 hour")
+      val official = hourly
+        .groupBy(to_date(col("bar_start")).as("trade_date"), col("symbol"))
+        .agg(min_by(col("open"), col("bar_start")).as("open"),
+          max(col("high")).as("high"), min(col("low")).as("low"),
+          max_by(col("close"), col("bar_start")).as("close"))
+      val recon = QualityOps.reconcile(daily, official, Seq("trade_date", "symbol"))
+      // E2/E3 writes all read the one cached warehouse scan and are
+      // mutually independent — overlapped (§2.6); block-level cache locks
+      // make the concurrent first materialization compute-once
+      val obsInvalid = new org.apache.spark.sql.Observation("invalid_rows")
+      val fInvalid = stages.submit {
+        invalid.observe(obsInvalid, count(lit(1)).as("n"))
+          .coalesce(1).write.mode(SaveMode.Overwrite)
+          .option("header", "true").csv(s"$workDir/reports/invalid")
+      }
+      val obsRecon = new org.apache.spark.sql.Observation("recon_rows")
+      val fRecon = stages.submit {
+        recon.observe(obsRecon, count(lit(1)).as("n"))
+          .coalesce(1).write.mode(SaveMode.Overwrite)
+          .option("header", "true").csv(s"$workDir/reports/reconcile")
+      }
+      // E3: analytics materialization (the reference's MV → parquet table)
+      val fMv = stages.submit {
+        hourly.write.mode(SaveMode.Overwrite)
+          .parquet(s"$workDir/warehouse/hourly_ohlc")
+      }
+      stages.awaitAll(fInvalid, fRecon, fMv)
 
-    // Remaining counts (nothing wrote them): ONE union-of-aggregates job
-    // — each branch collapses to a single row before the union, so the
-    // driver fires one collect over four tiny partial aggregates (the
-    // warehouse scan is still shared via the cache above)
-    def labeled(df: DataFrame, label: String): DataFrame =
-      df.agg(count(lit(1)).as("n")).select(lit(label).as("k"), col("n"))
-    val counts = labeled(csvBack, "csv")
-      .unionByName(labeled(missing, "missing"))
-      .unionByName(labeled(spark.read.parquet(s"$workDir/warehouse/hourly_ohlc"), "hourly"))
-      .unionByName(warehouse.agg(countDistinct(col("trade_date")).as("n"))
-        .select(lit("partitions").as("k"), col("n")))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val result = Result(
-      warehouseRows = obsWh.get("n").asInstanceOf[Long],
-      csvRoundtripRows = counts("csv"),
-      invalidRows = obsInvalid.get("n").asInstanceOf[Long],
-      missingSymbols = counts("missing"),
-      reconcileRows = obsRecon.get("n").asInstanceOf[Long],
-      hourlyBars = counts("hourly"),
-      partitions = counts("partitions"))
-    warehouse.unpersist()
-    result
+      // Remaining counts (nothing wrote them): ONE union-of-aggregates job
+      // — each branch collapses to a single row before the union, so the
+      // driver fires one collect over four tiny partial aggregates (the
+      // warehouse scan is still shared via the cache above)
+      def labeled(df: DataFrame, label: String): DataFrame =
+        df.agg(count(lit(1)).as("n")).select(lit(label).as("k"), col("n"))
+      val counts = labeled(csvBack, "csv")
+        .unionByName(labeled(missing, "missing"))
+        .unionByName(labeled(spark.read.parquet(s"$workDir/warehouse/hourly_ohlc"), "hourly"))
+        .unionByName(warehouse.agg(countDistinct(col("trade_date")).as("n"))
+          .select(lit("partitions").as("k"), col("n")))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      Result(
+        warehouseRows = obsWh.get("n").asInstanceOf[Long],
+        csvRoundtripRows = counts("csv"),
+        invalidRows = obsInvalid.get("n").asInstanceOf[Long],
+        missingSymbols = counts("missing"),
+        reconcileRows = obsRecon.get("n").asInstanceOf[Long],
+        hourlyBars = counts("hourly"),
+        partitions = counts("partitions"))
+    } finally warehouse.unpersist()
   }
 
   /** The pipeline result as a one-row DataFrame (driver-contract shape). */

@@ -3,7 +3,10 @@ package graft.streaming
 import java.nio.file.{Files, Paths}
 import java.util.Collections
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /** The streaming module's shared machinery: the one AvailableNow runner
@@ -12,22 +15,23 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   * fixture-table stream reader.
   *
   * Streaming-query sizing: `spark.sql.shuffle.partitions` doubles as the
-  * STATE STORE count for stateful streaming (fixed at the first
-  * checkpoint), and every micro-batch commits every store — so a
-  * stateful query's partition count should track its stateful-key
-  * throughput, not the batch engine's scan width. The fixtures carry a
-  * few active keys per store at 32 partitions and pay ~3× the runtime in
-  * commit overhead (measured: 13.7 s → 4.0 s on the stream-stream join
-  * at sf0.1 going 32 → 8). On a cluster the same sizing is done
-  * per-query; 8 here keeps local runs honest without changing results.
-  * foreachBatch operators get the same width: each micro-batch carries
-  * ~one file of data and the per-trigger cost scales with tasks, not
-  * data (round-12 experiment: the foreachBatch family ran ~2× slower at
-  * local[32] than at local[8] purely from tasks per trigger).
+  * STATE STORE count for stateful streaming, and every micro-batch opens,
+  * writes and commits every store, so the per-trigger cost scales with
+  * stores, not data. The runner sizes the count from the stream's own
+  * input ([[statePartitions]]): the bytes in the backlog of its file
+  * sources over `spark.sql.adaptive.advisoryPartitionSizeInBytes` (the
+  * size AQE already aims a batch shuffle partition at), clamped to
+  * [1, the session's `spark.sql.shuffle.partitions`]. The count is fixed
+  * at the query's first checkpoint: a restart keeps the count its offset
+  * log recorded, whatever the backlog then, so a daily `AvailableNow` run
+  * is sized by one day's backlog. The fixtures (2 MB of events at sf0.1)
+  * get one store. Measured on perfbench's traced `etl_daily` (sf0.01,
+  * `local[4]`), `streaming_ohlc_hourly`'s `addBatch` took 1.04–1.09 s at
+  * the former fixed 8 stores and 0.66–0.79 s at one.
+  * foreachBatch operators run their per-batch work at the same width:
+  * each micro-batch carries about one file of data.
   */
 private[graft] object StreamingConf {
-
-  val StateParts = 8
 
   /** Run `body` (start + await a streaming query) with the shuffle
     * partition count temporarily sized for state, restoring after.
@@ -45,7 +49,7 @@ private[graft] object StreamingConf {
     * own query registry executes one query at a time per session
     * (Verify/Bench are sequential), so the in-place toggle is safe
     * everywhere it is used here. */
-  def withStatePartitions[T](spark: SparkSession, n: Int = StateParts)(body: => T): T =
+  def withStatePartitions[T](spark: SparkSession, n: Int)(body: => T): T =
     withConf(spark, "spark.sql.shuffle.partitions", n.toString)(body)
 
   /** Run `body` with the session conf `key` set to `value`, then leave
@@ -63,12 +67,14 @@ private[graft] object StreamingConf {
     }
   }
 
-  /** Run `writer`'s query under `Trigger.AvailableNow` (process
-    * everything available, then stop) at state-sized shuffle width and
-    * wait for it to finish. */
-  def runAvailableNow(spark: SparkSession, writer: DataStreamWriter[_]): Unit =
-    withStatePartitions(spark) {
-      writer.trigger(Trigger.AvailableNow()).start().awaitTermination()
+  /** Run `stream` under `Trigger.AvailableNow` (process everything
+    * available, then stop) into the sink `sink` configures, with
+    * [[statePartitions]] state stores, and wait for it to finish. */
+  def runAvailableNow(stream: DataFrame)
+                     (sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit =
+    withStatePartitions(stream.sparkSession, statePartitions(stream)) {
+      sink(stream.writeStream).trigger(Trigger.AvailableNow()).start()
+        .awaitTermination()
     }
 
   /** Memory-sink form, the harness adapter: run `stream` into the
@@ -76,10 +82,31 @@ private[graft] object StreamingConf {
     * reads the result back synchronously. */
   def runAvailableNow(stream: DataFrame, queryName: String,
                       outputMode: String): DataFrame = {
+    runAvailableNow(stream)(
+      _.format("memory").queryName(queryName).outputMode(outputMode))
+    stream.sparkSession.table(queryName)
+  }
+
+  /** The state-store count for `stream`: the bytes in the backlog of its
+    * file sources (every streaming file source in its plan, listed now)
+    * over AQE's advisory partition size, rounded up, clamped to
+    * [1, `spark.sql.shuffle.partitions`]. A source that is not a file
+    * source adds no bytes. */
+  def statePartitions(stream: DataFrame): Int = {
     val spark = stream.sparkSession
-    runAvailableNow(spark, stream.writeStream.format("memory")
-      .queryName(queryName).outputMode(outputMode))
-    spark.table(queryName)
+    val conf = spark.sessionState.conf
+    val hadoop = spark.sessionState.newHadoopConf()
+    val backlog = stream.queryExecution.analyzed.collect {
+      case r: StreamingRelation => r.dataSource.options.get("path").toSeq ++ r.dataSource.paths
+    }.flatten.map { p =>
+      val path = new Path(p)
+      val fs = path.getFileSystem(hadoop)
+      Option(fs.globStatus(path)).toSeq.flatten
+        .map(s => fs.getContentSummary(s.getPath).getLength).sum
+    }.sum
+    val target = conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    math.min(conf.numShufflePartitions.toLong,
+      math.max(1L, (backlog + target - 1) / target)).toInt
   }
 
   /** The fixture table `table` of `dir` as a file stream. The file-stream
@@ -123,17 +150,33 @@ private[graft] object StreamingConf {
     * (partition-discovered) and is dropped from the result. */
   def replaySafeAvailableNow(stream: DataFrame, workDir: String)
                             (transform: DataFrame => DataFrame): DataFrame = {
-    val spark = stream.sparkSession
-    val out = s"$workDir/sink"
-    transform(spark.createDataFrame(Collections.emptyList[Row](), stream.schema))
-      .write.mode("overwrite").parquet(s"$out/batch_id=-1")
-    runAvailableNow(spark, stream.writeStream
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
-        val dest = s"$out/batch_id=$batchId"
+    replaySafeSinks(stream, workDir, "sink" -> transform)
+    stream.sparkSession.read.parquet(s"$workDir/sink").drop("batch_id")
+  }
+
+  /** [[replaySafeAvailableNow]] for an operator that lands several tables
+    * per micro-batch: each `(name, transform)` lands under
+    * `workDir/name/batch_id=N` with the same seed, `_SUCCESS` skip and
+    * checkpoint (`workDir/ckpt`); the micro-batch is cached while its
+    * tables are written. Nothing is read back. */
+  def replaySafeSinks(stream: DataFrame, workDir: String,
+                      sinks: (String, DataFrame => DataFrame)*): Unit = {
+    def land(batch: DataFrame, batchId: Long): Unit =
+      sinks.foreach { case (name, transform) =>
+        val dest = s"$workDir/$name/batch_id=$batchId"
         if (!Files.exists(Paths.get(dest, "_SUCCESS")))
-          transform(b).write.mode("overwrite").parquet(dest)
+          transform(batch).write.mode("overwrite").parquet(dest)
+      }
+    land(stream.sparkSession.createDataFrame(
+      Collections.emptyList[Row](), stream.schema), -1)
+    runAvailableNow(stream)(_
+      .foreachBatch { (b: DataFrame, batchId: Long) =>
+        if (sinks.size == 1) land(b, batchId)
+        else {
+          b.persist()
+          try land(b, batchId) finally b.unpersist()
+        }
       }
       .option("checkpointLocation", s"$workDir/ckpt"))
-    spark.read.parquet(out).drop("batch_id")
   }
 }

@@ -119,9 +119,8 @@ object StreamingJoin {
                                windowSec: Int = 3600,
                                queryName: String = "streaming_join_files",
                                maxFilesPerTrigger: Option[Int] = None): String = {
-    StreamingConf.runAvailableNow(spark,
-      followersPlan(spark, dir, threshold, windowSec, maxFilesPerTrigger)
-        .writeStream
+    StreamingConf.runAvailableNow(
+      followersPlan(spark, dir, threshold, windowSec, maxFilesPerTrigger))(_
         .format("parquet")
         .option("path", s"$outDir/pairs")
         .option("checkpointLocation", s"$outDir/checkpoint")

@@ -46,8 +46,8 @@ object StreamingOhlc {
   def hourlyOhlcToFiles(spark: SparkSession, dir: String, outDir: String,
                         queryName: String = "streaming_ohlc_files",
                         maxFilesPerTrigger: Option[Int] = None): String = {
-    StreamingConf.runAvailableNow(spark,
-      hourlyBarsStream(spark, dir, maxFilesPerTrigger).writeStream
+    StreamingConf.runAvailableNow(
+      hourlyBarsStream(spark, dir, maxFilesPerTrigger))(_
         .format("parquet")
         .option("path", s"$outDir/bars")
         .option("checkpointLocation", s"$outDir/checkpoint")

@@ -1,41 +1,28 @@
 package graft.streaming
 
 import graft.ops.TickOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 
 /** Streaming quality-check sinks (SURVEY.md §2.9: "QC checks become
   * foreachBatch sinks"): each micro-batch of the tick stream fans out to
-  * the E2 report branches — invalid rows appended to a quarantine table,
-  * per-symbol QC counters merged into a running summary. foreachBatch
-  * gives batch-DataFrame semantics (joins, overwrite/append sinks) per
-  * micro-batch, which is exactly the reference's per-day report shape
-  * replayed incrementally.
+  * the E2 report branches — invalid rows to a quarantine table, per-symbol
+  * QC counters to a summary table whose per-batch partials sum to the
+  * batch report. Both tables land through the replay-safe sink
+  * ([[StreamingConf.replaySafeSinks]]), so a redelivered micro-batch
+  * cannot count twice.
   */
 object StreamingQc {
 
   /** Run the QC stream to completion; returns (quarantine dir, summary
-    * dir) with parquet results. */
+    * dir) with parquet results, partitioned by `batch_id`. */
   def runAvailableNow(spark: SparkSession, dir: String, workDir: String,
                       maxFilesPerTrigger: Option[Int] = None): (String, String) = {
-    val quarantine = s"$workDir/quarantine"
-    val summary = s"$workDir/summary"
     val ticks = TickOps.normalizeEvents(
       StreamingConf.tableStream(spark, dir, "events", maxFilesPerTrigger))
     val qcCols = Seq("price", "qty", "trader_id")
-    StreamingConf.runAvailableNow(spark, ticks.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.cache()
-        TickOps.invalidRows(b, qcCols)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(quarantine)
-        graft.ops.QualityOps.invalidSummary(b, qcCols, "symbol")
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(summary)
-        b.unpersist()
-        ()
-      })
-    (quarantine, summary)
+    StreamingConf.replaySafeSinks(ticks, workDir,
+      "quarantine" -> (b => TickOps.invalidRows(b, qcCols)),
+      "summary" -> (b => graft.ops.QualityOps.invalidSummary(b, qcCols, "symbol")))
+    (s"$workDir/quarantine", s"$workDir/summary")
   }
 }

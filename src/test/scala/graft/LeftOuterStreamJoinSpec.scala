@@ -20,7 +20,7 @@ class LeftOuterStreamJoinSpec extends AnyFunSuite with SparkTestBase {
     new java.sql.Timestamp(baseUs / 1000L + seconds * 1000L)
 
   test("unmatched left rows emit null-padded once the watermark passes") {
-    graft.streaming.StreamingConf.withStatePartitions(spark) {
+    graft.streaming.StreamingConf.withStatePartitions(spark, 8) {
       val inA = MemoryStream[(String, java.sql.Timestamp, Long)]
       val inB = MemoryStream[(String, java.sql.Timestamp, Long)]
       val a = inA.toDF().toDF("symbol", "a_ts", "a_id")

@@ -23,7 +23,7 @@ class OutOfOrderSessionSpec extends AnyFunSuite with SparkTestBase {
     new java.sql.Timestamp(baseUs / 1000L + minutes * 60000L)
 
   test("cross-batch out-of-order events sessionize identically to the batch twin") {
-    graft.streaming.StreamingConf.withStatePartitions(spark) {
+    graft.streaming.StreamingConf.withStatePartitions(spark, 8) {
       val input = MemoryStream[(Long, java.sql.Timestamp)]
       val sessions = SessionOps.sessionizeStreamWatermarked(
         input.toDF().toDF("user_id", "event_ts"),
@@ -77,7 +77,7 @@ class OutOfOrderSessionSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("an event later than the watermark allows is dropped, not misfiled") {
-    graft.streaming.StreamingConf.withStatePartitions(spark) {
+    graft.streaming.StreamingConf.withStatePartitions(spark, 8) {
       val input = MemoryStream[(Long, java.sql.Timestamp)]
       val sessions = SessionOps.sessionizeStreamWatermarked(
         input.toDF().toDF("user_id", "event_ts"),

@@ -35,7 +35,7 @@ class StateBoundsSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("watermarked sessionizer state plateaus as the watermark advances") {
-    graft.streaming.StreamingConf.withStatePartitions(spark) {
+    graft.streaming.StreamingConf.withStatePartitions(spark, 8) {
       val input = MemoryStream[(Long, java.sql.Timestamp)]
       // the sessionizer applies its own watermark (delayMinutes)
       val events = input.toDF().toDF("user_id", "event_ts")
@@ -73,7 +73,7 @@ class StateBoundsSpec extends AnyFunSuite with SparkTestBase {
 
   test("watermarked funnel state plateaus: terminal users stay two scalars, " +
     "pending buffers drain") {
-    graft.streaming.StreamingConf.withStatePartitions(spark) {
+    graft.streaming.StreamingConf.withStatePartitions(spark, 8) {
       val steps = Seq("view", "click", "purchase")
       val input = MemoryStream[(Long, java.sql.Timestamp, String)]
       val stepEvents = BehaviorOps.toStepEvents(
@@ -114,7 +114,7 @@ class StateBoundsSpec extends AnyFunSuite with SparkTestBase {
 
   test("left-outer stream-stream join state plateaus: watermark evicts " +
     "both buffers") {
-    graft.streaming.StreamingConf.withStatePartitions(spark) {
+    graft.streaming.StreamingConf.withStatePartitions(spark, 8) {
       val inA = MemoryStream[(String, java.sql.Timestamp, Long)]
       val inB = MemoryStream[(String, java.sql.Timestamp, Long)]
       val a = inA.toDF().toDF("symbol", "a_ts", "a_id")

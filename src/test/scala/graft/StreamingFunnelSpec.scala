@@ -23,7 +23,7 @@ class StreamingFunnelSpec extends AnyFunSuite with SparkTestBase {
 
   test("in-order stream across batches matches the batch machine " +
     "and never re-emits a converted step") {
-    graft.streaming.StreamingConf.withStatePartitions(spark) {
+    graft.streaming.StreamingConf.withStatePartitions(spark, 8) {
       val input = MemoryStream[(Long, java.sql.Timestamp, String)]
       val stepEvents = BehaviorOps.toStepEvents(
           input.toDF().toDF("user_id", "event_ts", "event_type"), steps)
@@ -53,7 +53,7 @@ class StreamingFunnelSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("watermarked stream converts correctly under cross-batch disorder") {
-    graft.streaming.StreamingConf.withStatePartitions(spark) {
+    graft.streaming.StreamingConf.withStatePartitions(spark, 8) {
       val input = MemoryStream[(Long, java.sql.Timestamp, String)]
       val stepEvents = BehaviorOps.toStepEvents(
           input.toDF().toDF("user_id", "event_ts", "event_type"), steps)
@@ -93,7 +93,7 @@ class StreamingFunnelSpec extends AnyFunSuite with SparkTestBase {
 
   test("watermarked stream keeps terminal state: a fully-converted user's " +
     "later activity never re-runs the machine") {
-    graft.streaming.StreamingConf.withStatePartitions(spark) {
+    graft.streaming.StreamingConf.withStatePartitions(spark, 8) {
       val input = MemoryStream[(Long, java.sql.Timestamp, String)]
       val stepEvents = BehaviorOps.toStepEvents(
           input.toDF().toDF("user_id", "event_ts", "event_type"), steps)

@@ -30,7 +30,7 @@ class StreamingQuotaSpec extends AnyFunSuite with SparkTestBase {
 
   private def runSliced(name: String, slices: Seq[Seq[(String, Long)]]):
       Set[StreamingQuota.Admit] =
-    graft.streaming.StreamingConf.withStatePartitions(spark) {
+    graft.streaming.StreamingConf.withStatePartitions(spark, 8) {
       val input = MemoryStream[(String, Long)]
       val q = StreamingQuota.quotaStream(input.toDS(), quota)
         .writeStream.format("memory").queryName(name)

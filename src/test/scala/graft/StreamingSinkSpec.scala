@@ -282,12 +282,20 @@ class StreamingSinkSpec extends AnyFunSuite with SparkTestBase {
   }
 
   /** Every operator on the replay-safe foreachBatch sink, as
-    * (name, work dir => streamed result). */
+    * (name, work dir => streamed result). Each lands its micro-batches
+    * under `sink/batch_id=N` of its work dir, except QC, which lands two
+    * tables ([[sinkTables]]); its result is `streaming_qc_summary`'s
+    * per-symbol sums. */
   private lazy val sinkInputs: Seq[(String, String => org.apache.spark.sql.DataFrame)] = {
     import graft.streaming._
     val one = Some(1)
     val (superCents, children, _) = graft.queries.Staged.annIndex(spark, sf, 2, 2)
     Seq(
+      "qc" -> (w => {
+        val (_, summary) = StreamingQc.runAvailableNow(spark, replaySrc, w, one)
+        spark.read.parquet(summary).groupBy(col("symbol"))
+          .agg(sum(col("n_rows")).as("n_rows"), sum(col("n_invalid")).as("n_invalid"))
+      }),
       "pii" -> (w => StreamingPii.scanAvailableNow(spark, replaySrc, w,
         _.select(col("doc_id"), col("text")), one)),
       "ann append" -> (w => StreamingAnn.appendAvailableNow(spark, replaySrc,
@@ -299,6 +307,9 @@ class StreamingSinkSpec extends AnyFunSuite with SparkTestBase {
       "cdf consumer" -> (w => StreamingCdf.consumeAvailableNow(spark,
         graft.queries.Staged.snapshotTable(spark, sf), w, "o_orderkey")))
   }
+
+  private def sinkTables(name: String): Seq[String] =
+    if (name == "qc") Seq("quarantine", "summary") else Seq("sink")
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
@@ -329,14 +340,16 @@ class StreamingSinkSpec extends AnyFunSuite with SparkTestBase {
       assert(first.nonEmpty, s"$name: first run returned nothing")
       // the crash: the last batch's output is partly written (files, no
       // _SUCCESS) and its commit never reached the checkpoint, so the
-      // restart re-executes that batch into its partial directory
+      // restart re-executes that batch into its partial directories
       val commits = new java.io.File(s"$work/ckpt/commits")
       val last = commits.list().filter(_.forall(_.isDigit)).map(_.toLong).max
       Seq(s"$last", s".$last.crc").foreach(f => new java.io.File(commits, f).delete())
-      val partial = s"$work/sink/batch_id=$last"
-      assert(new java.io.File(s"$partial/_SUCCESS").delete(),
-        s"$name: batch $last left no _SUCCESS to remove")
-      new java.io.File(s"$partial/._SUCCESS.crc").delete()
+      sinkTables(name).foreach { table =>
+        val partial = s"$work/$table/batch_id=$last"
+        assert(new java.io.File(s"$partial/_SUCCESS").delete(),
+          s"$name: batch $last left no _SUCCESS to remove in $table")
+        new java.io.File(s"$partial/._SUCCESS.crc").delete()
+      }
       val again = rows(run(work))
       if (again != first)
         fail(s"$name: restart after a partial batch $last changed the " +

@@ -11,6 +11,29 @@ import org.scalatest.funsuite.AnyFunSuite
 class VectorExprSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 
+  test("GraftFunctions.register registers each function once per session") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val session = spark.newSession()
+    val registry = session.sessionState.functionRegistry
+    def graftFns = registry.listFunction().map(_.funcName)
+      .filter(_.startsWith("graft_")).sorted
+    def registered = graftFns.map { n =>
+      val id = FunctionIdentifier(n)
+      n -> ((registry.lookupFunction(id).get, registry.lookupFunctionBuilder(id).get))
+    }
+    graft.functions.GraftFunctions.register(session)
+    val first = registered
+    assert(first.map(_._1).contains("graft_dot"))
+    graft.functions.GraftFunctions.register(session)
+    val again = registered
+    assert(again.map(_._1) == first.map(_._1))
+    first.zip(again).foreach { case ((n, (info, builder)), (_, (info2, builder2))) =>
+      assert((info eq info2) && (builder eq builder2), s"$n was registered again")
+    }
+    assert(session.sql("SELECT graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D))")
+      .first().getDouble(0) == 11.0)
+  }
+
   test("graft_l2norm is bit-identical to the HOF normalize on fixture embeddings") {
     graft.functions.GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, "/root/testdata/sf0.01")
