@@ -159,7 +159,9 @@ case class ArrayL2Normalize(child: Expression)
   * centroid_id ASC) — exactly the ordering of the declarative
   * crossJoin + row_number() formulation it replaces, so cell
   * assignments (and therefore the DuckDB-mirrored blocking results)
-  * are bit-identical.
+  * are bit-identical. It serves both sides of an IVF index: the corpus
+  * side's cell assignment and the query side's cell probe
+  * (SimilarityOps.assignCellsNorm / probeCells).
   *
   * WHY: the declarative assignment materializes n × nCells rows and
   * SHUFFLES them through a per-vector window sort. With
@@ -212,10 +214,12 @@ case class GraftNearestCells(cellIds: Array[Long], flatCents: Array[Double],
       Integer.valueOf(java.util.Arrays.hashCode(flatCents)),
       Integer.valueOf(nprobe), child)
 
-  /** Spark's round(x, 6) (HALF_UP decimal) — must match the declarative
-    * twin's `round(graft_dot(...), 6)` bit-for-bit. */
+  /** Spark's round(x, 6) bit for bit: HALF_UP on the SHORTEST decimal
+    * form (`BigDecimal.valueOf`, as Spark's Round codegen does), not the
+    * exact binary value — at 5e-7 the exact value rounds to 0 and Spark
+    * to 1e-6. */
   private def round6(x: Double): Double =
-    new java.math.BigDecimal(x)
+    java.math.BigDecimal.valueOf(x)
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
   override def nullSafeEval(input: Any): Any = {

@@ -167,8 +167,7 @@ object GraphAnnOps {
         s"beam=$beam, k=$k) — a 0-step walk has no final beam to rank")
     val spark = corpus.sparkSession
     import spark.implicits._
-    val queries = corpus.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("n_emb").as("q_emb"))
+    val queries = SimilarityOps.queryVectors(corpus, queryIds)
     val nodes = corpus.select(col("vec_id").as("node"), col("n_emb"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("sim").desc, col("node").asc)

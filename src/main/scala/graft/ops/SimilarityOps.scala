@@ -57,18 +57,26 @@ object SimilarityOps {
     embeddings.select(col("vec_id"), l2Normalize(col("embedding")).as("n_emb"))
   }
 
-  /** The per-query top-k rule every ANN operator (and its DuckDB
-    * oracle) shares: rank each query's scored rows by (`score` DESC,
-    * neighbor_id ASC) into `rank`, keep rank <= k. The window partitions
-    * by query, so each partition ranks locally and only k rows per query
-    * reach the final merge. */
-  private[ops] def topKPerQuery(scored: DataFrame, k: Int,
-                                score: String = "cosine_sim"): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
+  /** The per-query top-k rule every ANN and retrieval ranking (and its
+    * DuckDB oracle) shares: rank each query's scored rows by (`score`
+    * DESC, neighbor_id ASC) into `rank`, keep rank <= k. The window
+    * partitions by query — and by the `by` columns, for one cut per
+    * (query, arm) group — so each partition ranks locally and only k
+    * rows per group reach the final merge. */
+  private[graft] def topKPerQuery(scored: DataFrame, k: Int,
+                                  score: String = "cosine_sim",
+                                  by: Seq[String] = Nil): DataFrame = {
+    val w = Window.partitionBy((col("query_id") +: by.map(col)): _*)
       .orderBy(col(score).desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
   }
+
+  /** The query frame every ANN operator scores against: the `queryIds`
+    * rows of a normalized (vec_id, n_emb) corpus as (query_id, q_emb). */
+  def queryVectors(corpus: DataFrame, queryIds: Seq[Long]): DataFrame =
+    corpus.filter(col("vec_id").isInCollection(queryIds))
+      .select(col("vec_id").as("query_id"), col("n_emb").as("q_emb"))
 
   /** Brute-force cosine top-k over a normalized (vec_id, n_emb) corpus
     * ([[normalizedCorpus]] — the shape a production pipeline stages once
@@ -76,8 +84,7 @@ object SimilarityOps {
     * query. Queries are broadcast; ranking is a per-query-partition
     * window. */
   def bruteForceTopKNorm(corpus: DataFrame, queryIds: Seq[Long], k: Int): DataFrame = {
-    val queries = corpus.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("n_emb").as("q_emb"))
+    val queries = queryVectors(corpus, queryIds)
     topKPerQuery(corpus.join(broadcast(queries),
         col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
@@ -94,8 +101,7 @@ object SimilarityOps {
     * one window per query over ≤ a few dozen rows. */
   def rerankExactTopKNorm(corpus: DataFrame, cands: DataFrame,
                           queryIds: Seq[Long], k: Int): DataFrame = {
-    val queries = corpus.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("n_emb").as("q_emb"))
+    val queries = queryVectors(corpus, queryIds)
     topKPerQuery(cands.join(broadcast(queries), Seq("query_id"))
       .join(corpus.select(col("vec_id").as("neighbor_id"), col("n_emb")),
         Seq("neighbor_id"))
@@ -104,7 +110,9 @@ object SimilarityOps {
   }
 
   /** The top-`nprobe` nearest-cell column against a FIXED centroid
-    * table: collects the (nCells-bounded — n/targetCellSize rows, a few
+    * table — the one cell ranking of an IVF index, shared by the corpus
+    * side ([[assignCellsNorm]]) and the query side ([[probeCells]]):
+    * collects the (nCells-bounded — n/targetCellSize rows, a few
     * MB per million corpus vectors) centroid matrix to the driver and
     * evaluates the whole argmax as ONE codegen'd expression
     * (functions.GraftNearestCells). The declarative crossJoin +
@@ -166,6 +174,24 @@ object SimilarityOps {
       explode(nearestCellsCol(centroids, nprobe, col("n_emb"))).as("cell"))
   }
 
+  /** Query-side IVF probe — the one place a query is tagged with its
+    * `nprobe` nearest cells: (query_id, q_emb, probe_rank, cell), one
+    * row per probed cell, probe_rank 1 for the nearest. `queries` is a
+    * (query_id, q_emb) frame ([[queryVectors]]). The cells come from the
+    * same codegen'd argmax and (rounded-6dp cosine DESC, centroid_id
+    * ASC) rule as the corpus side ([[nearestCellsCol]]), so the probe
+    * needs no centroid cross join and no per-query window. A query
+    * whose vector is null drops out, as a corpus vector does. */
+  def probeCells(queries: DataFrame, centroids: DataFrame,
+                 nprobe: Int): DataFrame = {
+    graft.functions.GraftFunctions.register(queries.sparkSession)
+    queries.select(col("query_id"), col("q_emb"),
+        posexplode(nearestCellsCol(centroids, nprobe, col("q_emb")))
+          .as(Seq("pos", "cell")))
+      .select(col("query_id"), col("q_emb"),
+        (col("pos") + 1).as("probe_rank"), col("cell"))
+  }
+
   /** Deterministic spherical-k-means centroids: the `nCells` lowest-
     * vec_id vectors seed the cells, then `iters` Lloyd rounds refine
     * them — assign every vector to its nearest centroid, recompute each
@@ -211,27 +237,17 @@ object SimilarityOps {
     * curve can report scan cost (candidate count) next to recall, the
     * two axes a deployment trades off when sizing nprobe. Because each
     * arm of an nprobe sweep probes a PREFIX of the same
-    * (qc_sim DESC, centroid_id ASC) cell ranking, the arm-p candidate
-    * set is exactly `probe_rank <= p` of this one
-    * relation — the nprobe tuning curve derives all its arms from ONE
-    * corpus-side candidate join instead of one per arm (guide §2.3;
+    * [[probeCells]] ranking, the arm-p candidate set is exactly
+    * `probe_rank <= p` of this one relation — the nprobe tuning curve
+    * derives all its arms from ONE corpus-side candidate join instead
+    * of one per arm (guide §2.3;
     * the curve's before-plan carried 8 assignment subtrees / 174
     * Exchanges at 4 arms). */
   def ivfCandidatesNormRanked(corpus: DataFrame, centroids: DataFrame,
                               queryIds: Seq[Long], nprobe: Int): DataFrame = {
     val assigned = assignCellsNorm(corpus, centroids, 1)
-    val queries = corpus.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("n_emb").as("q_emb"))
-    val probeW = Window.partitionBy(col("query_id"))
-      .orderBy(col("qc_sim").desc, col("centroid_id").asc)
-    val probed = queries.join(broadcast(centroids), expr("true"))
-      .select(col("query_id"), col("q_emb"), col("centroid_id"),
-        dotCosine(col("q_emb"), col("c_emb")).as("qc_sim"))
-      .withColumn("probe_rank", row_number().over(probeW))
-      .filter(col("probe_rank") <= nprobe)
-      .select(col("query_id"), col("q_emb"), col("probe_rank"),
-        col("centroid_id").as("cell"))
-    probed.join(assigned, Seq("cell"))
+    probeCells(queryVectors(corpus, queryIds), centroids, nprobe)
+      .join(assigned, Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         col("probe_rank"),
@@ -339,10 +355,8 @@ object SimilarityOps {
                        children: DataFrame, assigned: DataFrame,
                        queryIds: Seq[Long], k: Int,
                        nprobe1: Int, nprobe2: Int): DataFrame = {
-    val queries = corpus.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("n_emb").as("q_emb"))
-    val qsuper = queries.select(col("query_id"), col("q_emb"),
-      explode(nearestCellsCol(superCents, nprobe1, col("q_emb"))).as("scell"))
+    val qsuper = probeCells(queryVectors(corpus, queryIds), superCents, nprobe1)
+      .select(col("query_id"), col("q_emb"), col("cell").as("scell"))
     val cw = Window.partitionBy(col("query_id"))
       .orderBy(col("qc").desc, col("sub_id").asc)
     // q_emb rides along with the query ids (|queries|·nprobe2 rows):
@@ -551,14 +565,7 @@ object SimilarityOps {
       .select(col("q.query_id").as("query_id"),
         col("c.vec_id").as("neighbor_id"))
       .distinct()
-    val queries = corpus.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("n_emb").as("q_emb"))
-    topKPerQuery(cands
-      .join(broadcast(queries), Seq("query_id"))
-      .join(corpus.select(col("vec_id").as("neighbor_id"), col("n_emb")),
-        Seq("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        dotCosine(col("q_emb"), col("n_emb")).as("cosine_sim")), k)
+    rerankExactTopKNorm(corpus, cands, queryIds, k)
   }
 
   /** Feature-hashing document embedder (hashing-trick bag of words):
@@ -770,16 +777,7 @@ object SimilarityOps {
                     layoutPath: String, centroids: DataFrame,
                     queries: DataFrame, queryIds: Seq[Long],
                     k: Int, nprobe: Int): DataFrame = {
-    val qs = queries.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("n_emb").as("q_emb"))
-    val probeW = Window.partitionBy(col("query_id"))
-      .orderBy(col("qc_sim").desc, col("centroid_id").asc)
-    val probed = qs.join(broadcast(centroids), expr("true"))
-      .select(col("query_id"), col("q_emb"), col("centroid_id"),
-        dotCosine(col("q_emb"), col("c_emb")).as("qc_sim"))
-      .withColumn("probe_rank", row_number().over(probeW))
-      .filter(col("probe_rank") <= nprobe)
-      .select(col("query_id"), col("q_emb"), col("centroid_id").as("cell"))
+    val probed = probeCells(queryVectors(queries, queryIds), centroids, nprobe)
     val cells = probed.select(col("cell")).distinct()
       .collect().map(_.getLong(0)).sorted
     // partition-column values read back as the inferred partition type;
@@ -926,13 +924,7 @@ object SimilarityOps {
     val short = pqAdcTopKCodes(codes, corpus, codebook, dim, m, ksub,
         queryIds, shortlist)
       .select(col("query_id"), col("neighbor_id"))
-    val qs = corpus.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("n_emb").as("q_emb"))
-    topKPerQuery(short.join(broadcast(qs), Seq("query_id"))
-      .join(corpus.select(col("vec_id").as("neighbor_id"), col("n_emb")),
-        Seq("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        dotCosine(col("q_emb"), col("n_emb")).as("cosine_sim")), k)
+    rerankExactTopKNorm(corpus, short, queryIds, k)
   }
 
   /** IVF-PQ — the production composition of the two scale axes: the
@@ -946,16 +938,8 @@ object SimilarityOps {
                 codebook: DataFrame, dim: Int, m: Int, ksub: Int,
                 queryIds: Seq[Long], k: Int, nprobe: Int): DataFrame = {
     val assigned = assignCellsNorm(corpus, centroids, 1)
-    val qs = corpus.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("n_emb").as("q_emb"))
-    val probeW = Window.partitionBy(col("query_id"))
-      .orderBy(col("qc_sim").desc, col("centroid_id").asc)
-    val probed = qs.join(broadcast(centroids), expr("true"))
-      .select(col("query_id"), col("centroid_id"),
-        dotCosine(col("q_emb"), col("c_emb")).as("qc_sim"))
-      .withColumn("probe_rank", row_number().over(probeW))
-      .filter(col("probe_rank") <= nprobe)
-      .select(col("query_id"), col("centroid_id").as("cell"))
+    val probed = probeCells(queryVectors(corpus, queryIds), centroids, nprobe)
+      .select(col("query_id"), col("cell"))
     val lut = adcLut(corpus, codebook, dim, m, ksub, queryIds)
     topKPerQuery(
       probed.join(assigned.select(col("vec_id"), col("cell")), Seq("cell"))
@@ -1140,10 +1124,7 @@ object SimilarityOps {
         col("vec_id").as("neighbor_id"),
         (col("label") === col("q_label")).as("same"),
         dotCosine(col("q_emb"), col("n_emb")).as("sim"))
-    val w = Window.partitionBy(col("query_id"), col("same"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    val top = scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    val top = topKPerQuery(scored, 1, "sim", by = Seq("same"))
     val pos = top.filter(col("same"))
       .select(col("query_id").as("anchor_id"), col("q_label").as("label"),
         col("neighbor_id").as("pos_id"), col("sim").as("pos_sim"))

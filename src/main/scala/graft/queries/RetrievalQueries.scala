@@ -166,14 +166,10 @@ object RetrievalQueries {
       val q = SimilarityOps.hashEmbed(snipDocs, EmbDim)
         .filter(col("n_emb").isNotNull)
         .select(col("vec_id").as("query_id"), col("n_emb").as("q_emb"))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("cosine_sim").desc, col("neighbor_id").asc)
-      corpusEmb(s, dir).crossJoin(broadcast(q))
+      SimilarityOps.topKPerQuery(corpusEmb(s, dir).crossJoin(broadcast(q))
         .select(col("query_id"), col("vec_id").as("neighbor_id"),
           RetrievalOps.intScaledCosine(col("q_emb"), col("n_emb"))
-            .as("cosine_sim"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= BmK)
+            .as("cosine_sim")), BmK)
     }
 
   /** The corrupted snippet term sets (query_id, token): every ≥4-char

@@ -1099,12 +1099,7 @@ object SimilarityQueries {
             typedLit(arms), a => a >= col("probe_rank"))))
         val counts = cand.groupBy(col("nprobe"))
           .agg(count(lit(1)).as("n_candidates"))
-        val wArm = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("nprobe"), col("query_id"))
-          .orderBy(col("cosine_sim").desc, col("neighbor_id").asc)
-        val matched = cand
-          .withColumn("rank", row_number().over(wArm))
-          .filter(col("rank") <= K)
+        val matched = SimilarityOps.topKPerQuery(cand, K, by = Seq("nprobe"))
           .join(brute, Seq("query_id", "neighbor_id"))
           .groupBy(col("nprobe"))
           .agg(count(lit(1)).as("n_matched"))
@@ -2084,11 +2079,7 @@ object SimilarityQueries {
           + coalesce(lit(WLsh) / (lit(60) + col("r_lsh")), lit(0.0))
           + coalesce(lit(WPq) / (lit(60) + col("r_pq")), lit(0.0)), 6)
           .as("rrf_score"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("rrf_score").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= K)
+    SimilarityOps.topKPerQuery(scored, K, "rrf_score")
   }
 
   /** Oracle twin of [[hybridCandidates]] + rerankExactTopKNorm (no

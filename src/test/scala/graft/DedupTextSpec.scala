@@ -276,13 +276,42 @@ class DedupTextSpec extends AnyFunSuite with SparkTestBase {
       .toDF("query_id", "neighbor_id")
     // nprobe = every cell: the IVF probe scores the whole corpus
     val cents = SimilarityOps.ivfCentroidsNorm(corpus, 2)
+    val layout = java.nio.file.Files.createTempDirectory("graft_layout")
+      .resolve("cells").toString
+    SimilarityOps.writeCellLayout(corpus, cents, layout)
     Seq(
       "brute" -> SimilarityOps.bruteForceTopKNorm(corpus, Seq(0L), 3),
       "rerank" -> SimilarityOps.rerankExactTopKNorm(corpus, cands, Seq(0L), 3),
-      "ivf" -> SimilarityOps.ivfTopKNormWith(corpus, cents, Seq(0L), 3, 2)
+      "ivf" -> SimilarityOps.ivfTopKNormWith(corpus, cents, Seq(0L), 3, 2),
+      "pruned" -> SimilarityOps.ivfTopKPruned(spark, layout, cents, corpus,
+        Seq(0L), 3, 2)
     ).foreach { case (path, df) =>
       val top = df.orderBy("rank").select("neighbor_id").as[Long].collect().toSeq
       assert(top == Seq(1L, 4L, 2L), path)
+    }
+    // the centroid cross join + per-query window that the codegen'd
+    // probe replaced: the reference its probe_rank must equal
+    val queryIds = Seq(0L, 2L, 3L)
+    val probeW = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("query_id"))
+      .orderBy(col("qc_sim").desc, col("centroid_id").asc)
+    val assigned = SimilarityOps.assignCellsNorm(corpus, cents, 1)
+    Seq(1, 2).foreach { nprobe =>
+      val reference = SimilarityOps.queryVectors(corpus, queryIds)
+        .crossJoin(cents)
+        .select(col("query_id"), col("centroid_id"),
+          SimilarityOps.dotCosine(col("q_emb"), col("c_emb")).as("qc_sim"))
+        .withColumn("probe_rank", row_number().over(probeW))
+        .filter(col("probe_rank") <= nprobe)
+        .join(assigned, col("centroid_id") === col("cell"))
+        .filter(col("vec_id") =!= col("query_id"))
+        .select(col("query_id"), col("vec_id").as("neighbor_id"),
+          col("probe_rank"))
+      val probed = SimilarityOps
+        .ivfCandidatesNormRanked(corpus, cents, queryIds, nprobe)
+        .select("query_id", "neighbor_id", "probe_rank")
+      assert(probed.count() == reference.count() &&
+        probed.exceptAll(reference).isEmpty, s"probe_rank at nprobe $nprobe")
     }
     corpus.unpersist()
   }

@@ -9,7 +9,7 @@ package graft
   * O(n·m) — the one guaranteed non-survivor at 100× — so every
   * occurrence must be on the explicit whitelist below, where each
   * entry records why its non-equi join is bounded: a broadcast side of
-  * CONSTANT size (a 1-row scalar, a 16-row centroid table, a 10-row
+  * CONSTANT size (a 1-row scalar, a 16-row plane table, a 10-row
   * query set) costs one linear pass, not a quadratic pair explosion.
   * A new query that picks up a nested-loop join fails the lint until
   * its bound is argued and listed; an entry whose query no longer
@@ -49,23 +49,17 @@ object PlanLint {
     "ann_recall_rrf" ->
       "contains ann_topk_brute (eval baseline) + the whitelisted rrf fusion",
     "ann_topk_rrf" ->
-      "fuses three whitelisted retrievers; all fusion inputs ≤ queries×k rows",
+      "fuses IVF with the whitelisted LSH and PQ retrievers; all fusion inputs ≤ queries×k rows",
     "doc_ann_topk" -> "5-row query set, broadcast (brute-force over hashed-BOW vectors)",
-    "ann_topk_ivf" -> "16-row centroid table + 10-row query set, broadcast",
     "ann_topk_lsh" -> "10-row query set, broadcast",
     "ann_topk_quantized" -> "10-row query set, broadcast",
-    "ann_recall_ivf" -> "contains ann_topk_brute (eval baseline) + centroids",
-    "ann_nprobe_curve" ->
-      "contains ann_topk_brute (eval baseline) + 16-row centroid broadcast per arm + 1-row arm scalars",
+    "ann_recall_ivf" -> "contains ann_topk_brute (eval baseline)",
+    "ann_nprobe_curve" -> "contains ann_topk_brute (eval baseline)",
     "ann_topk_pq" -> "10-row per-query ADC lookup table, broadcast",
     "ann_topk_pq_rerank" ->
       "10-row per-query ADC lookup table + 10-row query set, broadcast",
-    "ann_topk_ivfpq" ->
-      "16-row centroid table + 10-row ADC lookup table, broadcast",
     "ann_recall_pq" -> "contains ann_topk_brute (eval baseline) + ADC LUT broadcast",
-    "ann_topk_pruned" ->
-      "16-row centroid table + 10-row query set, broadcast (probe step)",
-    "ann_recall_ivf2" -> "contains ann_topk_brute (eval baseline) + k1=4 super-centroids",
+    "ann_recall_ivf2" -> "contains ann_topk_brute (eval baseline)",
     "ann_recall_graph" -> "contains ann_topk_brute (eval baseline)",
     "ann_graph_steps_curve" ->
       "contains ann_topk_brute (eval baseline) + a 4-row steps-arm table, broadcast",

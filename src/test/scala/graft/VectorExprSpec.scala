@@ -1,6 +1,8 @@
 package graft
 
 import graft.ops.SimilarityOps
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -44,6 +46,47 @@ class VectorExprSpec extends AnyFunSuite with SparkTestBase {
     val diverging = both.filter(
       exists(zip_with(col("native"), col("hof"), (a, b) => a =!= b), x => x))
     assert(diverging.count() == 0)
+  }
+
+  test("graft_nearest_cells ranks every cell by the window rule it replaces") {
+    graft.functions.GraftFunctions.register(spark)
+    // all cells of `cents` per vector, by the expression and by
+    // row_number() OVER (ORDER BY round(graft_dot(q, c), 6) DESC,
+    // centroid_id ASC) — Spark's round, not the exact binary value
+    def cellsBoth(corpus: DataFrame, cents: DataFrame) = {
+      val rows = cents.orderBy("centroid_id").collect()
+      val ids = rows.map(_.getLong(0)).toSeq
+      val native = corpus.select(col("vec_id"),
+          call_function("graft_nearest_cells", typedLit(ids),
+            typedLit(rows.flatMap(_.getSeq[Double](1)).toSeq),
+            lit(ids.size), col("n_emb")))
+        .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+      val w = Window.partitionBy(col("vec_id")).orderBy(
+        round(call_function("graft_dot", col("n_emb"), col("c_emb")), 6).desc,
+        col("centroid_id").asc)
+      val window = corpus.crossJoin(cents)
+        .withColumn("rn", row_number().over(w))
+        .groupBy(col("vec_id"))
+        .agg(sort_array(collect_list(struct(col("rn"), col("centroid_id"))))
+          .getField("centroid_id").as("cells"))
+        .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+      (native, window)
+    }
+    val fixture = SimilarityOps.normalizedCorpus(
+        Tables.embeddings(spark, "/root/testdata/sf0.001"))
+      .filter(col("n_emb").isNotNull).cache()
+    val (fn, fw) = cellsBoth(fixture,
+      SimilarityOps.ivfCentroidsNorm(fixture, 16))
+    assert(fn.size == fixture.count() && fn == fw)
+    fixture.unpersist()
+    // exact cosine tie: 0.6 to both centroids, the smaller id first
+    val (tn, tw) = cellsBoth(Seq((0L, Seq(1.0, 0.0))).toDF("vec_id", "n_emb"),
+      Seq((7L, Seq(0.6, 0.8)), (3L, Seq(0.6, -0.8))).toDF("centroid_id", "c_emb"))
+    assert(tn == Map(0L -> Seq(3L, 7L)) && tn == tw)
+    // 5e-7 rounds up to 1e-6 in Spark and so ties centroid 2
+    val (rn, rw) = cellsBoth(Seq((0L, Seq(1.0, 0.0))).toDF("vec_id", "n_emb"),
+      Seq((1L, Seq(5e-7, 1.0)), (2L, Seq(1e-6, 1.0))).toDF("centroid_id", "c_emb"))
+    assert(rw == Map(0L -> Seq(1L, 2L)) && rn == rw)
   }
 
   test("graft_l2norm edge shapes: zero vector, empty array, null input") {
