@@ -94,33 +94,7 @@ object CorpusOps {
       .withColumn("bucket", floor(col("doc_id") / bucketWidth).cast("long"))
       .withColumn("sbucket",
         floor(col("doc_id") / (bucketWidth * bucketWidth)).cast("long"))
-    // level 1: doc offset within its bucket
-    val wIn = Window.partitionBy(col("bucket")).orderBy(col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val within = dt.withColumn("w_off",
-      coalesce(sum(col("n")).over(wIn), lit(0L)))
-    // level 2: bucket offset within its super-bucket (window partitions
-    // hold ≤ bucketWidth buckets each — still distributed)
-    val buckets = dt.groupBy(col("sbucket"), col("bucket"))
-      .agg(sum(col("n")).as("b_n"))
-    val wB = Window.partitionBy(col("sbucket")).orderBy(col("bucket"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val bOff = buckets
-      .withColumn("b_off", coalesce(sum(col("b_n")).over(wB), lit(0L)))
-    // level 3: super-bucket offsets — the only global window, over
-    // corpus/bucketWidth² rows
-    val wS = Window.orderBy(col("sbucket"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val sOff = buckets.groupBy(col("sbucket")).agg(sum(col("b_n")).as("s_n"))
-      .withColumn("s_off", coalesce(sum(col("s_n")).over(wS), lit(0L)))
-      .select(col("sbucket"), col("s_off"))
-    val bucketOff = bOff.join(sOff, Seq("sbucket"))
-      .select(col("bucket"), (col("s_off") + col("b_off")).as("b_off"))
-    within.join(bucketOff, Seq("bucket"))
-      .withColumn("o", col("b_off") + col("w_off"))
-      .select(col("doc_id"), col("n"), col("o"),
-        floor(col("o") / seqLen).cast("long").as("s0"),
-        floor((col("o") + col("n") - 1) / seqLen).cast("long").as("s1"))
+    prefixSpans(dt, Seq(col("doc_id")), seqLen)
   }
 
   /** [[packSpans]] over a deterministic PSEUDO-SHUFFLED global order —
@@ -148,8 +122,20 @@ object CorpusOps {
         graft.functions.Hashing.md5Long(col("doc_id").cast("string")))
       .withColumn("bucket", (col("h") % nBuckets).cast("long"))
       .withColumn("sbucket", floor(col("bucket") / bucketWidth).cast("long"))
-    val wIn = Window.partitionBy(col("bucket"))
-      .orderBy(col("h"), col("doc_id"))
+    prefixSpans(dt, Seq(col("h"), col("doc_id")), seqLen)
+  }
+
+  /** The three-level exclusive prefix sum behind [[packSpans]] and
+    * [[packSpansShuffled]]: `dt` carries (doc_id, n, bucket, sbucket),
+    * `order` is the global order within a bucket. Level 1 offsets each
+    * doc within its bucket, level 2 each bucket within its super-bucket
+    * (window partitions hold ≤ bucketWidth buckets each — still
+    * distributed), level 3 each super-bucket in the one global window;
+    * offset o = the three summed, and [s0, s1] the sequences it
+    * touches. */
+  private def prefixSpans(dt: DataFrame, order: Seq[Column],
+                          seqLen: Long): DataFrame = {
+    val wIn = Window.partitionBy(col("bucket")).orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, -1)
     val within = dt.withColumn("w_off",
       coalesce(sum(col("n")).over(wIn), lit(0L)))

@@ -1,6 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import java.awt.image.BufferedImage
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import javax.imageio.{IIOImage, ImageIO, ImageWriter}
+import javax.imageio.stream.{MemoryCacheImageInputStream, MemoryCacheImageOutputStream}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: opaque `binary` payloads with typed
@@ -17,11 +23,19 @@ import org.apache.spark.sql.functions._
   * can differ across JDKs even when the decoded raster is identical).
   *
   * The Spark-side shape is the one a production pipeline needs: binary
-  * columns, typed `Dataset`s, partition-batched `mapPartitions` (the
+  * columns, typed `Dataset`s, partition-batched iterator maps (the
   * Scala-native equivalent of `mapInPandas` — one iterator per
   * partition, per-partition codec setup amortized across rows), and
   * schema-stable output. At 100 TB this is a narrow, shuffle-free map;
   * payload bytes stream through executors without driver involvement.
+  *
+  * Every encoder goes through one doc_id → media wrapper
+  * ([[renderMedia]]) and every decoder or re-encoder through one payload
+  * map ([[mapMedia]]); each container has one writer and one reader
+  * (PNG: [[pngBytes]]/[[readPng]], GIF: [[gifBytes]]/[[readGifFrames]],
+  * 16-bit PCM: [[pcm16]]/[[pcmSample]] inside [[wavBytes]]/[[wavPcm]]),
+  * and an encoder is one call pairing a pixel or sample law with its
+  * container's writer.
   */
 object MultimodalOps {
 
@@ -44,6 +58,71 @@ object MultimodalOps {
         .as("media_type"),
       encode(col("text"), "UTF-8").as("payload"))
 
+  /** The one doc_id → (media_id, media_type, payload) wrapper every
+    * encoder goes through: payloads are rendered INSIDE executors
+    * (distributed encode — the driver never sees payload bytes). Per
+    * partition it keeps ImageIO off its temp-file cache and builds
+    * `setup`'s codec state (the GIF writer) once; `render` gets that
+    * state and a doc_id. */
+  private def renderMedia[S](docs: DataFrame, mediaType: String,
+                             setup: () => S)
+                            (render: (S, Long) => Array[Byte]): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
+      ImageIO.setUseCache(false)
+      val state = setup()
+      ids.map(id => (id, mediaType, render(state, id)))
+    }.toDF("media_id", "media_type", "payload")
+  }
+
+  /** The one payload map every decoder and re-encoder goes through:
+    * each media row to zero or more output rows, partition-batched
+    * (ImageIO off its temp-file cache once per partition); narrow,
+    * shuffle-free. */
+  private def mapMedia[T <: Product : TypeTag](media: DataFrame)(
+      f: MediaRow => IterableOnce[T]): Dataset[T] =
+    media.as[MediaRow](Encoders.product[MediaRow]).mapPartitions { rows =>
+      ImageIO.setUseCache(false)
+      rows.flatMap(f)
+    }(Encoders.product[T])
+
+  /** A re-encoded media table: [[mapMedia]] with the media table's own
+    * schema, so re-encoders compose with any decoder or sink. */
+  private def remapMedia(media: DataFrame)(
+      payload: MediaRow => Array[Byte]): DataFrame =
+    mapMedia(media)(m => Iterator.single((m.media_id, m.media_type, payload(m))))
+      .toDF("media_id", "media_type", "payload")
+
+  /** A w × h 8-bit grayscale raster with the given pixel law. */
+  private def grayImage(w: Int, h: Int, pixel: (Int, Int) => Int): BufferedImage = {
+    val img = new BufferedImage(w, h, BufferedImage.TYPE_BYTE_GRAY)
+    val raster = img.getRaster
+    var y = 0
+    while (y < h) {
+      var x = 0
+      while (x < w) { raster.setSample(x, y, 0, pixel(x, y)); x += 1 }
+      y += 1
+    }
+    img
+  }
+
+  /** The PNG writer: a gray w × h raster of `pixel` to PNG bytes. */
+  private def pngBytes(w: Int, h: Int, pixel: (Int, Int) => Int): Array[Byte] = {
+    val bos = new ByteArrayOutputStream()
+    ImageIO.write(grayImage(w, h, pixel), "png", bos)
+    bos.toByteArray
+  }
+
+  /** The image reader: a corrupt or non-image payload fails loudly
+    * rather than fabricating metadata. */
+  private def readPng(m: MediaRow): BufferedImage = {
+    val img = ImageIO.read(new ByteArrayInputStream(m.payload))
+    require(img != null,
+      s"media ${m.media_id}: payload is not a decodable image")
+    img
+  }
+
   /** Deterministic image law: doc d is a (16 + d%32) × (8 + d%16)
     * grayscale gradient with pixel(x, y) = (x + y + d) mod 256. Small
     * enough that the oracle can re-derive whole-raster statistics by
@@ -57,61 +136,33 @@ object MultimodalOps {
   /** Documents → PNG media table: one real PNG per doc_id, rendered and
     * compressed INSIDE executors (distributed encode — the driver never
     * sees payload bytes). */
-  def encodePngMedia(docs: DataFrame): DataFrame = {
-    val spark: SparkSession = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
-      // per-partition codec setup: keep ImageIO off its temp-file cache
-      javax.imageio.ImageIO.setUseCache(false)
-      ids.map { id =>
-        val w = lawWidth(id); val h = lawHeight(id)
-        val img = new java.awt.image.BufferedImage(
-          w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-        val raster = img.getRaster
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) { raster.setSample(x, y, 0, lawPixel(id, x, y)); x += 1 }
-          y += 1
-        }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", bos)
-        (id, "image/png", bos.toByteArray)
-      }
-    }.toDF("media_id", "media_type", "payload")
-  }
+  def encodePngMedia(docs: DataFrame): DataFrame =
+    renderMedia(docs, "image/png", () => ()) { (_, id) =>
+      pngBytes(lawWidth(id), lawHeight(id), (x, y) => lawPixel(id, x, y))
+    }
 
   /** REAL image decode: parse the PNG payload with `javax.imageio` and
     * compute dimensions + whole-raster pixel statistics. Partition-
     * batched iterator transform; narrow, shuffle-free. A corrupt or
     * non-image payload fails loudly rather than fabricating metadata. */
-  def decodeImage(media: DataFrame): Dataset[ImageMeta] = {
-    val spark: SparkSession = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false) // per-partition codec setup
-      rows.map { m =>
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(m.payload))
-        require(img != null,
-          s"media ${m.media_id}: payload is not a decodable image")
-        val raster = img.getRaster
-        val w = img.getWidth; val h = img.getHeight
-        var sum = 0L; var mn = Int.MaxValue; var mx = Int.MinValue
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            val v = raster.getSample(x, y, 0)
-            sum += v; if (v < mn) mn = v; if (v > mx) mx = v
-            x += 1
-          }
-          y += 1
+  def decodeImage(media: DataFrame): Dataset[ImageMeta] =
+    mapMedia(media) { m =>
+      val img = readPng(m)
+      val raster = img.getRaster
+      val w = img.getWidth; val h = img.getHeight
+      var sum = 0L; var mn = Int.MaxValue; var mx = Int.MinValue
+      var y = 0
+      while (y < h) {
+        var x = 0
+        while (x < w) {
+          val v = raster.getSample(x, y, 0)
+          sum += v; if (v < mn) mn = v; if (v > mx) mx = v
+          x += 1
         }
-        ImageMeta(m.media_id, w, h, sum, mn, mx)
+        y += 1
       }
+      Iterator.single(ImageMeta(m.media_id, w, h, sum, mn, mx))
     }
-  }
 
   /** REAL image resize: decode each PNG payload, nearest-neighbor
     * downscale by `factor` (out(x, y) = in(x·factor, y·factor) — the
@@ -123,34 +174,13 @@ object MultimodalOps {
     * shuffle-free, payload bytes never reach the driver. */
   def resizePngMedia(media: DataFrame, factor: Int): DataFrame = {
     require(factor >= 1, "factor must be >= 1")
-    val spark: SparkSession = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false) // per-partition codec setup
-      rows.map { m =>
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(m.payload))
-        require(img != null,
-          s"media ${m.media_id}: payload is not a decodable image")
-        val w = math.max(1, img.getWidth / factor)
-        val h = math.max(1, img.getHeight / factor)
-        val out = new java.awt.image.BufferedImage(
-          w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-        val src = img.getRaster; val dst = out.getRaster
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            dst.setSample(x, y, 0, src.getSample(x * factor, y * factor, 0))
-            x += 1
-          }
-          y += 1
-        }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(out, "png", bos)
-        (m.media_id, m.media_type, bos.toByteArray)
-      }
-    }.toDF("media_id", "media_type", "payload")
+    remapMedia(media) { m =>
+      val src = readPng(m)
+      val raster = src.getRaster
+      pngBytes(math.max(1, src.getWidth / factor),
+        math.max(1, src.getHeight / factor),
+        (x, y) => raster.getSample(x * factor, y * factor, 0))
+    }
   }
 
   /** Really-decoded video-frame facts: one row per SAMPLED frame with
@@ -175,39 +205,56 @@ object MultimodalOps {
     * multi-frame container the JVM can encode with zero external
     * libraries — the video stand-in whose frame structure is real, not
     * a byte-stride convention. */
-  def encodeGifMedia(docs: DataFrame): DataFrame = {
-    val spark: SparkSession = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
-      javax.imageio.ImageIO.setUseCache(false) // per-partition codec setup
-      val writer = javax.imageio.ImageIO
-        .getImageWritersByFormatName("gif").next()
-      val out = ids.map { id =>
-        val w = vidWidth(id); val h = vidHeight(id)
-        val bos = new java.io.ByteArrayOutputStream()
-        val ios = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
-        writer.setOutput(ios)
-        writer.prepareWriteSequence(null)
-        var f = 0
-        while (f < vidFrames(id)) {
-          val img = new java.awt.image.BufferedImage(
-            w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-          val raster = img.getRaster
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) { raster.setSample(x, y, 0, vidPixel(id, f, x, y)); x += 1 }
-            y += 1
-          }
-          writer.writeToSequence(new javax.imageio.IIOImage(img, null, null), null)
-          f += 1
-        }
-        writer.endWriteSequence()
-        ios.close()
-        (id, "image/gif", bos.toByteArray)
-      }
-      out // writer intentionally not disposed per-row; one per partition
-    }.toDF("media_id", "media_type", "payload")
+  def encodeGifMedia(docs: DataFrame): DataFrame =
+    renderMedia(docs, "image/gif", gifWriter) { (writer, id) =>
+      gifBytes(writer, vidFrames(id), vidWidth(id), vidHeight(id),
+        (f, x, y) => vidPixel(id, f, x, y))
+    }
+
+  /** The GIF writer's per-partition state: one sequence writer, reused
+    * for every row of the partition and never disposed per row. */
+  private def gifWriter(): ImageWriter =
+    ImageIO.getImageWritersByFormatName("gif").next()
+
+  /** The GIF writer: `frames` gray w × h rasters of `pixel(f, x, y)` as
+    * one animated-GIF sequence on `writer`. */
+  private def gifBytes(writer: ImageWriter, frames: Int, w: Int, h: Int,
+                       pixel: (Int, Int, Int) => Int): Array[Byte] = {
+    val bos = new ByteArrayOutputStream()
+    val ios = new MemoryCacheImageOutputStream(bos)
+    writer.setOutput(ios)
+    writer.prepareWriteSequence(null)
+    var f = 0
+    while (f < frames) {
+      val frame = f
+      writer.writeToSequence(
+        new IIOImage(grayImage(w, h, (x, y) => pixel(frame, x, y)), null, null),
+        null)
+      f += 1
+    }
+    writer.endWriteSequence()
+    ios.close()
+    bos.toByteArray
+  }
+
+  /** The GIF reader: parse the container, count its frames, and decode
+    * frames 0, everyNth, 2·everyNth, … into `frame(n_frames, idx, img)`.
+    * One reader per row. try/finally: a payload that fails MID-decode
+    * (the require or `reader.read` throwing) must still release the
+    * reader and stream — on partitions with many corrupt rows the leaked
+    * native/heap resources otherwise pile up before the task dies. */
+  private def readGifFrames[T](m: MediaRow, everyNth: Int)
+                              (frame: (Int, Int, BufferedImage) => T): Seq[T] = {
+    val reader = ImageIO.getImageReadersByFormatName("gif").next()
+    val iis = new MemoryCacheImageInputStream(new ByteArrayInputStream(m.payload))
+    reader.setInput(iis)
+    try {
+      val n = reader.getNumImages(true)
+      require(n > 0, s"media ${m.media_id}: payload has no decodable frames")
+      (0 until n by everyNth).map(f => frame(n, f, reader.read(f)))
+    } finally {
+      reader.dispose(); iis.close()
+    }
   }
 
   /** REAL frame sampling: parse the GIF container with `javax.imageio`,
@@ -219,43 +266,21 @@ object MultimodalOps {
     * A corrupt payload fails loudly rather than fabricating frames. */
   def sampleVideoFrames(media: DataFrame, everyNth: Int): Dataset[FrameMeta] = {
     require(everyNth >= 1, "everyNth must be >= 1")
-    val spark: SparkSession = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.flatMap { m =>
-        val reader = javax.imageio.ImageIO
-          .getImageReadersByFormatName("gif").next()
-        val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
-          new java.io.ByteArrayInputStream(m.payload))
-        reader.setInput(iis)
-        // try/finally: a payload that fails MID-decode (require or
-        // reader.read throwing) must still release the reader and
-        // stream — on partitions with many corrupt rows the leaked
-        // native/heap resources otherwise pile up before the task dies.
-        // Fail-loudly behavior is unchanged; only the cleanup is.
-        try {
-          val n = reader.getNumImages(true)
-          require(n > 0, s"media ${m.media_id}: payload has no decodable frames")
-          (0 until n by everyNth).map { f =>
-            val img = reader.read(f)
-            val w = img.getWidth; val h = img.getHeight
-            var sum = 0L; var mn = Int.MaxValue; var mx = Int.MinValue
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val v = img.getRGB(x, y) & 0xff // palette-resolved gray
-                sum += v; if (v < mn) mn = v; if (v > mx) mx = v
-                x += 1
-              }
-              y += 1
-            }
-            FrameMeta(m.media_id, n, f, w, h, sum, mn, mx)
+    mapMedia(media) { m =>
+      readGifFrames(m, everyNth) { (n, f, img) =>
+        val w = img.getWidth; val h = img.getHeight
+        var sum = 0L; var mn = Int.MaxValue; var mx = Int.MinValue
+        var y = 0
+        while (y < h) {
+          var x = 0
+          while (x < w) {
+            val v = img.getRGB(x, y) & 0xff // palette-resolved gray
+            sum += v; if (v < mn) mn = v; if (v > mx) mx = v
+            x += 1
           }
-        } finally {
-          reader.dispose(); iis.close()
+          y += 1
         }
+        FrameMeta(m.media_id, n, f, w, h, sum, mn, mx)
       }
     }
   }
@@ -361,29 +386,34 @@ object MultimodalOps {
     (pcm, rate)
   }
 
+  /** The PCM writer: n samples `sample(i)` packed as 16-bit
+    * little-endian signed PCM. */
+  private def pcm16(n: Int, sample: Int => Int): Array[Byte] = {
+    val pcm = new Array[Byte](2 * n)
+    var i = 0
+    while (i < n) {
+      val s = sample(i)
+      pcm(2 * i) = (s & 0xff).toByte
+      pcm(2 * i + 1) = ((s >> 8) & 0xff).toByte
+      i += 1
+    }
+    pcm
+  }
+
+  /** The PCM reader: sample `i` of 16-bit little-endian signed PCM,
+    * matching the written format. */
+  private def pcmSample(pcm: Array[Byte], i: Int): Int =
+    ((pcm(2 * i) & 0xff) | (pcm(2 * i + 1) << 8)).toShort.toInt
+
   /** Documents → WAV media table: one REAL RIFF/WAVE payload per
     * doc_id, synthesized and containerized INSIDE executors — bytes
     * never visit the driver (the audio twin of [[encodePngMedia]]).
     * Container written by the lock-free [[wavBytes]]; see its doc for
     * why `AudioSystem` stays out of the hot path. */
-  def encodeWavMedia(docs: DataFrame): DataFrame = {
-    val spark: SparkSession = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
-      ids.map { id =>
-        val n = audN(id)
-        val pcm = new Array[Byte](n * 2)
-        var i = 0
-        while (i < n) {
-          val s = audSample(id, i)
-          pcm(2 * i) = (s & 0xff).toByte            // little-endian
-          pcm(2 * i + 1) = ((s >> 8) & 0xff).toByte
-          i += 1
-        }
-        (id, "audio/wav", wavBytes(pcm, AudRate))
-      }
-    }.toDF("media_id", "media_type", "payload")
-  }
+  def encodeWavMedia(docs: DataFrame): DataFrame =
+    renderMedia(docs, "audio/wav", () => ()) { (_, id) =>
+      wavBytes(pcm16(audN(id), i => audSample(id, i)), AudRate)
+    }
 
   /** REAL audio downsample: decode each WAV payload, keep every
     * `factor`-th sample (out(i) = in(i·factor) — the one resampler
@@ -394,23 +424,12 @@ object MultimodalOps {
     * [[resizePngMedia]] composes with [[decodeImage]]. */
   def downsampleWavMedia(media: DataFrame, factor: Int): DataFrame = {
     require(factor >= 1, "factor must be >= 1")
-    val spark: SparkSession = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.map { m =>
-        val (bytes, rate) = wavPcm(m.payload)
-        val n = bytes.length / 2
-        val outN = (n + factor - 1) / factor
-        val pcm = new Array[Byte](outN * 2)
-        var i = 0
-        while (i < outN) {
-          pcm(2 * i) = bytes(2 * i * factor)
-          pcm(2 * i + 1) = bytes(2 * i * factor + 1)
-          i += 1
-        }
-        (m.media_id, m.media_type, wavBytes(pcm, rate / factor))
-      }
-    }.toDF("media_id", "media_type", "payload")
+    remapMedia(media) { m =>
+      val (pcm, rate) = wavPcm(m.payload)
+      val n = pcm.length / 2
+      wavBytes(pcm16((n + factor - 1) / factor, i => pcmSample(pcm, i * factor)),
+        rate / factor)
+    }
   }
 
   /** REAL audio decode: parse the RIFF/WAVE container ([[wavPcm]] —
@@ -420,30 +439,24 @@ object MultimodalOps {
     * sum/min/max and the zero-crossing count from the samples (the
     * standard cheap audio features). Partition-batched; narrow,
     * shuffle-free; a corrupt payload fails loudly (wavPcm throws). */
-  def decodeAudio(media: DataFrame): Dataset[AudioMeta] = {
-    val spark: SparkSession = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.map { m =>
-        val (bytes, rate) = wavPcm(m.payload)
-        val n = bytes.length / 2
-        var sum = 0L; var mn = Int.MaxValue; var mx = Int.MinValue
-        var crossings = 0L; var prev = 0; var i = 0
-        while (i < n) {
-          // 16-bit little-endian signed, matching the written format
-          val s = ((bytes(2 * i) & 0xff) | (bytes(2 * i + 1) << 8)).toShort.toInt
-          sum += math.abs(s)
-          if (s < mn) mn = s
-          if (s > mx) mx = s
-          if (i > 0 && ((prev < 0 && s >= 0) || (prev >= 0 && s < 0)))
-            crossings += 1
-          prev = s
-          i += 1
-        }
-        AudioMeta(m.media_id, rate, n.toLong, sum, mn, mx, crossings)
+  def decodeAudio(media: DataFrame): Dataset[AudioMeta] =
+    mapMedia(media) { m =>
+      val (pcm, rate) = wavPcm(m.payload)
+      val n = pcm.length / 2
+      var sum = 0L; var mn = Int.MaxValue; var mx = Int.MinValue
+      var crossings = 0L; var prev = 0; var i = 0
+      while (i < n) {
+        val s = pcmSample(pcm, i)
+        sum += math.abs(s)
+        if (s < mn) mn = s
+        if (s > mx) mx = s
+        if (i > 0 && ((prev < 0 && s >= 0) || (prev >= 0 && s < 0)))
+          crossings += 1
+        prev = s
+        i += 1
       }
+      Iterator.single(AudioMeta(m.media_id, rate, n.toLong, sum, mn, mx, crossings))
     }
-  }
 
   // ---- perceptual-hash image dedup (the LAION-style multimodal×dedup
   // axis): dHash/aHash over really-decoded rasters, Hamming-banded via
@@ -484,27 +497,10 @@ object MultimodalOps {
   /** Documents → near-dup PNG media table: one real 18×14 PNG per
     * doc_id rendered from [[phPixel]] and compressed INSIDE executors
     * (same distributed-encode discipline as [[encodePngMedia]]). */
-  def encodeNearDupPngMedia(docs: DataFrame): DataFrame = {
-    val spark: SparkSession = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
-      javax.imageio.ImageIO.setUseCache(false)
-      ids.map { id =>
-        val img = new java.awt.image.BufferedImage(
-          PhW, PhH, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-        val raster = img.getRaster
-        var y = 0
-        while (y < PhH) {
-          var x = 0
-          while (x < PhW) { raster.setSample(x, y, 0, phPixel(id, x, y)); x += 1 }
-          y += 1
-        }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", bos)
-        (id, "image/png", bos.toByteArray)
-      }
-    }.toDF("media_id", "media_type", "payload")
-  }
+  def encodeNearDupPngMedia(docs: DataFrame): DataFrame =
+    renderMedia(docs, "image/png", () => ()) { (_, id) =>
+      pngBytes(PhW, PhH, (x, y) => phPixel(id, x, y))
+    }
 
   /** Deterministic NEAR-DUP video law — the sequence sibling of
     * [[phPixel]]: documents form groups of [[VdGroupSize]]; the group id
@@ -524,12 +520,17 @@ object MultimodalOps {
     * pixel(2x, 2y) — closed-form for the oracle, like [[phPixel]]. */
   private[graft] val VdGroupSize = 5L
   private[graft] def vdFrames(id: Long): Int = (3 + (id / VdGroupSize) % 3).toInt
-  private[graft] def vdPixel(id: Long, f: Int, x: Int, y: Int): Int = {
+  private[graft] def vdPixel(id: Long, f: Int, x: Int, y: Int): Int =
+    vdPerturbed(id, f, x, y,
+      (x / 2 + 9 * (y / 2) + 63 * f + id) % 101 == 0)
+
+  /** The near-dup video laws' shared pixel: the group's gradient, plus
+    * 128 (mod 256) on a non-leader member where `hit` holds. */
+  private def vdPerturbed(id: Long, f: Int, x: Int, y: Int, hit: Boolean): Int = {
     val g = id / VdGroupSize
     val b = (x * (31 + g % 7) + y * (17 + g % 11) +
       x * y * (7 + g % 5) + x * f * (23 + g % 13) + g * 101) % 256
-    if (id % VdGroupSize != 0 && (x / 2 + 9 * (y / 2) + 63 * f + id) % 101 == 0)
-      ((b + 128) % 256).toInt
+    if (id % VdGroupSize != 0 && hit) ((b + 128) % 256).toInt
     else b.toInt
   }
 
@@ -543,15 +544,8 @@ object MultimodalOps {
     * ~56·nf/3 bits instead of nine — group keys carry 4.7× the bits,
     * so the radius-8 screen's ×100 pigeonhole-floor candidate mass
     * (139M — BASELINE round 12) collapses. */
-  private[graft] def vdPixelR2(id: Long, f: Int, x: Int, y: Int): Int = {
-    val g = id / VdGroupSize
-    val b = (x * (31 + g % 7) + y * (17 + g % 11) +
-      x * y * (7 + g % 5) + x * f * (23 + g % 13) + g * 101) % 256
-    if (id % VdGroupSize != 0 && f == vdFrames(id) - 1 &&
-        x / 2 == 4 && y / 2 == 3)
-      ((b + 128) % 256).toInt
-    else b.toInt
-  }
+  private[graft] def vdPixelR2(id: Long, f: Int, x: Int, y: Int): Int =
+    vdPerturbed(id, f, x, y, f == vdFrames(id) - 1 && x / 2 == 4 && y / 2 == 3)
 
   /** Documents → near-dup animated-GIF media table: one REAL multi-frame
     * GIF per doc_id rendered from [[vdPixel]] and compressed inside
@@ -559,40 +553,10 @@ object MultimodalOps {
     * the near-dup law). */
   def encodeNearDupGifMedia(docs: DataFrame,
                             r2: Boolean = false): DataFrame = {
-    val spark: SparkSession = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
-      javax.imageio.ImageIO.setUseCache(false)
-      val writer = javax.imageio.ImageIO
-        .getImageWritersByFormatName("gif").next()
-      ids.map { id =>
-        val bos = new java.io.ByteArrayOutputStream()
-        val ios = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
-        writer.setOutput(ios)
-        writer.prepareWriteSequence(null)
-        var f = 0
-        while (f < vdFrames(id)) {
-          val img = new java.awt.image.BufferedImage(
-            PhW, PhH, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-          val raster = img.getRaster
-          var y = 0
-          while (y < PhH) {
-            var x = 0
-            while (x < PhW) {
-              val p = if (r2) vdPixelR2(id, f, x, y)
-                      else vdPixel(id, f, x, y)
-              raster.setSample(x, y, 0, p); x += 1
-            }
-            y += 1
-          }
-          writer.writeToSequence(new javax.imageio.IIOImage(img, null, null), null)
-          f += 1
-        }
-        writer.endWriteSequence()
-        ios.close()
-        (id, "image/gif", bos.toByteArray)
-      }
-    }.toDF("media_id", "media_type", "payload")
+    val pixel: (Long, Int, Int, Int) => Int = if (r2) vdPixelR2 else vdPixel
+    renderMedia(docs, "image/gif", gifWriter) { (writer, id) =>
+      gifBytes(writer, vdFrames(id), PhW, PhH, (f, x, y) => pixel(id, f, x, y))
+    }
   }
 
   /** One frame's perceptual hash: (media_id, n_frames, frame_idx, dhash). */
@@ -604,43 +568,25 @@ object MultimodalOps {
     * grid and pack the 56-bit dHash — the [[perceptualHash]] kernel
     * applied per frame. Narrow, shuffle-free; output is 20 bytes/frame,
     * which is all the sequence-dedup join ever shuffles at 100 TB. */
-  def perFrameDHash(media: DataFrame): Dataset[FrameHash] = {
-    val spark: SparkSession = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.flatMap { m =>
-        val reader = javax.imageio.ImageIO
-          .getImageReadersByFormatName("gif").next()
-        val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
-          new java.io.ByteArrayInputStream(m.payload))
-        reader.setInput(iis)
-        try {
-          val n = reader.getNumImages(true)
-          require(n > 0, s"media ${m.media_id}: payload has no decodable frames")
-          (0 until n).map { f =>
-            val img = reader.read(f)
-            val w = img.getWidth; val h = img.getHeight
-            var dh = 0L
-            var y = 0
-            while (y < PhSampleH) {
-              var x = 0
-              while (x < PhSampleW - 1) {
-                val a = img.getRGB(x * w / PhSampleW, y * h / PhSampleH) & 0xff
-                val b = img.getRGB((x + 1) * w / PhSampleW, y * h / PhSampleH) & 0xff
-                if (b > a) dh |= 1L << (y * 8 + x)
-                x += 1
-              }
-              y += 1
-            }
-            FrameHash(m.media_id, n, f, dh)
+  def perFrameDHash(media: DataFrame): Dataset[FrameHash] =
+    mapMedia(media) { m =>
+      readGifFrames(m, 1) { (n, f, img) =>
+        val w = img.getWidth; val h = img.getHeight
+        var dh = 0L
+        var y = 0
+        while (y < PhSampleH) {
+          var x = 0
+          while (x < PhSampleW - 1) {
+            val a = img.getRGB(x * w / PhSampleW, y * h / PhSampleH) & 0xff
+            val b = img.getRGB((x + 1) * w / PhSampleW, y * h / PhSampleH) & 0xff
+            if (b > a) dh |= 1L << (y * 8 + x)
+            x += 1
           }
-        } finally {
-          reader.dispose(); iis.close()
+          y += 1
         }
+        FrameHash(m.media_id, n, f, dh)
       }
     }
-  }
 
   /** Perceptual hashes of a raster: (media_id, dhash, ahash). */
   final case class PHash(media_id: Long, dhash: Long, ahash: Long)
@@ -654,52 +600,43 @@ object MultimodalOps {
     * bytes never reach the driver. At 100 TB this is the cheap map
     * pass whose output (16 bytes/image) is what the dedup join
     * actually shuffles. */
-  def perceptualHash(media: DataFrame): Dataset[PHash] = {
-    val spark: SparkSession = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.map { m =>
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(m.payload))
-        require(img != null,
-          s"media ${m.media_id}: payload is not a decodable image")
-        val raster = img.getRaster
-        val w = img.getWidth; val h = img.getHeight
-        val p = Array.ofDim[Int](PhSampleH, PhSampleW)
-        var y = 0
-        while (y < PhSampleH) {
-          var x = 0
-          while (x < PhSampleW) {
-            p(y)(x) = raster.getSample(x * w / PhSampleW, y * h / PhSampleH, 0)
-            x += 1
-          }
-          y += 1
+  def perceptualHash(media: DataFrame): Dataset[PHash] =
+    mapMedia(media) { m =>
+      val img = readPng(m)
+      val raster = img.getRaster
+      val w = img.getWidth; val h = img.getHeight
+      val p = Array.ofDim[Int](PhSampleH, PhSampleW)
+      var y = 0
+      while (y < PhSampleH) {
+        var x = 0
+        while (x < PhSampleW) {
+          p(y)(x) = raster.getSample(x * w / PhSampleW, y * h / PhSampleH, 0)
+          x += 1
         }
-        var dh = 0L; var ah = 0L; var s = 0L
-        y = 0
-        while (y < PhSampleH) {
-          var x = 0
-          while (x < PhSampleW - 1) {
-            if (p(y)(x + 1) > p(y)(x)) dh |= 1L << (y * 8 + x)
-            s += p(y)(x)
-            x += 1
-          }
-          y += 1
-        }
-        y = 0
-        while (y < PhSampleH) {
-          var x = 0
-          while (x < PhSampleW - 1) {
-            if (56L * p(y)(x) > s) ah |= 1L << (y * 8 + x)
-            x += 1
-          }
-          y += 1
-        }
-        PHash(m.media_id, dh, ah)
+        y += 1
       }
+      var dh = 0L; var ah = 0L; var s = 0L
+      y = 0
+      while (y < PhSampleH) {
+        var x = 0
+        while (x < PhSampleW - 1) {
+          if (p(y)(x + 1) > p(y)(x)) dh |= 1L << (y * 8 + x)
+          s += p(y)(x)
+          x += 1
+        }
+        y += 1
+      }
+      y = 0
+      while (y < PhSampleH) {
+        var x = 0
+        while (x < PhSampleW - 1) {
+          if (56L * p(y)(x) > s) ah |= 1L << (y * 8 + x)
+          x += 1
+        }
+        y += 1
+      }
+      Iterator.single(PHash(m.media_id, dh, ah))
     }
-  }
 
   // ---- audio near-dup fingerprinting (the Haitsma–Kalman family's
   // frame-energy-delta signs), completing the dedup modality matrix:
@@ -725,11 +662,17 @@ object MultimodalOps {
   private[graft] val AfGroupSize = 5L
   private[graft] val AfFrames = 57
   private[graft] val AfFrameW = 32
-  private[graft] def afMagRaw(id: Long, f: Int): Long = {
+  private[graft] def afMagRaw(id: Long, f: Int): Long =
+    afPerturbed(id, f, (f + id) % 61 == 0)
+
+  /** The near-dup audio laws' shared magnitude: the group's energy
+    * profile, plus 1365 (mod 2048) on a non-leader member where `hit`
+    * holds. */
+  private def afPerturbed(id: Long, f: Int, hit: Boolean): Long = {
     val g = id / AfGroupSize
     val base = (f.toLong * (31 + g % 1009) + f.toLong * f * (17 + g % 1013) +
       f.toLong * f * f * (23 + g % 1019) + g * 101) % 2048
-    if (id % AfGroupSize != 0 && (f + id) % 61 == 0) (base + 1365) % 2048
+    if (id % AfGroupSize != 0 && hit) (base + 1365) % 2048
     else base
   }
 
@@ -743,13 +686,8 @@ object MultimodalOps {
     * 2²⁸ instead of 2¹⁴, so random band-value collisions among distinct
     * fingerprints (the 4×14/≤3 screen's ×100 candidate mass, 50.1M at
     * 500k docs — BASELINE.md round 11) collapse by ~2¹⁴ per band. */
-  private[graft] def afMagRawR1(id: Long, f: Int): Long = {
-    val g = id / AfGroupSize
-    val base = (f.toLong * (31 + g % 1009) + f.toLong * f * (17 + g % 1013) +
-      f.toLong * f * f * (23 + g % 1019) + g * 101) % 2048
-    if (id % AfGroupSize != 0 && f == AfFrames - 1) (base + 1365) % 2048
-    else base
-  }
+  private[graft] def afMagRawR1(id: Long, f: Int): Long =
+    afPerturbed(id, f, f == AfFrames - 1)
 
   /** Documents → near-dup WAV media: one REAL 16-bit mono PCM clip per
     * doc rendered from [[afMagRaw]] (or, with `r1 = true`, the radius-1
@@ -757,25 +695,13 @@ object MultimodalOps {
     * executors (the [[encodeWavMedia]] distributed-encode discipline on
     * the near-dup law). */
   def encodeNearDupWavMedia(docs: DataFrame, r1: Boolean = false): DataFrame = {
-    val spark: SparkSession = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
-      ids.map { id =>
-        val n = AfFrames * AfFrameW
-        val pcm = new Array[Byte](2 * n)
-        var i = 0
-        while (i < n) {
-          val raw = if (r1) afMagRawR1(id, i / AfFrameW)
-                    else afMagRaw(id, i / AfFrameW)
-          val mag = (raw - 1024).toInt
-          val s = if (i % 2 == 0) mag else -mag
-          pcm(2 * i) = (s & 0xff).toByte
-          pcm(2 * i + 1) = ((s >> 8) & 0xff).toByte
-          i += 1
-        }
-        (id, "audio/wav", wavBytes(pcm, AudRate))
-      }
-    }.toDF("media_id", "media_type", "payload")
+    val mag: (Long, Int) => Long = if (r1) afMagRawR1 else afMagRaw
+    renderMedia(docs, "audio/wav", () => ()) { (_, id) =>
+      wavBytes(pcm16(AfFrames * AfFrameW, { i =>
+        val m = (mag(id, i / AfFrameW) - 1024).toInt
+        if (i % 2 == 0) m else -m
+      }), AudRate)
+    }
   }
 
   final case class AudioFp(media_id: Long, fp: Long)
@@ -789,33 +715,25 @@ object MultimodalOps {
     * decode→frame→delta chain in closed form). 56 bits = the image
     * dHash width, so [[graft.ops.DedupOps.simhashHammingPairsFromSigs]]
     * serves the pair screen verbatim. Narrow per-row work, no shuffle. */
-  def audioFingerprint(media: DataFrame): Dataset[AudioFp] = {
-    val spark: SparkSession = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.map { m =>
-        val (bytes, _) = wavPcm(m.payload)
-        val n = bytes.length / 2
-        val nf = n / AfFrameW
-        val e = new Array[Long](nf)
-        // only whole frames contribute (a clip shorter than one frame
-        // fingerprints as 0 — the trailing partial frame carries no
-        // energy-delta bit either way)
-        var i = 0
-        while (i < nf * AfFrameW) {
-          val s = ((bytes(2 * i) & 0xff) | (bytes(2 * i + 1) << 8))
-            .toShort.toInt
-          e(i / AfFrameW) += math.abs(s)
-          i += 1
-        }
-        var fp = 0L
-        var f = 0
-        while (f < nf - 1 && f < 56) {
-          if (e(f + 1) > e(f)) fp |= 1L << f
-          f += 1
-        }
-        AudioFp(m.media_id, fp)
+  def audioFingerprint(media: DataFrame): Dataset[AudioFp] =
+    mapMedia(media) { m =>
+      val (pcm, _) = wavPcm(m.payload)
+      val nf = pcm.length / 2 / AfFrameW
+      val e = new Array[Long](nf)
+      // only whole frames contribute (a clip shorter than one frame
+      // fingerprints as 0 — the trailing partial frame carries no
+      // energy-delta bit either way)
+      var i = 0
+      while (i < nf * AfFrameW) {
+        e(i / AfFrameW) += math.abs(pcmSample(pcm, i))
+        i += 1
       }
+      var fp = 0L
+      var f = 0
+      while (f < nf - 1 && f < 56) {
+        if (e(f + 1) > e(f)) fp |= 1L << f
+        f += 1
+      }
+      Iterator.single(AudioFp(m.media_id, fp))
     }
-  }
 }

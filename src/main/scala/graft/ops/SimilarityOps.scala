@@ -1165,16 +1165,6 @@ object SimilarityOps {
             sqrt(nullif(col("variance"), lit(0d))), 6)).as("z"))
   }
 
-  /** Upper-triangular covariance of the first `d` embedding dimensions —
-    * the distributed pass behind PCA whitening / decorrelation of an
-    * embedding table. One narrow projection explodes each row into its
-    * d(d+1)/2 (i, j, xi, xj) pairs, pipelined straight into a partial
-    * hash-aggregate (explode → hashagg in one stage: the shuffle carries
-    * only d(d+1)/2 groups per partition, never the n·d² pair stream), so
-    * the pass is one corpus scan regardless of n. Sums run in exact
-    * decimals (Determinism.exactSum) so partial-agg order can't skew the
-    * float totals; the final cov arithmetic is on identical doubles in
-    * both engines. Population covariance: (E[xy] − E[x]E[y]). */
   /** Project embeddings onto a fitted PCA basis (PcaOps.fit), centered
     * on the exact-decimal corpus dimension means. The apply side of
     * covariance → fit: (means, basis) are one broadcast row + k·d plan
@@ -1253,6 +1243,16 @@ object SimilarityOps {
     embeddings.select(col("vec_id") +: projs: _*)
   }
 
+  /** Upper-triangular covariance of the first `d` embedding dimensions —
+    * the distributed pass behind PCA whitening / decorrelation of an
+    * embedding table. One narrow projection explodes each row into its
+    * d(d+1)/2 (i, j, xi, xj) pairs, pipelined straight into a partial
+    * hash-aggregate (explode → hashagg in one stage: the shuffle carries
+    * only d(d+1)/2 groups per partition, never the n·d² pair stream), so
+    * the pass is one corpus scan regardless of n. Sums run in exact
+    * decimals (Determinism.exactSum) so partial-agg order can't skew the
+    * float totals; the final cov arithmetic is on identical doubles in
+    * both engines. Population covariance: (E[xy] − E[x]E[y]). */
   def covariancePairs(embeddings: DataFrame, d: Int): DataFrame = {
     val pairs = embeddings
       .select(explode(expr(

@@ -83,14 +83,22 @@ object TickOps {
   def dailyOhlc(ticks: DataFrame, symbol: String = "symbol",
                 ts: String = "event_ts", price: String = "price",
                 qty: String = "qty", id: String = "event_id"): DataFrame = {
-    val key = tieKeyOrTs(ticks, ts, id)
+    val aggs = barAggs(ticks, ts, price, id)
     ticks.groupBy(to_date(col(ts)).as("trade_date"), col(symbol))
-      .agg(
-        min_by(col(price), key).as("open"),
-        max(col(price)).as("high"),
-        min(col(price)).as("low"),
-        max_by(col(price), key).as("close"),
-        count(lit(1)).as("n_ticks"))
+      .agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** The OHLC bar aggregate every bar shape shares: open/close by
+    * min_by/max_by on [[tieKeyOrTs]], high/low, and the tick count. */
+  private def barAggs(ticks: DataFrame, ts: String, price: String,
+                      id: String): Seq[Column] = {
+    val key = tieKeyOrTs(ticks, ts, id)
+    Seq(
+      min_by(col(price), key).as("open"),
+      max(col(price)).as("high"),
+      min(col(price)).as("low"),
+      max_by(col(price), key).as("close"),
+      count(lit(1)).as("n_ticks"))
   }
 
   /** N-duration OHLC bars (W4/`:326-340` intent): tumbling window +
@@ -99,17 +107,24 @@ object TickOps {
   def ohlcBars(ticks: DataFrame, duration: String,
                symbol: String = "symbol", ts: String = "event_ts",
                price: String = "price", id: String = "event_id"): DataFrame = {
-    val key = tieKeyOrTs(ticks, ts, id)
+    val aggs = barAggs(ticks, ts, price, id)
     ticks.groupBy(window(col(ts), duration).as("w"), col(symbol))
-      .agg(
-        min_by(col(price), key).as("open"),
-        max(col(price)).as("high"),
-        min(col(price)).as("low"),
-        max_by(col(price), key).as("close"),
-        count(lit(1)).as("n_ticks"))
+      .agg(aggs.head, aggs.tail: _*)
       .select(col("w.start").as("bar_start"), col(symbol),
         col("open"), col("high"), col("low"), col("close"), col("n_ticks"))
   }
+
+  /** Bars rolled up to one row per (trade_date, symbol): open from the
+    * earliest bar, close from the latest, high/low pointwise — the
+    * official daily table the reconciliation diffs [[dailyOhlc]]
+    * against. */
+  def dailyFromBars(bars: DataFrame): DataFrame =
+    bars.groupBy(to_date(col("bar_start")).as("trade_date"), col("symbol"))
+      .agg(
+        min_by(col("open"), col("bar_start")).as("open"),
+        max(col("high")).as("high"),
+        min(col("low")).as("low"),
+        max_by(col("close"), col("bar_start")).as("close"))
 
   /** Partial OHLC bar state: [[ohlcBars]]' aggregate plus the first/last
     * tick timestamps the MERGE needs to re-derive open/close across
@@ -119,18 +134,14 @@ object TickOps {
                   symbol: String = "symbol", ts: String = "event_ts",
                   price: String = "price", id: String = "event_id"): DataFrame = {
     val key = tieKeyOrTs(ticks, ts, id)
+    val aggs = barAggs(ticks, ts, price, id) ++ Seq(
+      // the MERGE's tie-break keys: composite (ts, id) extrema, so a
+      // partial split that lands same-timestamp ticks in different
+      // partials still re-derives the same open/close as recompute
+      min(key).as("key_first"),
+      max(key).as("key_last"))
     ticks.groupBy(window(col(ts), duration).as("w"), col(symbol))
-      .agg(
-        min_by(col(price), key).as("open"),
-        max(col(price)).as("high"),
-        min(col(price)).as("low"),
-        max_by(col(price), key).as("close"),
-        count(lit(1)).as("n_ticks"),
-        // the MERGE's tie-break keys: composite (ts, id) extrema, so a
-        // partial split that lands same-timestamp ticks in different
-        // partials still re-derives the same open/close as recompute
-        min(key).as("key_first"),
-        max(key).as("key_last"))
+      .agg(aggs.head, aggs.tail: _*)
       .select(col("w.start").as("bar_start"), col(symbol),
         col("open"), col("high"), col("low"), col("close"),
         col("n_ticks"), col("key_first"), col("key_last"))

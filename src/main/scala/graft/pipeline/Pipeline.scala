@@ -131,11 +131,7 @@ object Pipeline {
         universe, "symbol", warehouse.select("symbol"), "symbol")
       val daily = TickOps.dailyOhlc(warehouse)
       val hourly = TickOps.ohlcBars(warehouse, "1 hour")
-      val official = hourly
-        .groupBy(to_date(col("bar_start")).as("trade_date"), col("symbol"))
-        .agg(min_by(col("open"), col("bar_start")).as("open"),
-          max(col("high")).as("high"), min(col("low")).as("low"),
-          max_by(col("close"), col("bar_start")).as("close"))
+      val official = TickOps.dailyFromBars(hourly)
       val recon = QualityOps.reconcile(daily, official, Seq("trade_date", "symbol"))
       // E2/E3 writes all read the one cached warehouse scan and are
       // mutually independent — overlapped (§2.6); block-level cache locks

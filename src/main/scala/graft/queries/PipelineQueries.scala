@@ -13,15 +13,6 @@ import OracleFrags.toks
   */
 object PipelineQueries {
 
-  /** Per-run scratch dir for streaming sinks/checkpoints: deleted up
-    * front so every invocation reprocesses from a clean slate (append
-    * sinks + checkpoints are run artifacts, not shared fixtures). */
-  /** DuckDB replay of the near-dup image law → 9×7 downscale → dHash +
-    * aHash (MultimodalOps.phPixel/perceptualHash). Sampled raw coords
-    * are (2x, 2y) for sample (x, y) (18×14 render, x·w/9 = 2x kernel);
-    * the perturbation condition collapses to (x + 9y + doc_id) % 29.
-    * 56-bit packing via bit_or of shifted BIGINTs (DuckDB raises on
-    * 1<<63; bit 55 is the ceiling here). */
   /** Per-frame dHash replay of the near-dup VIDEO law — the sequence
     * sibling of [[phashOracleCte]] (MultimodalOps.vdPixel/perFrameDHash):
     * frames are 18×14 = 2× the 9×7 sample grid, so sampled raw coords
@@ -92,6 +83,12 @@ object PipelineQueries {
       |vseq2 AS (SELECT doc_id, nf, list(dhash ORDER BY f) AS sq
       |  FROM vdh2 GROUP BY doc_id, nf)""".stripMargin.replace("\n", " ")
 
+  /** DuckDB replay of the near-dup image law → 9×7 downscale → dHash +
+    * aHash (MultimodalOps.phPixel/perceptualHash). Sampled raw coords
+    * are (2x, 2y) for sample (x, y) (18×14 render, x·w/9 = 2x kernel);
+    * the perturbation condition collapses to (x + 9y + doc_id) % 29.
+    * 56-bit packing via bit_or of shifted BIGINTs (DuckDB raises on
+    * 1<<63; bit 55 is the ceiling here). */
   private val phashOracleCte: String =
     """WITH d AS (SELECT doc_id FROM documents),
       |grid AS (SELECT doc_id, CAST(y.range AS INT) AS y,

@@ -191,14 +191,8 @@ object TickQueries {
       (s, dir) => {
         val daily = TickOps.dailyOhlc(ticks(s, dir))
         val hourly = TickOps.ohlcBars(ticks(s, dir), "1 hour")
-        val official = hourly
-          .groupBy(to_date(col("bar_start")).as("trade_date"), col("symbol"))
-          .agg(
-            min_by(col("open"), col("bar_start")).as("open"),
-            max(col("high")).as("high"),
-            min(col("low")).as("low"),
-            max_by(col("close"), col("bar_start")).as("close"))
-        QualityOps.reconcile(daily, official, Seq("trade_date", "symbol"))
+        QualityOps.reconcile(daily, TickOps.dailyFromBars(hourly),
+          Seq("trade_date", "symbol"))
           .orderBy("trade_date", "symbol")
       },
       s"""WITH hourly AS (${ohlcSql(3600000000L)}),

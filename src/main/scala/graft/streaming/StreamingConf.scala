@@ -55,10 +55,12 @@ private[graft] object StreamingConf {
   /** Run `body` with the session conf `key` set to `value`, then leave
     * the session as it was: the previous value back, or the key unset
     * if it had none (restoring the default explicitly would leave a
-    * setting behind). The same single-session contract as
+    * setting behind). `getAll` holds only the keys that were set;
+    * `getOption` would return a registered conf's default for a key
+    * that never was. The same single-session contract as
     * [[withStatePartitions]]. */
   def withConf[T](spark: SparkSession, key: String, value: String)(body: => T): T = {
-    val prev = spark.conf.getOption(key)
+    val prev = spark.conf.getAll.get(key)
     spark.conf.set(key, value)
     try body
     finally prev match {

@@ -153,12 +153,20 @@ class MultimodalFramesSpec extends AnyFunSuite with SparkTestBase {
 
   test("corrupt payload fails loudly, not silently") {
     import spark.implicits._
-    val junk = Seq((1L, "image/gif", Array[Byte](1, 2, 3)))
+    def junk(mediaType: String) = Seq((1L, mediaType, Array[Byte](1, 2, 3)))
       .toDF("media_id", "media_type", "payload")
-    val ex = intercept[org.apache.spark.SparkException] {
-      MultimodalOps.sampleVideoFrames(junk, 1).collect()
+    val gif = junk("image/gif")
+    val png = junk("image/png")
+    val decoders: Seq[(String, () => Any)] = Seq(
+      "sampleVideoFrames" -> (() => MultimodalOps.sampleVideoFrames(gif, 1).collect()),
+      "perFrameDHash" -> (() => MultimodalOps.perFrameDHash(gif).collect()),
+      "decodeImage" -> (() => MultimodalOps.decodeImage(png).collect()),
+      "perceptualHash" -> (() => MultimodalOps.perceptualHash(png).collect()),
+      "resizePngMedia" -> (() => MultimodalOps.resizePngMedia(png, 2).collect()))
+    decoders.foreach { case (name, decode) =>
+      val ex = intercept[org.apache.spark.SparkException](decode())
+      assert(ex.getMessage != null, name)
     }
-    assert(ex.getMessage != null)
   }
 
   test("video sequence banding finds exactly the brute-force pair set") {

@@ -62,6 +62,14 @@ class StateSizingSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("withConf unsets a key the session never set") {
+    val k = "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark.conf.unset(k)
+    StreamingConf.withConf(spark, k, "false")(())
+    assert(!spark.conf.getAll.contains(k),
+      s"withConf left $k = ${spark.conf.getAll.get(k)} behind")
+  }
+
   test("a restart on a checkpoint written with 8 stores keeps 8 and stays exactly-once") {
     val tmp = System.getProperty("java.io.tmpdir")
     val staged = s"$tmp/graft_sizing_src/events.parquet"
